@@ -37,14 +37,14 @@ import time
 import traceback
 import uuid
 from collections.abc import Callable
-from concurrent.futures import Future, ThreadPoolExecutor
-from concurrent.futures import TimeoutError as FutureTimeout
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redisgears_spark.functions.types import reply_shape
 from redisgears_spark.sources.keyspace import PRIMARY_KEYS, TABLES, load_table
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9_]+$")
@@ -118,6 +118,20 @@ class Background:
 
     def __init__(self, fn: Callable[["GearsClient"], Any]):
         self.fn = fn
+
+
+def _reply(result: Any, client: "GearsClient") -> Any:
+    """A body's value as the caller gets it: a ``Background`` resolves
+    inline (lib.rs:1363-1366 only rejects it when blocking is not
+    allowed), and a non-DataFrame reply obeys the JS→RESP conversion
+    rules (v8_function_ctx.rs:58-141)."""
+    if isinstance(result, Background):
+        result = result.fn(client)
+    return result if isinstance(result, DataFrame) else reply_shape(result)
+
+
+class _Deadline(Exception):
+    """Raised by GearsEngine._run_tagged when a job outlives its timeout."""
 
 
 NO_PERMISSIONS_MSG = "No permissions to access a key"
@@ -619,26 +633,23 @@ class GearsEngine:
                 raise GearsError(
                     f"library '{name}' already exists, use replace=True"
                 )
+            # revert: any failure below raises before the swap, so the old
+            # library remains untouched
             lib = Library(name, api_version, config)
-            try:
-                setup(lib)
-                if not (
-                    lib.functions
-                    or lib.stream_triggers
-                    or lib.keyspace_triggers
-                    or lib.cluster_functions
-                ):
-                    # reference: 'No function nor registrations was
-                    # registered' (pytests/test_errors.py testNoRegistrations)
-                    raise GearsError(
-                        f"library '{name}' registered no functions nor "
-                        "triggers"
-                    )
-                if old is not None:
-                    self._check_upgrade(old, lib)
-            except Exception:
-                # revert: old library remains untouched
-                raise
+            setup(lib)
+            if not (
+                lib.functions
+                or lib.stream_triggers
+                or lib.keyspace_triggers
+                or lib.cluster_functions
+            ):
+                # reference: 'No function nor registrations was
+                # registered' (pytests/test_errors.py testNoRegistrations)
+                raise GearsError(
+                    f"library '{name}' registered no functions nor triggers"
+                )
+            if old is not None:
+                self._check_upgrade(old, lib)
             lib._setup_ref = _setup_ref(setup)
             lib._setup = setup  # retained for the WITHCODE listing
             # the loading user OWNS the library: its triggers act as this
@@ -778,14 +789,24 @@ class GearsEngine:
 
     # -- TFCALL --------------------------------------------------------------
 
-    def _resolve(self, lib_name: str, fn_name: str) -> tuple[Library, RegisteredFunction]:
+    def _resolve(
+        self, lib_name: str, fn_name: str, cluster: bool = False
+    ) -> tuple[Library, Any]:
+        """Look up a library's function — its cluster function when
+        `cluster` — under the registry lock."""
         with self._lock:
             lib = self._libraries.get(lib_name)
             if lib is None:
                 raise GearsError(f"unknown library '{lib_name}'")
-            fn = lib.functions.get(fn_name)
+            fn = (lib.cluster_functions if cluster else lib.functions).get(
+                fn_name
+            )
             if fn is None:
-                raise GearsError(f"unknown function '{lib_name}.{fn_name}'")
+                raise GearsError(
+                    f"unknown cluster function '{fn_name}'"
+                    if cluster
+                    else f"unknown function '{lib_name}.{fn_name}'"
+                )
             return lib, fn
 
     def _admit(self, rf: RegisteredFunction) -> None:
@@ -801,14 +822,61 @@ class GearsEngine:
                 "is not flagged NO_WRITES"
             )
 
+    def _record(
+        self, rf: RegisteredFunction, started: float, error: str | None
+    ) -> None:
+        """Settle one call in its function's stats, the only writer of
+        FunctionStats. `_invoke` calls it once per call, on the thread that
+        hands the outcome to the caller; the lock keeps every listing at
+        n_success + n_failed == n_calls."""
+        with self._lock:
+            stats = rf.stats
+            stats.n_calls += 1
+            stats.total_duration_s += time.perf_counter() - started
+            if error is None:
+                stats.n_success += 1
+            else:
+                stats.n_failed += 1
+                stats.last_error = error
+
+    def _run_tagged(self, job: Callable[[], Any], timeout: float | None) -> Any:
+        """Run ``job()`` on the pool under a fresh SparkContext job tag.
+        Past `timeout` seconds a still-queued `job` is dropped, the tag's
+        active Spark jobs are cancelled and `_Deadline` is raised. Python
+        code cannot be interrupted: a started `job` runs on until it
+        returns, and a Spark job it starts after the deadline runs."""
+        sc = self.spark.sparkContext
+        tag = f"rg-{uuid.uuid4().hex}"
+
+        def tagged() -> Any:
+            sc.addJobTag(tag)
+            try:
+                return job()
+            finally:
+                sc.removeJobTag(tag)
+
+        fut = self._pool.submit(tagged)
+        if not wait([fut], timeout=timeout).done:
+            fut.cancel()
+            sc.cancelJobsWithTag(tag)
+            raise _Deadline
+        return fut.result()
+
     def _invoke(
         self,
         lib: Library,
         rf: RegisteredFunction,
         args: tuple,
+        user: str,
+        timeout: float | None = None,
         allow_background: bool = False,
-        acting_user: str | None = None,
     ) -> Any:
+        """The one call path: admit, decode, run the body (under
+        `_run_tagged` when `timeout` is set), shape the reply and settle
+        the stats once. With `allow_background` a ``Background`` reply
+        becomes the Future of its continuation, which settles the call.
+        `user` is captured when the call is issued: by the time a pool
+        worker runs this, the session may have re-authed."""
         self._admit(rf)
         # RAW_ARGUMENTS: pass bytes through untouched; default decodes
         # bytes→str erroring on invalid utf-8 (v8_function_ctx.rs:253-267)
@@ -825,43 +893,46 @@ class GearsEngine:
                 decoded.append(a)
             args = tuple(decoded)
         # the acting user is the CALLER (the reference authenticates
-        # in-function redis calls as the user issuing TFCALL/TFCALLASYNC).
-        # Async paths pass acting_user captured at SUBMISSION time — by the
-        # time a pool worker runs this, the session may have re-authed.
-        client = GearsClient(
-            self,
-            read_only=NO_WRITES in rf.flags,
-            user=self._current_user if acting_user is None else acting_user,
-        )
+        # in-function redis calls as the user issuing TFCALL/TFCALLASYNC)
+        client = GearsClient(self, read_only=NO_WRITES in rf.flags, user=user)
         started = time.perf_counter()
-        rf.stats.n_calls += 1
-        try:
-            result = rf.fn(client, *args)
-            if isinstance(result, Background):
-                if allow_background:
-                    # executeAsync handoff: the continuation's value is
-                    # shaped — and its success/failure counted — when it
-                    # completes (engine.execute_async), not here
-                    return result
-                # call/call_async: resolve the promise inline, like the
-                # reference's TFCALL when blocking is allowed
-                # (lib.rs:1363-1366 only rejects when it is not)
-                result = result.fn(client)
-            if not isinstance(result, DataFrame):
-                # reply sink: enforce the JS→RESP conversion rules
-                # (v8_function_ctx.rs:58-141 — nesting cap, map-key types,
-                # set ordering) on scalar/collection replies
-                from redisgears_spark.functions.types import reply_shape
 
-                result = reply_shape(result)
-            rf.stats.n_success += 1
+        def body() -> Any:
+            result = rf.fn(client, *args)
+            if allow_background and isinstance(result, Background):
+                return result  # executeAsync handoff, settled by settle()
+            return _reply(result, client)
+
+        def settle(run: Callable[[], Any]) -> Any:
+            try:
+                result = run()
+            except _Deadline:
+                # fatal policy (config.rs:105-117): Abort cancelled the
+                # call's Spark jobs; Kill also unloads the library
+                killed = ""
+                if self.fatal_failure_policy == "kill":
+                    with self._lock:
+                        self._libraries.pop(lib.name, None)
+                    self._stop_library_triggers(lib.name)
+                    killed = "; library unloaded (fatal policy: kill)"
+                self._record(
+                    rf, started, f"timeout after {timeout}s (aborted){killed}"
+                )
+                raise GearsError(
+                    f"'{lib.name}.{rf.name}' exceeded {timeout}s and was "
+                    f"aborted{killed}"
+                ) from None
+            except Exception as e:
+                self._record(rf, started, f"{type(e).__name__}: {e}")
+                raise
+            if isinstance(result, Background):
+                return self._pool.submit(settle, lambda: _reply(result, client))
+            self._record(rf, started, None)
             return result
-        except Exception as e:
-            rf.stats.n_failed += 1
-            rf.stats.last_error = f"{type(e).__name__}: {e}"
-            raise
-        finally:
-            rf.stats.total_duration_s += time.perf_counter() - started
+
+        if timeout is None:
+            return settle(body)
+        return settle(lambda: self._run_tagged(body, timeout))
 
     def call(
         self, lib_name: str, fn_name: str, *args: Any, timeout: float | None = None
@@ -871,9 +942,12 @@ class GearsEngine:
         not allowed — lib.rs:1363-1366).
 
         `timeout` is the analog of the reference's lock-timeout watchdog
-        (v8_backend.rs:567-613, default policy Abort): the call runs under a
-        Spark job tag; on expiry its in-flight jobs are cancelled and the
-        call raises. Bounded worst-case blocking, same contract."""
+        (v8_backend.rs:567-613, default policy Abort): the body runs on the
+        engine's pool under a SparkContext job tag; at the deadline the
+        call raises, its in-flight Spark jobs are cancelled, and the call
+        counts once, as failed, whatever the body does afterwards. A body
+        busy in Python code runs on until it returns — only its Spark work
+        can be cancelled. Bounded worst-case blocking, same contract."""
         # acting user captured at ENTRY (same submission-time capture the
         # async paths use): a concurrent auth() on another thread must not
         # silently re-identify a sync call already past its entry point
@@ -885,53 +959,7 @@ class GearsEngine:
             raise GearsError(
                 f"'{lib_name}.{fn_name}' is async — invoke via call_async"
             )
-        if timeout is None:
-            return self._invoke(lib, rf, args, acting_user=user)
-        return self._invoke_with_timeout(
-            lib, rf, args, timeout, acting_user=user
-        )
-
-    def _invoke_with_timeout(
-        self,
-        lib: Library,
-        rf: RegisteredFunction,
-        args: tuple,
-        timeout: float,
-        acting_user: str | None = None,
-    ) -> Any:
-        tag = f"rg-call-{uuid.uuid4().hex}"
-        # caller's identity, captured at submission
-        user = self._current_user if acting_user is None else acting_user
-
-        def run():
-            self.spark.addTag(tag)
-            try:
-                return self._invoke(lib, rf, args, acting_user=user)
-            finally:
-                self.spark.removeTag(tag)
-
-        fut = self._pool.submit(run)
-        try:
-            return fut.result(timeout=timeout)
-        except FutureTimeout:
-            # fatal policy (config.rs:105-117): Abort always cancels the
-            # call's Spark jobs; Kill additionally unloads the library
-            try:
-                self.spark.interruptTag(tag)
-            except Exception:
-                pass
-            rf.stats.n_failed += 1
-            killed = ""
-            if self.fatal_failure_policy == "kill":
-                with self._lock:
-                    self._libraries.pop(lib.name, None)
-                self._stop_library_triggers(lib.name)
-                killed = "; library unloaded (fatal policy: kill)"
-            rf.stats.last_error = f"timeout after {timeout}s (aborted){killed}"
-            raise GearsError(
-                f"'{lib.name}.{rf.name}' exceeded {timeout}s and was "
-                f"aborted{killed}"
-            ) from None
+        return self._invoke(lib, rf, args, user, timeout=timeout)
 
     def call_async(self, lib_name: str, fn_name: str, *args: Any) -> Future:
         """Background invocation (TFCALLASYNC): submitted to the engine's
@@ -939,7 +967,7 @@ class GearsEngine:
         scheduler. Returns a Future."""
         lib, rf = self._resolve(lib_name, fn_name)
         return self._pool.submit(
-            self._invoke, lib, rf, args, acting_user=self._current_user
+            self._invoke, lib, rf, args, self._current_user
         )
 
     def execute_async(self, lib_name: str, fn_name: str, *args: Any) -> Future:
@@ -954,36 +982,10 @@ class GearsEngine:
         lib, rf = self._resolve(lib_name, fn_name)
         if rf.is_async:
             # async-registered functions never had a sync fast path
-            return self._pool.submit(
-                self._invoke, lib, rf, args, acting_user=user
-            )
-        # sync portion, caller thread; Background resolves below
-        result = self._invoke(
-            lib, rf, args, allow_background=True, acting_user=user
-        )
-        if isinstance(result, Background):
-            client = GearsClient(
-                self, read_only=NO_WRITES in rf.flags, user=user
-            )
-
-            def continuation():
-                started = time.perf_counter()
-                try:
-                    out = result.fn(client)
-                    if not isinstance(out, DataFrame):
-                        from redisgears_spark.functions.types import reply_shape
-
-                        out = reply_shape(out)
-                    rf.stats.n_success += 1
-                    return out
-                except Exception as e:
-                    rf.stats.n_failed += 1
-                    rf.stats.last_error = f"{type(e).__name__}: {e}"
-                    raise
-                finally:
-                    rf.stats.total_duration_s += time.perf_counter() - started
-
-            return self._pool.submit(continuation)
+            return self._pool.submit(self._invoke, lib, rf, args, user)
+        result = self._invoke(lib, rf, args, user, allow_background=True)
+        if isinstance(result, Future):  # continuation handed to the pool
+            return result
         fut: Future = Future()
         fut.set_result(result)
         return fut
@@ -1070,13 +1072,7 @@ class GearsEngine:
         shards and gathers [results, errors] — background_run_ctx.rs:207-231).
         Per-partition errors are gathered, not raised, matching reference
         semantics (test_cluster.py:127-156)."""
-        with self._lock:
-            lib = self._libraries.get(lib_name)
-            if lib is None:
-                raise GearsError(f"unknown library '{lib_name}'")
-            fn = lib.cluster_functions.get(fn_name)
-            if fn is None:
-                raise GearsError(f"unknown cluster function '{fn_name}'")
+        _, fn = self._resolve(lib_name, fn_name, cluster=True)
 
         # args must be JSON-serializable (reference serialization contract,
         # v8_native_functions.rs:236-255: JSON or raw binary only)
@@ -1120,13 +1116,7 @@ class GearsEngine:
         appropriate for an in-memory hash-slot hop; a Spark job that reads
         parquet cold needs more, hence 30 s here. Pass ``timeout=0.5`` for
         reference-identical behavior."""
-        with self._lock:
-            lib = self._libraries.get(lib_name)
-            if lib is None:
-                raise GearsError(f"unknown library '{lib_name}'")
-            fn = lib.cluster_functions.get(fn_name)
-            if fn is None:
-                raise GearsError(f"unknown cluster function '{fn_name}'")
+        _, fn = self._resolve(lib_name, fn_name, cluster=True)
         if table not in PRIMARY_KEYS:
             raise GearsError(f"table '{table}' has no primary key mapping")
         # keyed dispatch authenticates the calling user against the target
@@ -1151,23 +1141,12 @@ class GearsEngine:
                     [_json.dumps({"error": f"{type(e).__name__}: {e}"})]
                 )
 
-        tag = f"rg-key-{uuid.uuid4().hex}"
-
-        def job():
-            self.spark.addTag(tag)
-            try:
-                return pruned.rdd.mapPartitions(run_partition).collect()
-            finally:
-                self.spark.removeTag(tag)
-
-        fut = self._pool.submit(job)
         try:
-            results = fut.result(timeout=timeout)
-        except FutureTimeout:
-            try:
-                self.spark.interruptTag(tag)
-            except Exception:
-                pass
+            results = self._run_tagged(
+                lambda: pruned.rdd.mapPartitions(run_partition).collect(),
+                timeout,
+            )
+        except _Deadline:
             raise GearsError(
                 f"remote task '{lib_name}.{fn_name}' timed out after {timeout}s"
             ) from None

@@ -220,12 +220,7 @@ class StatefulStatsRuntime:
         return total
 
     def _state_partitions(self) -> int:
-        per_task = int(
-            os.environ.get(
-                "SPARK_GRAFT_STATE_TASK_BYTES", self._STATE_TASK_INPUT_BYTES
-            )
-        )
-        want = -(-self._spool_bytes() // max(1, per_task))  # ceil div
+        want = -(-self._spool_bytes() // self._STATE_TASK_INPUT_BYTES)  # ceil div
         cap = self.spark.sparkContext.defaultParallelism
         if self._state_key_cap is not None:
             cap = min(cap, self._state_key_cap)

@@ -90,10 +90,6 @@ _RESULT_SCHEMA = (
 # fast path — the reference's default window is small, but most Spark
 # consumers want micro-batch-sized admission)
 
-# opt-in per-batch phase timings on stderr (perf-round instrumentation;
-# zero cost when the env var is unset)
-_PROFILE_BATCHES = bool(os.environ.get("RG_TRIGGER_PROFILE"))
-
 
 def events_to_stream(df: DataFrame) -> DataFrame:
     """Adapt the fixture `events` table to the canonical stream shape:
@@ -714,22 +710,6 @@ class StreamTriggerRuntime:
         def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
             from pyspark.sql.window import Window as W
 
-            if _PROFILE_BATCHES:
-                import sys as _sys
-                import time as _t
-
-                _ph: list[tuple[str, float]] = []
-                _last = _t.perf_counter()
-
-                def _mark(label: str) -> None:
-                    nonlocal _last
-                    now = _t.perf_counter()
-                    _ph.append((label, now - _last))
-                    _last = now
-            else:
-                def _mark(label: str) -> None:
-                    pass
-
             if declarative and self.engine.acl_read_regex(owner) is not None:
                 # re-resolved EVERY epoch, mirroring the per-batch owner
                 # resolution the callback path does in make_processor: a
@@ -760,7 +740,6 @@ class StreamTriggerRuntime:
             # prefix filter — predicate-pushdown-friendly, the consumer
             # match of keys_notifications.rs:199-203
             matched = batch_df.filter(prefix_pred)
-            _mark("entry_filter")
             from pyspark.sql import Observation
 
             obs_gate: Observation | None = None
@@ -800,11 +779,9 @@ class StreamTriggerRuntime:
                 # defaultParallelism — huge backfill batches still get
                 # full parallelism
                 nparts = self._python_stage_partitions(ckpt_dir, epoch_id)
-                _mark("size_partitions")
                 admitted = matched.repartition(
                     nparts, "stream_key"
                 ).sortWithinPartitions("stream_key", "id")
-                _mark("build_plan")
             else:
                 # declarative trigger: a stateless Catalyst row expression
                 # needs no per-key ordering — no shuffle at all
@@ -909,7 +886,6 @@ class StreamTriggerRuntime:
                 meta = admitted.mapInPandas(
                     make_processor(), _RESULT_SCHEMA
                 ).collect()
-                _mark("job_collect")
                 n_ok = n_err = 0
                 an_error = None
                 oldest_us = None
@@ -928,7 +904,6 @@ class StreamTriggerRuntime:
                             )
                     else:  # frontier
                         frontiers.append((r["stream_key"], r["id"]))
-                _mark("meta_parse")
             n_deferred = int(obs_gate.get["deferred"]) if obs_gate else 0
             if n_deferred:
                 # overflow is exceptional — recompute the gate (fn never ran
@@ -961,13 +936,6 @@ class StreamTriggerRuntime:
                 for key, fid in frontiers:
                     cur = stats.frontier.get(key, -1)
                     stats.frontier[key] = max(cur, fid)
-            if _PROFILE_BATCHES:
-                _mark("stats_update")
-                print(
-                    f"[rg-profile] {qkey} epoch={epoch_id} "
-                    + " ".join(f"{k}={v:.3f}" for k, v in _ph),
-                    file=_sys.stderr,
-                )
 
         # the respool source only exists for bounded windows — the overflow
         # re-spool is the only writer, so an unbounded trigger would poll a

@@ -21,8 +21,7 @@ preamble O(len(sys.path)) instead of O(total zip entries).
 Known (accepted) semantic narrowing: re-shipping a DIFFERENT archive under
 an ALREADY-KNOWN path mid-session no longer invalidates zipimporter caches.
 Directory-based imports are unaffected (FileFinder auto-invalidates via
-directory mtime). This engine never re-ships archives; set
-RG_NO_WORKER_PATCH=1 to disable the patch entirely.
+directory mtime). This engine never re-ships archives.
 
 `ensure()` is called at the top of every Arrow kernel this engine ships
 (trigger processors, stateful reducers, similarity/multimodal/BPE kernels).
@@ -34,7 +33,6 @@ harmless: the driver never runs `setup_spark_files`.
 from __future__ import annotations
 
 import importlib
-import os
 import sys
 
 _done = False
@@ -64,8 +62,6 @@ def ensure() -> None:
     if _done:
         return
     _done = True
-    if os.environ.get("RG_NO_WORKER_PATCH"):
-        return
     try:
         import pyspark.worker_util as wu
 

@@ -169,6 +169,106 @@ class TestTimeouts:
         )
         assert engine.call("t2lib", "fast", timeout=30) == 7
 
+    @staticmethod
+    def _assert_job_cancelled(spark, launch):
+        """`launch()` must raise GearsError at its deadline, and the Spark
+        job it had running then must end within 5 s of the raise: no longer
+        active, and not SUCCEEDED."""
+        import threading
+        import time as _t
+
+        tracker = spark.sparkContext.statusTracker()
+
+        def running() -> set:
+            # only jobs outside a job group: streaming queries run in groups
+            return set(tracker.getActiveJobsIds()) & set(
+                tracker.getJobIdsForGroup()
+            )
+
+        raised = []
+
+        def target():
+            try:
+                launch()
+            except GearsError as e:
+                raised.append(e)
+
+        th = threading.Thread(target=target, daemon=True)
+        th.start()
+        seen: set = set()
+        t0 = _t.monotonic()
+        while th.is_alive() and _t.monotonic() - t0 < 60:
+            seen = running() or seen  # the last jobs seen before the raise
+            th.join(0.02)
+        assert raised, "the call did not raise at its deadline"
+        assert seen, "no Spark job was seen running before the deadline"
+        t_raise = _t.monotonic()
+        while running() & seen and _t.monotonic() - t_raise < 5:
+            _t.sleep(0.05)
+        assert not running() & seen, "the job outlived its call by 5 s"
+        statuses = [tracker.getJobInfo(j).status for j in seen]
+        assert "SUCCEEDED" not in statuses, statuses
+
+    def test_call_timeout_cancels_spark_job(self, engine):
+        """The watchdog's Abort stops the call's Spark work, not just the
+        wait: a JVM-only scan (over 20 s uncancelled on 4 cores) is
+        cancelled when call(timeout=1.0) raises."""
+
+        def scan(client, n):
+            return client.spark.range(0, n, 1, 8).selectExpr(
+                "sum(hash(id))"
+            ).collect()
+
+        engine.load_library(
+            lambda l: l.register_function("scan", scan), name="tjob"
+        )
+        engine.call("tjob", "scan", 1000)  # warm: the job starts in 1 s
+        self._assert_job_cancelled(
+            engine.spark,
+            lambda: engine.call("tjob", "scan", 8_000_000_000, timeout=1.0),
+        )
+
+    def test_run_on_key_timeout_cancels_spark_job(self, engine):
+        """A remote task past its timeout is cancelled, like the
+        reference's remote-task timeout (lib.rs:1913)."""
+
+        def slow(rows):
+            import time as _t
+
+            _t.sleep(20)
+            return 1
+
+        def setup(lib):
+            lib.register_cluster_function("fast", lambda rows: 1)
+            lib.register_cluster_function("slow", slow)
+
+        engine.load_library(setup, name="tkey")
+        assert engine.run_on_key("tkey", "fast", "customer", 42) == 1  # warm
+        self._assert_job_cancelled(
+            engine.spark,
+            lambda: engine.run_on_key("tkey", "slow", "customer", 42, timeout=1.0),
+        )
+
+    def test_timed_out_call_counts_once(self, engine):
+        """A body that outlives its timeout and then returns leaves one
+        failed call: the caller saw the timeout, so the late success is
+        not counted (n_success + n_failed == n_calls)."""
+        import time as _t
+
+        def late(client):
+            _t.sleep(1.5)
+            return 1
+
+        engine.load_library(
+            lambda l: l.register_function("late", late), name="tlate"
+        )
+        with pytest.raises(GearsError, match="aborted"):
+            engine.call("tlate", "late", timeout=1.0)
+        engine._pool.shutdown(wait=True)  # the body has returned
+        stats = engine.list_libraries(verbose=2)[0]["functions"][0]["stats"]
+        assert stats["n_calls"] == stats["n_failed"] == 1
+        assert stats["n_success"] == 0
+
     def test_fatal_policy_kill_unloads_library(self, spark, sf_dir):
         """library-fatal-failure-policy=kill (config.rs:105-117): a fatal
         timeout unloads the whole library, not just the call; under the
