@@ -113,6 +113,7 @@ def bench_streaming(
     from redisgears_spark.engine import GearsEngine
     from redisgears_spark.sources.keyspace import load_table
     from redisgears_spark.streaming import StreamTriggerRuntime, events_to_stream
+    from redisgears_spark.streaming.triggers import RAW_EVENTS_SCHEMA
 
     base = tempfile.mkdtemp(prefix="rg-bench-stream-")
     spool = os.path.join(base, "spool")
@@ -123,16 +124,11 @@ def bench_streaming(
         # 8 files → multiple micro-batches under maxFilesPerTrigger=8
         ev.repartition(8).write.mode("overwrite").parquet(spool)
 
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-
         def run_passthrough(it: int) -> float:
             t0 = time.perf_counter()
             q = (
                 events_to_stream(
-                    spark.readStream.schema(raw_schema)
+                    spark.readStream.schema(RAW_EVENTS_SCHEMA)
                     .option(
                         "maxFilesPerTrigger", files_per_trigger or 8
                     )

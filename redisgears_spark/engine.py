@@ -733,14 +733,11 @@ class GearsEngine:
                         }
                         for f in lib.functions.values()
                     ]
-                    entry["stream_triggers"] = [
-                        self._trigger_entry(lib, n, spec, verbose)
-                        for n, spec in lib.stream_triggers.items()
-                    ]
-                    entry["keyspace_triggers"] = [
-                        self._trigger_entry(lib, n, spec, verbose)
-                        for n, spec in lib.keyspace_triggers.items()
-                    ]
+                    for kind in ("stream_triggers", "keyspace_triggers"):
+                        entry[kind] = [
+                            self._trigger_entry(lib, kind, n, spec, verbose)
+                            for n, spec in getattr(lib, kind).items()
+                        ]
                 if verbose >= 2:
                     for fe, f in zip(entry["functions"], lib.functions.values()):
                         fe["stats"] = {
@@ -754,12 +751,13 @@ class GearsEngine:
             return out
 
     def _trigger_entry(
-        self, lib: Library, name: str, spec: dict, verbose: int
+        self, lib: Library, kind: str, name: str, spec: dict, verbose: int
     ) -> dict[str, Any]:
         """One trigger's listing row; at verbose>=2 merges live runtime
         stats (num_trigger/success/failed, last_error, pending — the
         TFUNCTION LIST vvv per-trigger fields,
-        function_list_command.rs:159-300)."""
+        function_list_command.rs:159-300) from a runtime of the trigger's
+        `kind`: a stream trigger and a keyspace trigger may share a name."""
         entry: dict[str, Any] = {
             "name": name,
             "prefix": spec["prefix"],
@@ -772,18 +770,11 @@ class GearsEngine:
         if verbose >= 2:
             qkey = f"{lib.name}.{name}"
             for rt in self._runtimes:
-                st = getattr(rt, "stats", {}).get(qkey)
-                if st is not None:
-                    entry["stats"] = {
-                        "n_batches": st.n_batches,
-                        "n_records": st.n_records,
-                        "n_success": st.n_success,
-                        "n_failed": st.n_failed,
-                        "n_deferred": st.n_deferred,
-                        "last_error": st.last_error,
-                        "n_streams": len(st.frontier),
-                        "max_lag_us": st.max_lag_us,
-                    }
+                if getattr(rt, "trigger_kind", None) != kind:
+                    continue
+                stats = rt.trigger_stats(qkey)
+                if stats is not None:
+                    entry["stats"] = stats
                     break
         return entry
 
@@ -839,12 +830,18 @@ class GearsEngine:
                 stats.n_failed += 1
                 stats.last_error = error
 
+    # how often a timed-out call's job tag is cancelled again while its
+    # body still runs
+    _CANCEL_POLL_S = 0.1
+
     def _run_tagged(self, job: Callable[[], Any], timeout: float | None) -> Any:
         """Run ``job()`` on the pool under a fresh SparkContext job tag.
         Past `timeout` seconds a still-queued `job` is dropped, the tag's
         active Spark jobs are cancelled and `_Deadline` is raised. Python
         code cannot be interrupted: a started `job` runs on until it
-        returns, and a Spark job it starts after the deadline runs."""
+        returns, so a daemon thread keeps cancelling the tag every
+        `_CANCEL_POLL_S` until then, and a Spark job the body starts after
+        the deadline is cancelled within that period."""
         sc = self.spark.sparkContext
         tag = f"rg-{uuid.uuid4().hex}"
 
@@ -855,10 +852,17 @@ class GearsEngine:
             finally:
                 sc.removeJobTag(tag)
 
+        def cancel_until_returned() -> None:
+            while not wait([fut], timeout=self._CANCEL_POLL_S).done:
+                sc.cancelJobsWithTag(tag)
+
         fut = self._pool.submit(tagged)
         if not wait([fut], timeout=timeout).done:
             fut.cancel()
             sc.cancelJobsWithTag(tag)
+            threading.Thread(
+                target=cancel_until_returned, name="rg-deadline", daemon=True
+            ).start()
             raise _Deadline
         return fut.result()
 
@@ -947,7 +951,8 @@ class GearsEngine:
         call raises, its in-flight Spark jobs are cancelled, and the call
         counts once, as failed, whatever the body does afterwards. A body
         busy in Python code runs on until it returns — only its Spark work
-        can be cancelled. Bounded worst-case blocking, same contract."""
+        can be cancelled, including jobs it starts after the deadline.
+        Bounded worst-case blocking, same contract."""
         # acting user captured at ENTRY (same submission-time capture the
         # async paths use): a concurrent auth() on another thread must not
         # silently re-identify a sync call already past its entry point

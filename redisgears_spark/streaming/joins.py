@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from redisgears_spark.engine import GearsEngine
-from redisgears_spark.streaming.triggers import STREAM_SCHEMA
+from redisgears_spark.streaming.triggers import read_spool
 
 
 def stream_interval_join(
@@ -109,24 +109,6 @@ class StreamJoinRuntime:
     def sink_dir(self) -> str:
         return os.path.join(self.work_dir, "join_sink")
 
-    def _source(self) -> DataFrame:
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        if self.source_adapter is not None:
-            raw = (
-                self.spark.readStream.schema(raw_schema)
-                .option("maxFilesPerTrigger", 8)
-                .parquet(self.spool_dir)
-            )
-            return self.source_adapter(raw)
-        return (
-            self.spark.readStream.schema(STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(self.spool_dir)
-        )
-
     def start(
         self,
         *,
@@ -136,8 +118,8 @@ class StreamJoinRuntime:
         watermark: str = "10 seconds",
     ) -> StreamingQuery:
         joined = stream_interval_join(
-            self._source(),
-            self._source(),
+            read_spool(self.spark, self.spool_dir, self.source_adapter),
+            read_spool(self.spark, self.spool_dir, self.source_adapter),
             left_type=left_type,
             right_type=right_type,
             window=window,

@@ -254,23 +254,11 @@ class StatefulStatsRuntime:
         return _pin()
 
     def _source(self) -> DataFrame:
-        from redisgears_spark.streaming.triggers import STREAM_SCHEMA
+        from redisgears_spark.streaming.triggers import read_spool
 
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        if self.source_adapter is not None:
-            raw = (
-                self.spark.readStream.schema(raw_schema)
-                .option("maxFilesPerTrigger", self.files_per_trigger)
-                .parquet(self.spool_dir)
-            )
-            return self.source_adapter(raw)
-        return (
-            self.spark.readStream.schema(STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", self.files_per_trigger)
-            .parquet(self.spool_dir)
+        return read_spool(
+            self.spark, self.spool_dir, self.source_adapter,
+            self.files_per_trigger,
         )
 
     def _start_stateful(

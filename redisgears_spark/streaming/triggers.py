@@ -45,14 +45,17 @@ compiles into the micro-batch job (whole-stage codegen, no per-key sort).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import shutil
 import threading
+import time
 import uuid
 from concurrent import futures
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -80,15 +83,20 @@ STREAM_SCHEMA = (
     "record array<struct<field:string,value:string>>"
 )
 
+# the raw fixture `events` rows a spool holds when a source adapter
+# (events_to_stream) turns them into the canonical shape
+RAW_EVENTS_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint, "
+    "event_type string, value double, props string"
+)
+
 _RESULT_SCHEMA = (
     "stream_key string, id bigint, id_ts timestamp, "
     "status string, result string, error string"
 )
 
-# windows at or above UNBOUNDED_WINDOW are treated as unbounded: the
-# admission gate and respool machinery are skipped entirely (the common
-# fast path — the reference's default window is small, but most Spark
-# consumers want micro-batch-sized admission)
+# what a processor job collects: one JSON counters row per task
+_STATS_SCHEMA = "stats string"
 
 
 def events_to_stream(df: DataFrame) -> DataFrame:
@@ -114,20 +122,27 @@ def events_to_stream(df: DataFrame) -> DataFrame:
     )
 
 
-def _stop_owned(runtime: Any, lib_name: str) -> None:
-    """Stop every query owned by one library AND drop its stats — shared
-    by both runtimes. Dropping the stats matters as much as the stop: a
-    removed consumer must not pin the retention min-frontier (the
-    reference removes the consumer from trim accounting on unload,
-    stream_reader.rs:60-110 trims to the slowest LIVE consumer)."""
-    owned = [k for k in runtime.queries if k.startswith(f"{lib_name}.")]
-    for k in owned:
-        try:
-            runtime.queries.pop(k).stop()
-        except Exception:
-            pass
-    for k in [k for k in runtime.stats if k.startswith(f"{lib_name}.")]:
-        runtime.stats.pop(k, None)
+def read_spool(
+    spark: SparkSession,
+    spool_dir: str,
+    source_adapter: Callable[[DataFrame], DataFrame] | None = None,
+    files_per_trigger: int = 8,
+    streaming: bool = True,
+) -> DataFrame:
+    """A parquet spool in the canonical stream shape: raw `events` rows
+    through `source_adapter` when one is given, canonical rows otherwise.
+    `streaming=True` reads it as a file stream admitting at most
+    `files_per_trigger` files per micro-batch; `streaming=False` is the
+    batch view of the same files."""
+    schema = RAW_EVENTS_SCHEMA if source_adapter is not None else STREAM_SCHEMA
+    if streaming:
+        reader = spark.readStream.schema(schema).option(
+            "maxFilesPerTrigger", files_per_trigger
+        )
+    else:
+        reader = spark.read.schema(schema)
+    df = reader.parquet(spool_dir)
+    return source_adapter(df) if source_adapter is not None else df
 
 
 @dataclass
@@ -193,8 +208,6 @@ def _write_parquet_part(pdf: pd.DataFrame, out_dir: str, schema) -> None:
     Spark's file listing ignores — and renamed into place, so a task
     killed mid-write leaves only an invisible partial file, never a
     truncated parquet in the readable namespace."""
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -205,76 +218,59 @@ def _write_parquet_part(pdf: pd.DataFrame, out_dir: str, schema) -> None:
     os.rename(tmp, os.path.join(out_dir, name))
 
 
-def _make_partition_processor(
-    fn: Callable[[dict], Any],
-    sink_dir: str,
-    err_dir: str,
-    acl_regex: str | None = None,
-) -> Callable[[Any], Any]:
-    """Build the executor-side processor: strictly ordered by id per
-    stream_key (the reference's per-stream read order). Only records
-    already admitted by the window gate reach this processor (see
-    start_trigger — the gate re-spools the overflow so it is REPROCESSED
-    later, the batch analog of the reference pausing reads at `window`
-    pending records, stream_reader.rs:435-442).
+# ---------------------------------------------------------------------------
+# the shared trigger skeleton: executor-side record loop, driver-side stats
+# fold and settle, owner guard, replay and lifecycle
+# ---------------------------------------------------------------------------
 
-    Runs under mapInPandas over data that is hash-partitioned by
-    stream_key and sorted by (stream_key, id) within each partition — so
-    a whole partition (many keys, large Arrow batches) costs ONE Python
-    call, instead of applyInPandas's one-call-per-key, while preserving
-    exactly the per-key id order the reference guarantees. At 100 TB this
-    is the difference between |keys| Python roundtrips and |cores|.
+
+def _make_processor(
+    fn: Callable[[dict], Any],
+    acl_regex: str | None,
+    records: Callable[[pd.DataFrame], tuple[dict, Any, Callable[[int], dict]]],
+    open_sink: Callable[[], Any],
+) -> Callable[[Any], Any]:
+    """Build the executor-side processor both trigger runtimes run under
+    mapInPandas, live and on replay.
+
+    A runtime supplies its layout as two arguments:
+      * `records(pdf)` turns one Arrow chunk into (the columns its sink
+        keeps, the key each record's ACL check reads, `record(i)` — the
+        dict handed to `fn`);
+      * `open_sink()` makes the task's sink writer: `write(cols, status,
+        result, error)` appends one chunk's rows, and `stats()` adds the
+        layout's own per-task counters (the stream frontier and oldest
+        event time) to the task's stats row.
 
     Errors follow reference semantics: a failing record records the error
-    and the frontier still advances (stream_reader.rs:368-371 — Nack sets
-    last_error but does not halt progress).
+    and progress does not halt (stream_reader.rs:368-371 — Nack sets
+    last_error but does not halt progress). The owner's key permissions
+    (`acl_regex`, resolved at batch-plan time) are checked per record, and
+    a denial takes the same error path — counted failed, DLQ'd — exactly
+    how the reference surfaces trigger ACL denials (stream_run_ctx.rs:
+    144-153 → last_error + num_failed, processing continues).
 
-    The SINK WRITE IS FUSED into this stage: each task appends its ok
-    rows to `sink_dir` (and error rows to `err_dir`) as uniquely-named
-    parquet part files — the foreach/custom-sink pattern. The stage's
-    only OUTPUT rows are metadata: one status='frontier' row per key
-    (id = max processed id) and one status='stats' row per task carrying
-    the counters as JSON. A micro-batch is therefore ONE job whose
-    collected result is |keys| + |tasks| tiny rows — no second write job,
-    no CollectMetrics node, no post-stage filter. Delivery is
-    at-least-once at task granularity (a retried task re-appends its
-    file); read_sink(exactly_once=True) collapses replays by
-    (stream_key, id), same as before.
-    """
-
-    # ACL: the library owner's key permissions, resolved at batch-plan
-    # time (see start_trigger). A record on a stream the owner may not
-    # read errors through the NORMAL per-record error path — counted
-    # failed, DLQ'd, frontier still advances — exactly how the reference
-    # surfaces trigger ACL denials (stream_run_ctx.rs:144-153 →
-    # last_error + num_failed, processing continues)
+    The SINK WRITE IS FUSED into this stage, once per Arrow chunk: peak
+    worker memory stays one chunk no matter how large the partition, and
+    the job's only OUTPUT is one stats row per task. A micro-batch is
+    therefore ONE job collecting |tasks| tiny rows — no second write job,
+    no CollectMetrics node. Delivery is at-least-once at task granularity
+    (a retried task re-appends its file); read_sink(exactly_once=True)
+    collapses replays by the layout's idempotency key."""
     acl_re = re.compile(acl_regex) if acl_regex is not None else None
 
     def process(batches: Any) -> Any:
         from redisgears_spark.workerpatch import ensure as _wp
 
         _wp()  # skip the per-task zipimport rescan from the 2nd task on
-        schema = _arrow_result_schema()
-        frontier: dict[str, int] = {}
-        first_ts: dict[str, Any] = {}
+        sink = open_sink()
         n_ok = n_err = 0
         an_error: str | None = None
-        oldest = None
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
-            # column-wise extraction: to_dict('records') costs ~3x the
-            # callback itself at steady state. tolist() (not to_numpy) for
-            # id/id_ts keeps the callback API stable: callbacks receive
-            # native int and pd.Timestamp, never np.int64/np.datetime64
-            # (a datetime64 has no .hour, and np.int64 results would
-            # JSON-serialize as strings via default=str)
-            keys = pdf["stream_key"].to_numpy()
-            ids = pdf["id"].tolist()
-            idts = pdf["id_ts"].tolist()
-            fmaps = pdf["fields"].to_numpy()
-            precs = pdf["record"].to_numpy()
+            cols, keys, record = records(pdf)
+            n = len(keys)
             status = ["ok"] * n
             result: list = [None] * n
             error: list = [None] * n
@@ -284,29 +280,7 @@ def _make_partition_processor(
                         raise GearsError(
                             f"{NO_PERMISSIONS_MSG} ('{keys[i]}')"
                         )
-                    # `record`: ordered (field, value) pairs, duplicates
-                    # legal (Stream_Triggers.md:78); `fields`: last-wins
-                    # map view
-                    pairs = precs[i]
-                    if pairs is not None and len(pairs):
-                        pairs = [(p["field"], p["value"]) for p in pairs]
-                        fields = dict(pairs)
-                    else:
-                        fm = fmaps[i]
-                        if fm is not None and len(fm):
-                            fields = dict(fm)
-                            pairs = list(fields.items())
-                        else:
-                            fields, pairs = {}, []
-                    res = fn(
-                        {
-                            "stream_key": keys[i],
-                            "id": ids[i],
-                            "id_ts": idts[i],
-                            "fields": fields,
-                            "record": pairs,
-                        }
-                    )
+                    res = fn(record(i))
                     if res is not None:
                         result[i] = json.dumps(res, default=str)
                     n_ok += 1
@@ -315,75 +289,383 @@ def _make_partition_processor(
                     error[i] = f"{type(e).__name__}: {e}"
                     an_error = error[i]
                     n_err += 1
-                # input arrives sorted by (stream_key, id): a plain
-                # last-write is the running max per key
-                frontier[keys[i]] = ids[i]
-                first_ts.setdefault(keys[i], idts[i])
-            ts_vals = [t for t in idts if t is not None]
-            if ts_vals:
-                lo = min(ts_vals)
-                oldest = lo if oldest is None else min(oldest, lo)
-            # write PER ARROW CHUNK (not per partition): peak worker
-            # memory stays one chunk no matter how large the partition —
-            # backfill-scale micro-batches must not buffer in Python.
-            # uuid part names make multiple files per task harmless;
-            # compact_sink() bounds the file count later.
-            chunk = pd.DataFrame(
-                {
-                    "stream_key": keys,
-                    "id": ids,
-                    "id_ts": idts,
-                    "status": status,
-                    "result": result,
-                    "error": error,
-                }
-            )
-            ok_mask = chunk["status"] == "ok"
-            if ok_mask.any():
-                _write_parquet_part(chunk[ok_mask], sink_dir, schema)
-            if not ok_mask.all():
-                _write_parquet_part(chunk[~ok_mask], err_dir, schema)
-        meta = [
-            {
-                "stream_key": k,
-                "id": v,
-                "id_ts": first_ts[k],
-                "status": "frontier",
-                "result": None,
-                "error": None,
-            }
-            for k, v in frontier.items()
-        ]
-        meta.append(
-            {
-                "stream_key": "",
-                "id": 0,
-                "id_ts": None,
-                "status": "stats",
-                "result": json.dumps(
-                    {
-                        "ok": n_ok,
-                        "err": n_err,
-                        "an_error": an_error,
-                        "oldest_us": (
-                            int(oldest.value // 1000)
-                            if oldest is not None
-                            else None
-                        ),
-                    }
-                ),
-                "error": None,
-            }
-        )
-        yield pd.DataFrame(meta)
+            sink.write(cols, status, result, error)
+        stats = {"ok": n_ok, "err": n_err, "an_error": an_error}
+        stats.update(sink.stats())
+        yield pd.DataFrame({"stats": [json.dumps(stats)]})
 
     return process
 
 
-class StreamTriggerRuntime:
+@dataclass
+class _BatchOutcome:
+    """One micro-batch's (or one replay's) totals, as the Python path's
+    stats rows or a declarative path's metrics report them."""
+
+    ok: int = 0
+    err: int = 0
+    an_error: str | None = None
+    oldest_us: int | None = None  # oldest event time processed
+    frontier: dict[str, int] = field(default_factory=dict)
+    deferred: int = 0
+
+
+def _fold_stats(rows: list) -> _BatchOutcome:
+    """Sum the per-task stats rows a processor job collected. Layouts that
+    track no frontier or event time leave those keys out."""
+    out = _BatchOutcome()
+    for r in rows:
+        d = json.loads(r["stats"])
+        out.ok += d["ok"]
+        out.err += d["err"]
+        out.an_error = d["an_error"] or out.an_error
+        oldest = d.get("oldest_us")
+        if oldest is not None:
+            out.oldest_us = (
+                oldest if out.oldest_us is None else min(out.oldest_us, oldest)
+            )
+        for key, fid in d.get("frontier", {}).items():
+            out.frontier[key] = max(out.frontier.get(key, -1), fid)
+    return out
+
+
+class _Replay(NamedTuple):
+    """What a runtime's `_replay_plan` hands the shared replay: the source
+    records to re-run (partitioned and ordered for the processor), the
+    processor, the DLQ size, how many of its entries have no source row
+    left, and a step to run after the processor (the stream DLQ swap)."""
+
+    src: DataFrame
+    processor: Callable[[Any], Any]
+    n_failed: int
+    n_unreplayable: int
+    done: Callable[[], None]
+
+
+class _TriggerRuntime:
+    """What the stream and keyspace trigger runtimes share. Each subclass
+    names its library registry (`trigger_kind`), its sink root and
+    idempotency key, and its ACL-refusal wording; it supplies the record
+    builder and sink writer to `_make_processor`, and its half of
+    replay_errors as `_replay_plan(lib_name, trigger, spec, fn,
+    acl_regex)`, which returns a _Replay, or None when the DLQ is empty."""
+
+    trigger_kind: str  # the Library attribute holding this kind's specs
+    _sink_root: str  # work_dir subdirectory of the per-trigger sinks
+    _id_cols: tuple[str, ...]  # the sink's idempotency key
+    _label: str  # how error messages name this kind of trigger
+    _declarative_hint: str  # what a refused declarative owner should do
+
+    def __init__(self, engine: GearsEngine, work_dir: str):
+        self.engine = engine
+        self.spark: SparkSession = engine.spark
+        self.work_dir = work_dir
+        self.stats: dict[str, TriggerStats] = {}
+        self.queries: dict[str, StreamingQuery] = {}
+        self._lock = threading.Lock()
+
+    def _sink_dir(self, lib_name: str, trigger: str) -> str:
+        return os.path.join(self.work_dir, self._sink_root, lib_name, trigger)
+
+    def _guard_owner(
+        self,
+        qkey: str,
+        owner: str,
+        declarative: bool,
+        stats: TriggerStats | None = None,
+    ) -> None:
+        """Refuse a declarative trigger whose library owner has restricted
+        key permissions: a declarative pipeline writes every matched row as
+        'ok' in one JVM pass, so there is no per-record error path to
+        surface ACL denials through. Refusing beats silently widening the
+        owner's permissions; a callback consumer gets per-record ACL
+        semantics.
+
+        Called at registration (no `stats`: nothing has started) and again
+        at EVERY epoch with the trigger's `stats`, because a restriction
+        applied to the owner while the trigger runs must take effect at
+        the next read (the reference applies ACL at access time), not at
+        the next trigger restart. The epoch refusal is recorded in
+        stats.last_error so TFUNCTION LIST surfaces why the trigger
+        stopped, and the raise TERMINATES the streaming query (a
+        foreachBatch error is fatal to the query, not just the batch) —
+        but the refused batch never commits, so after permissions are
+        restored, start_trigger() resumes from the checkpoint with no
+        records lost."""
+        if not declarative or self.engine.acl_read_regex(owner) is None:
+            return
+        head = f"declarative {self._label} '{qkey}': library owner '{owner}'"
+        if stats is None:
+            raise GearsError(
+                f"{head} has restricted key permissions; "
+                f"{self._declarative_hint}"
+            )
+        msg = (
+            f"{head} lost unrestricted key permissions while the trigger "
+            "was running; query stopped — restart the trigger after "
+            "restoring permissions (resumes from the checkpoint, no "
+            "records lost)"
+        )
+        with self._lock:
+            stats.last_error = msg
+        raise GearsError(msg)
+
+    def _run(self, df: DataFrame, processor: Callable[[Any], Any]) -> _BatchOutcome:
+        """Run `processor` over `df` as ONE job and fold its stats rows."""
+        return _fold_stats(df.mapInPandas(processor, _STATS_SCHEMA).collect())
+
+    def _settle(self, stats: TriggerStats, out: _BatchOutcome) -> None:
+        """Fold one micro-batch's outcome into its trigger's stats under
+        the runtime lock (replay_errors' n_failed → n_success shift is the
+        only other counter write).
+        Consumer lag = now − the oldest record event time processed (the
+        reference tracks lag per record, stream_reader.rs:127-135; the
+        batch analog is the batch's oldest record)."""
+        now_us = int(time.time() * 1_000_000)
+        lag_us = now_us - out.oldest_us if out.oldest_us is not None else 0
+        with self._lock:
+            stats.n_batches += 1
+            stats.n_records += out.ok + out.err
+            stats.n_success += out.ok
+            stats.n_failed += out.err
+            stats.n_deferred += out.deferred
+            stats.max_lag_us = max(stats.max_lag_us, lag_us)
+            if out.err and out.an_error:
+                stats.last_error = out.an_error
+            for key, fid in out.frontier.items():
+                stats.frontier[key] = max(stats.frontier.get(key, -1), fid)
+
+    def trigger_stats(self, qkey: str) -> dict[str, Any] | None:
+        """One trigger's TFUNCTION LIST vvv stats row (num_trigger/success/
+        failed, last_error, lag — function_list_command.rs:159-300), read
+        under the runtime lock; None if the trigger never started here."""
+        with self._lock:
+            st = self.stats.get(qkey)
+            if st is None:
+                return None
+            return {
+                "n_batches": st.n_batches,
+                "n_records": st.n_records,
+                "n_success": st.n_success,
+                "n_failed": st.n_failed,
+                "n_deferred": st.n_deferred,
+                "last_error": st.last_error,
+                "n_streams": len(st.frontier),
+                "max_lag_us": st.max_lag_us,
+            }
+
+    def read_sink(
+        self, lib_name: str, trigger: str, exactly_once: bool = True
+    ) -> DataFrame:
+        """Read a trigger's processed-record sink.
+
+        The sink itself is append-only: the fused executor-side append is
+        at-least-once at task granularity (a retried task re-appends its
+        part file), and across restarts the reference has the same
+        contract — it replays from the last replicated acked frontier on
+        failover (Stream_Triggers.md:182-184). `exactly_once=True`
+        collapses the copies of one record to one row over the sink's
+        idempotency key — (stream_key, id) for a stream trigger, `seq`
+        for a keyspace trigger — the documented end-to-end exactly-once
+        read. Copies of one record rank by status, 'ok' first ('ok' >
+        'error' lexicographically), so a keyspace record that errored once
+        and succeeded on a task retry resolves to 'ok'. A stream sink
+        holds only 'ok' rows, all with the record's own id_ts, so which
+        copy survives is arbitrary: copies differ only when the callback
+        is not deterministic. One shuffle on the key."""
+        from pyspark.sql.window import Window as W
+
+        df = self.spark.read.parquet(self._sink_dir(lib_name, trigger))
+        if not exactly_once:
+            return df
+        w = W.partitionBy(*self._id_cols).orderBy(F.col("status").desc())
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    def replay_errors(
+        self,
+        lib_name: str,
+        trigger: str,
+        fn: Callable[[dict], Any] | None = None,
+    ) -> dict[str, int]:
+        """Re-run a trigger's dead-letter queue: re-read exactly the failed
+        records from the SOURCE (the DLQ rows carry identity, not payloads
+        — and the source is the replayable system of record), push them
+        through `fn` (default: the trigger's current callback, i.e.
+        whatever a library upgrade fixed it to) and append the results to
+        the sink. DLQ entries whose source records are gone (retention
+        trimmed past them) are reported as "unreplayable" and stay in the
+        DLQ, never silently dropped. Returns {"replayed", "ok",
+        "still_failing", "unreplayable"}.
+
+        Run while the trigger is stopped. Failed records ARE acked
+        (error-does-not-halt), so retention can trim their source rows;
+        replay before trimming to keep unreplayable at 0. Stats shift
+        accordingly: replayed successes move n_failed → n_success."""
+        lib = self.engine._libraries[lib_name]
+        spec = getattr(lib, self.trigger_kind)[trigger]
+        fn = fn or spec["fn"]
+        if fn is None:
+            raise ValueError(
+                "replay needs a callback (declarative triggers do not "
+                "produce per-record errors)"
+            )
+        plan = self._replay_plan(
+            lib_name,
+            trigger,
+            spec,
+            fn,
+            self.engine.acl_read_regex(getattr(lib, "user", "default")),
+        )
+        if plan is None:
+            return dict.fromkeys(
+                ("replayed", "ok", "still_failing", "unreplayable"), 0
+            )
+        out = self._run(plan.src, plan.processor)
+        plan.done()
+        with self._lock:
+            st = self.stats.get(f"{lib_name}.{trigger}")
+            if st is not None:
+                st.n_success += out.ok
+                st.n_failed = max(0, st.n_failed - out.ok)
+        return {
+            "replayed": plan.n_failed - plan.n_unreplayable,
+            "ok": out.ok,
+            "still_failing": out.err,
+            "unreplayable": plan.n_unreplayable,
+        }
+
+    def process_available(self) -> None:
+        """Drain everything currently in the source (test/batch-drive mode)."""
+        for q in self.queries.values():
+            q.processAllAvailable()
+
+    def stop_all(self) -> None:
+        for q in self.queries.values():
+            try:
+                q.stop()
+            except Exception:
+                pass
+        self.queries.clear()
+
+    def stop_library(self, lib_name: str) -> None:
+        """Stop every query owned by one library AND drop its stats
+        (TFUNCTION DELETE / fatal Kill unload the whole library, triggers
+        included). Dropping the stats matters as much as the stop: a
+        removed consumer must not pin the retention min-frontier (the
+        reference removes the consumer from trim accounting on unload,
+        stream_reader.rs:60-110 trims to the slowest LIVE consumer)."""
+        owned = f"{lib_name}."
+        for k in [k for k in self.queries if k.startswith(owned)]:
+            try:
+                self.queries.pop(k).stop()
+            except Exception:
+                pass
+        with self._lock:
+            for k in [k for k in self.stats if k.startswith(owned)]:
+                del self.stats[k]
+
+
+# ---------------------------------------------------------------------------
+# stream triggers
+# ---------------------------------------------------------------------------
+
+
+def _stream_records(pdf: pd.DataFrame) -> tuple[dict, Any, Callable[[int], dict]]:
+    """The stream layout's record builder (see _make_processor).
+
+    Column-wise extraction: to_dict('records') costs ~3x the callback
+    itself at steady state. tolist() (not to_numpy) for id/id_ts keeps the
+    callback API stable: callbacks receive native int and pd.Timestamp,
+    never np.int64/np.datetime64 (a datetime64 has no .hour, and np.int64
+    results would JSON-serialize as strings via default=str)."""
+    keys = pdf["stream_key"].to_numpy()
+    ids = pdf["id"].tolist()
+    idts = pdf["id_ts"].tolist()
+    fmaps = pdf["fields"].to_numpy()
+    precs = pdf["record"].to_numpy()
+
+    def record(i: int) -> dict:
+        # `record`: ordered (field, value) pairs, duplicates legal
+        # (Stream_Triggers.md:78); `fields`: last-wins map view
+        pairs = precs[i]
+        if pairs is not None and len(pairs):
+            pairs = [(p["field"], p["value"]) for p in pairs]
+            fields = dict(pairs)
+        else:
+            fm = fmaps[i]
+            if fm is not None and len(fm):
+                fields = dict(fm)
+                pairs = list(fields.items())
+            else:
+                fields, pairs = {}, []
+        return {
+            "stream_key": keys[i],
+            "id": ids[i],
+            "id_ts": idts[i],
+            "fields": fields,
+            "record": pairs,
+        }
+
+    return {"stream_key": keys, "id": ids, "id_ts": idts}, keys, record
+
+
+class _StreamSink:
+    """One task's stream-layout writer: ok rows to `sink_dir`, error rows
+    to `err_dir` (the DLQ), one part file per Arrow chunk and directory
+    (uuid part names make several files per task harmless; compact_sink()
+    bounds the file count later). Its stats carry the acked frontier per
+    key and the oldest event time, for retention and lag."""
+
+    def __init__(self, sink_dir: str, err_dir: str):
+        self.sink_dir = sink_dir
+        self.err_dir = err_dir
+        self.schema = _arrow_result_schema()
+        self.frontier: dict[str, int] = {}
+        self.oldest = None
+
+    def write(self, cols: dict, status: list, result: list, error: list) -> None:
+        # input arrives sorted by (stream_key, id): a plain last-write is
+        # the running max per key
+        self.frontier.update(zip(cols["stream_key"], cols["id"]))
+        ts_vals = [t for t in cols["id_ts"] if t is not None]
+        if ts_vals:
+            lo = min(ts_vals)
+            self.oldest = lo if self.oldest is None else min(self.oldest, lo)
+        chunk = pd.DataFrame(
+            {**cols, "status": status, "result": result, "error": error}
+        )
+        ok_mask = chunk["status"] == "ok"
+        if ok_mask.any():
+            _write_parquet_part(chunk[ok_mask], self.sink_dir, self.schema)
+        if not ok_mask.all():
+            _write_parquet_part(chunk[~ok_mask], self.err_dir, self.schema)
+
+    def stats(self) -> dict:
+        return {
+            "frontier": self.frontier,
+            "oldest_us": (
+                int(self.oldest.value // 1000) if self.oldest is not None else None
+            ),
+        }
+
+
+class StreamTriggerRuntime(_TriggerRuntime):
     """Owns the streaming queries for a library's triggers (the analog of
     the reference's StreamReaderCtx consumer tracking,
     stream_reader.rs:54-58)."""
+
+    trigger_kind = "stream_triggers"
+    _sink_root = "sink"
+    _id_cols = ("stream_key", "id")
+    _label = "trigger"
+    _declarative_hint = (
+        "declarative pipelines need an unrestricted owner — use a callback "
+        "consumer"
+    )
 
     def __init__(
         self,
@@ -408,10 +690,8 @@ class StreamTriggerRuntime:
         consumed entries with XTRIM MINID at the min-frontier — the
         reference's trim-to-slowest-consumer (stream_reader.rs:60-110)
         against the real server."""
-        self.engine = engine
-        self.spark: SparkSession = engine.spark
+        super().__init__(engine, work_dir)
         self.spool_dir = spool_dir
-        self.work_dir = work_dir
         self.source_adapter = source_adapter
         self.source_format = source_format
         self.source_options = dict(source_options or {})
@@ -435,9 +715,6 @@ class StreamTriggerRuntime:
             )
 
             register_redis_source(self.spark)
-        self.stats: dict[str, TriggerStats] = {}
-        self.queries: dict[str, StreamingQuery] = {}
-        self._lock = threading.Lock()
         engine.register_trigger_runtime(self)
 
     def _overlap_submit(self, fn) -> futures.Future:
@@ -530,9 +807,13 @@ class StreamTriggerRuntime:
     # -- source --------------------------------------------------------------
 
     def _source(
-        self, respool_dir: str | None = None, base_override: str | None = None
+        self,
+        respool_dir: str | None = None,
+        base_override: str | None = None,
+        streaming: bool = True,
     ) -> DataFrame:
-        """Build the trigger's streaming source.
+        """Build the trigger's source; `streaming=False` is the batch view
+        of the same records (the replay path's system-of-record read).
 
         Backfill/bootstrap contract (the reference scans the keyspace for
         pre-existing streams on registration and consumes them from the
@@ -544,58 +825,42 @@ class StreamTriggerRuntime:
         from the checkpoint and does not re-run the backfill. Pinned by
         tests/test_streaming.py::test_backfill_bootstrap_pre_populated_stream.
         """
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
+        reader = self.spark.readStream if streaming else self.spark.read
         if base_override is not None:
             # already-canonical intermediate (async-mode queue): no
             # maxFilesPerTrigger cap — the ingest query already paces the
             # queue, so capping here only fragments the worker into many
             # small micro-batches (each paying the fixed foreachBatch cost)
             # while ingest is still landing files
-            base = (
-                self.spark.readStream.schema(STREAM_SCHEMA)
-                .parquet(base_override)
-            )
+            base = reader.schema(STREAM_SCHEMA).parquet(base_override)
         elif self.source_format == "commandlog":
             # AOF tail — emits the canonical shape directly, including
             # the ordered `record` pairs when a line carries duplicate
             # field names (STREAM_SCHEMA fidelity contract)
             base = (
-                self.spark.readStream.format("gears_commandlog")
+                reader.format("gears_commandlog")
                 .option("path", self.spool_dir)
                 .load()
             )
         elif self.source_format == "redis":
             # live-server tail — canonical shape, per-key last-id offsets
             base = (
-                self.spark.readStream.format("gears_redis")
+                reader.format("gears_redis")
                 .options(**self.source_options)
                 .load()
             )
-        elif self.source_adapter is not None:
-            raw = (
-                self.spark.readStream.schema(raw_schema)
-                .option("maxFilesPerTrigger", self._files_per_trigger)
-                .parquet(self.spool_dir)
-            )
-            base = self.source_adapter(raw)
         else:
-            base = (
-                self.spark.readStream.schema(STREAM_SCHEMA)
-                .option("maxFilesPerTrigger", self._files_per_trigger)
-                .parquet(self.spool_dir)
+            base = read_spool(
+                self.spark,
+                self.spool_dir,
+                self.source_adapter,
+                self._files_per_trigger,
+                streaming,
             )
         if respool_dir is not None:
             # this trigger's deferred records come back through its private
             # respool (already canonical shape); union keeps one query
-            respooled = (
-                self.spark.readStream.schema(STREAM_SCHEMA)
-                .option("maxFilesPerTrigger", 8)
-                .parquet(respool_dir)
-            )
-            base = base.unionByName(respooled)
+            base = base.unionByName(read_spool(self.spark, respool_dir))
         return base
 
     # -- per-trigger query ---------------------------------------------------
@@ -604,7 +869,7 @@ class StreamTriggerRuntime:
         spec = lib.stream_triggers[name]
         qkey = f"{lib.name}.{name}"
         stats = self.stats.setdefault(qkey, TriggerStats())
-        sink_dir = os.path.join(self.work_dir, "sink", lib.name, name)
+        sink_dir = self._sink_dir(lib.name, name)
         err_dir = os.path.join(self.work_dir, "errors", lib.name, name)
         ckpt_dir = os.path.join(self.work_dir, "checkpoints", lib.name, name)
         respool_dir = os.path.join(self.work_dir, "respool", lib.name, name)
@@ -619,30 +884,8 @@ class StreamTriggerRuntime:
         declarative = expr is not None or agg_expr is not None
         bounded = window < UNBOUNDED_WINDOW
         owner = getattr(lib, "user", "default")
-        if declarative and self.engine.acl_read_regex(owner) is not None:
-            # declarative pipelines write every matched row as 'ok' in one
-            # JVM pass — there is no per-record error path to surface ACL
-            # denials through. Refuse loudly instead of silently widening
-            # the owner's permissions; a callback consumer gets per-record
-            # ACL semantics. (Checked at registration; like the reference,
-            # later ACL changes apply from the next read — here the next
-            # trigger start.)
-            raise GearsError(
-                f"declarative trigger '{qkey}': library owner '{owner}' "
-                "has restricted key permissions; declarative pipelines "
-                "need an unrestricted owner — use a callback consumer"
-            )
-
-        def make_processor():
-            # rebuilt per micro-batch so the owner's ACL patterns resolve
-            # at batch time (event-time semantics: deleting/disabling the
-            # owner fails the NEXT batch's records, testAclUserDeleted...)
-            return _make_partition_processor(
-                spec["fn"],
-                sink_dir,
-                err_dir,
-                acl_regex=self.engine.acl_read_regex(owner),
-            )
+        self._guard_owner(qkey, owner, declarative)
+        open_sink = functools.partial(_StreamSink, sink_dir, err_dir)
 
         # Batch-invariant plan fragments, built ONCE per trigger (r8:
         # profiling attributed the streaming_agg ratio creep to ~0.2 s
@@ -710,32 +953,7 @@ class StreamTriggerRuntime:
         def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
             from pyspark.sql.window import Window as W
 
-            if declarative and self.engine.acl_read_regex(owner) is not None:
-                # re-resolved EVERY epoch, mirroring the per-batch owner
-                # resolution the callback path does in make_processor: a
-                # restriction applied to the owner while the trigger runs
-                # must take effect at the next read (the reference applies
-                # ACL at access time), not at the next trigger restart.
-                # Declarative pipelines have no per-record error path, so
-                # the whole batch fails loudly instead of silently
-                # continuing to read keys the owner can no longer see.
-                # The raise TERMINATES this streaming query (a foreachBatch
-                # error is fatal to the query, not just the batch) — but
-                # the refused batch never commits, so after permissions
-                # are restored, start_trigger() resumes from the
-                # checkpoint with no records lost. The refusal is recorded
-                # in stats.last_error so TFUNCTION LIST surfaces why the
-                # trigger stopped.
-                msg = (
-                    f"declarative trigger '{qkey}': library owner "
-                    f"'{owner}' lost unrestricted key permissions while "
-                    "the trigger was running; query stopped — restart "
-                    "the trigger after restoring permissions (resumes "
-                    "from the checkpoint, no records lost)"
-                )
-                with self._lock:
-                    stats.last_error = msg
-                raise GearsError(msg)
+            self._guard_owner(qkey, owner, declarative, stats)
 
             # prefix filter — predicate-pushdown-friendly, the consumer
             # match of keys_notifications.rs:199-203
@@ -806,7 +1024,7 @@ class StreamTriggerRuntime:
                 #     a map-side partial agg.
                 # Declarative expressions don't produce per-record errors
                 # (a throwing expr fails the task, same as a malformed
-                # query): n_err is structurally 0.
+                # query): the outcome's err is structurally 0.
                 if agg_expr is not None:
                     grouped = matched.groupBy("stream_key").agg(
                         F.max("id").alias("id"),
@@ -825,12 +1043,14 @@ class StreamTriggerRuntime:
                     observed = row_results.observe(obs, *agg_observe_cols)
                     observed.write.mode("append").parquet(sink_dir)
                     m = obs.get
-                    n_ok = m["n_keys"]
-                    oldest_us = m["oldest_us"]
-                    frontiers = [
-                        (r["stream_key"], r["id"]) for r in m["frontiers"]
-                    ]
-                if agg_expr is None:
+                    out = _BatchOutcome(
+                        ok=m["n_keys"],
+                        oldest_us=m["oldest_us"],
+                        frontier={
+                            r["stream_key"]: r["id"] for r in m["frontiers"]
+                        },
+                    )
+                else:
                     row_results = admitted.select(
                         "stream_key", "id", "id_ts", *expr_result_cols
                     )
@@ -864,48 +1084,36 @@ class StreamTriggerRuntime:
                     # a failed sink write must fail the batch (foreachBatch
                     # must not commit a batch whose rows were not written)
                     write_fut.result()
-                    frontiers = [
-                        (r["stream_key"], r["id"]) for r in meta_rows
-                    ]
-                    n_ok = sum(r["n"] for r in meta_rows)
-                    oldest_us = (
-                        min(r["oldest_us"] for r in meta_rows)
-                        if meta_rows
-                        else None
+                    out = _BatchOutcome(
+                        ok=sum(r["n"] for r in meta_rows),
+                        oldest_us=min(
+                            (r["oldest_us"] for r in meta_rows), default=None
+                        ),
+                        frontier={r["stream_key"]: r["id"] for r in meta_rows},
                     )
-                n_err = 0
-                an_error = None
             else:
-                # PYTHON path, ONE job per micro-batch: the processor runs
-                # the callback AND appends its partition's ok/error rows to
-                # the sink/error dirs executor-side (see
-                # _make_partition_processor — the foreach/custom-sink
-                # pattern). The job's collected result is only metadata:
-                # |keys| frontier rows + one stats row per task — no second
-                # write job, no CollectMetrics, no post-stage filter.
-                meta = admitted.mapInPandas(
-                    make_processor(), _RESULT_SCHEMA
-                ).collect()
-                n_ok = n_err = 0
-                an_error = None
-                oldest_us = None
-                frontiers = []
-                for r in meta:
-                    if r["status"] == "stats":
-                        d = json.loads(r["result"])
-                        n_ok += d["ok"]
-                        n_err += d["err"]
-                        an_error = d["an_error"] or an_error
-                        if d["oldest_us"] is not None:
-                            oldest_us = (
-                                d["oldest_us"]
-                                if oldest_us is None
-                                else min(oldest_us, d["oldest_us"])
-                            )
-                    else:  # frontier
-                        frontiers.append((r["stream_key"], r["id"]))
-            n_deferred = int(obs_gate.get["deferred"]) if obs_gate else 0
-            if n_deferred:
+                # PYTHON path, ONE job per micro-batch (_make_processor).
+                # mapInPandas over data hash-partitioned by stream_key and
+                # sorted by (stream_key, id) within each partition: a whole
+                # partition (many keys, large Arrow batches) costs ONE
+                # Python call, instead of applyInPandas's one call per
+                # key, while preserving exactly the per-key id order the
+                # reference guarantees. At 100 TB this is the difference
+                # between |keys| Python roundtrips and |cores|.
+                out = self._run(
+                    admitted,
+                    _make_processor(
+                        spec["fn"],
+                        # resolved per micro-batch (event-time semantics:
+                        # deleting/disabling the owner fails the NEXT
+                        # batch's records, testAclUserDeleted...)
+                        self.engine.acl_read_regex(owner),
+                        _stream_records,
+                        open_sink,
+                    ),
+                )
+            out.deferred = int(obs_gate.get["deferred"]) if obs_gate else 0
+            if out.deferred:
                 # overflow is exceptional — recompute the gate (fn never ran
                 # on these rows; the window is deterministic) and re-spool
                 gate = W.partitionBy("stream_key").orderBy("id")
@@ -917,25 +1125,7 @@ class StreamTriggerRuntime:
                     .write.mode("append")
                     .parquet(respool_dir)
                 )
-            # consumer lag = now − record event time (the reference tracks
-            # lag per record, stream_reader.rs:127-135; the batch analog is
-            # the oldest record processed this batch)
-            import time as _time
-
-            now_us = int(_time.time() * 1_000_000)
-            batch_lag_us = (now_us - oldest_us) if oldest_us is not None else 0
-            with self._lock:
-                stats.n_batches += 1
-                stats.n_records += n_ok + n_err
-                stats.n_success += n_ok
-                stats.n_failed += n_err
-                stats.n_deferred += n_deferred
-                stats.max_lag_us = max(stats.max_lag_us, batch_lag_us)
-                if n_err and an_error:
-                    stats.last_error = an_error
-                for key, fid in frontiers:
-                    cur = stats.frontier.get(key, -1)
-                    stats.frontier[key] = max(cur, fid)
+            self._settle(stats, out)
 
         # the respool source only exists for bounded windows — the overflow
         # re-spool is the only writer, so an unbounded trigger would poll a
@@ -956,52 +1146,7 @@ class StreamTriggerRuntime:
     def start_library(self, lib: Library) -> list[StreamingQuery]:
         return [self.start_trigger(lib, name) for name in lib.stream_triggers]
 
-    def stop_all(self) -> None:
-        for q in self.queries.values():
-            try:
-                q.stop()
-            except Exception:
-                pass
-        self.queries.clear()
-
-    def stop_library(self, lib_name: str) -> None:
-        """Stop every query owned by one library and drop its stats
-        (TFUNCTION DELETE / fatal Kill unload the whole library, triggers
-        included — see _stop_owned)."""
-        _stop_owned(self, lib_name)
-
-    def process_available(self) -> None:
-        """Drain everything currently in the spool (test/batch-drive mode)."""
-        for q in self.queries.values():
-            q.processAllAvailable()
-
     # -- sink reads ----------------------------------------------------------
-
-    def read_sink(
-        self, lib_name: str, trigger: str, exactly_once: bool = True
-    ) -> DataFrame:
-        """Read a trigger's processed-record sink.
-
-        The sink itself is append-only (at-least-once across restarts —
-        the same delivery contract as the reference, which replays from
-        the last replicated acked frontier on failover,
-        Stream_Triggers.md:182-184). `exactly_once=True` collapses
-        replay duplicates by (stream_key, id) keeping the latest write —
-        the documented end-to-end exactly-once read: dedupe at the
-        consumer over the idempotency key. One shuffle on (key, id)."""
-        from pyspark.sql.window import Window as W
-
-        df = self.spark.read.parquet(
-            os.path.join(self.work_dir, "sink", lib_name, trigger)
-        )
-        if not exactly_once:
-            return df
-        w = W.partitionBy("stream_key", "id").orderBy(F.col("id_ts").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
 
     def read_errors(self, lib_name: str, trigger: str) -> DataFrame:
         """Read a trigger's dead-letter records — every input row whose
@@ -1018,51 +1163,17 @@ class StreamTriggerRuntime:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         return self.spark.read.schema(_RESULT_SCHEMA).parquet(err_dir)
 
-    def replay_errors(
-        self,
-        lib_name: str,
-        trigger: str,
-        fn: Callable[[dict], Any] | None = None,
-    ) -> dict[str, int]:
-        """Re-run the dead-letter queue: re-read exactly the failed
-        records from the SOURCE spool (the DLQ rows carry identity, not
-        payloads — and the source is the replayable system of record),
-        push them through `fn` (default: the trigger's current callback,
-        i.e. whatever a library upgrade fixed it to), append the now-ok
-        results to the sink, and REPLACE the DLQ with the still-failing
-        rows PLUS any entries whose source records are gone (retention
-        trimmed past them — those are RETAINED in the DLQ and reported
-        as "unreplayable", never silently dropped). Returns
-        {"replayed", "ok", "still_failing", "unreplayable"}.
-
-        Run while the trigger is stopped. Failed ids ARE acked
-        (error-does-not-halt), so retention can trim their source rows;
-        replay before trimming to keep unreplayable at 0. Stats shift
-        accordingly: replayed successes move n_failed → n_success.
-        """
-        import shutil
-
-        lib = self.engine._libraries[lib_name]
-        spec = lib.stream_triggers[trigger]
-        fn = fn or spec["fn"]
-        if fn is None:
-            raise ValueError(
-                "replay needs a callback (declarative triggers do not "
-                "produce per-record errors)"
-            )
-        sink_dir = os.path.join(self.work_dir, "sink", lib_name, trigger)
+    def _replay_plan(self, lib_name, trigger, spec, fn, acl_regex):
+        """Stream layout: ok results append to the sink, and the DLQ is
+        REPLACED by the still-failing rows PLUS the unreplayable entries,
+        which are carried over before processing."""
         err_dir = os.path.join(self.work_dir, "errors", lib_name, trigger)
         errs = self.read_errors(lib_name, trigger)
         failed = errs.select("stream_key", "id").distinct()
         n_failed = failed.count()
         if n_failed == 0:
-            return {
-                "replayed": 0,
-                "ok": 0,
-                "still_failing": 0,
-                "unreplayable": 0,
-            }
-        src = self._source_batch().join(
+            return None
+        src = self._source(streaming=False).join(
             F.broadcast(failed), ["stream_key", "id"], "left_semi"
         )
         tmp_err = err_dir + ".replay"
@@ -1077,70 +1188,27 @@ class StreamTriggerRuntime:
         n_unreplayable = unreplayable.count()
         if n_unreplayable:
             unreplayable.write.mode("append").parquet(tmp_err)
-        n_replayed = n_failed - n_unreplayable
-        processor = _make_partition_processor(
-            fn,
-            sink_dir,
-            tmp_err,
-            acl_regex=self.engine.acl_read_regex(
-                getattr(lib, "user", "default")
-            ),
-        )
-        n_ok = n_err = 0
-        for r in (
+
+        def swap() -> None:
+            # the DLQ now holds still-failing + unreplayable rows
+            shutil.rmtree(err_dir, ignore_errors=True)
+            os.replace(tmp_err, err_dir)
+
+        return _Replay(
             src.repartition(
                 self.spark.sparkContext.defaultParallelism, "stream_key"
-            )
-            .sortWithinPartitions("stream_key", "id")
-            .mapInPandas(processor, _RESULT_SCHEMA)
-            .collect()
-        ):
-            if r["status"] == "stats":
-                d = json.loads(r["result"])
-                n_ok += d["ok"]
-                n_err += d["err"]
-        # swap: the DLQ now holds still-failing + unreplayable rows
-        shutil.rmtree(err_dir, ignore_errors=True)
-        os.replace(tmp_err, err_dir)
-        qkey = f"{lib_name}.{trigger}"
-        with self._lock:
-            if qkey in self.stats:
-                self.stats[qkey].n_success += n_ok
-                self.stats[qkey].n_failed = max(
-                    0, self.stats[qkey].n_failed - n_ok
-                )
-        return {
-            "replayed": n_replayed,
-            "ok": n_ok,
-            "still_failing": n_err,
-            "unreplayable": n_unreplayable,
-        }
-
-    def _source_batch(self) -> DataFrame:
-        """Batch view of the spool in canonical shape (the replay path's
-        system-of-record read; mirrors _source minus streaming)."""
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        if self.source_format == "commandlog":
-            return (
-                self.spark.read.format("gears_commandlog")
-                .option("path", self.spool_dir)
-                .load()
-            )
-        if self.source_format == "redis":
-            return (
-                self.spark.read.format("gears_redis")
-                .options(**self.source_options)
-                .load()
-            )
-        if self.source_adapter is not None:
-            return self.source_adapter(
-                self.spark.read.schema(raw_schema).parquet(self.spool_dir)
-            )
-        return self.spark.read.schema(STREAM_SCHEMA).parquet(
-            self.spool_dir
+            ).sortWithinPartitions("stream_key", "id"),
+            _make_processor(
+                fn,
+                acl_regex,
+                _stream_records,
+                functools.partial(
+                    _StreamSink, self._sink_dir(lib_name, trigger), tmp_err
+                ),
+            ),
+            n_failed,
+            n_unreplayable,
+            swap,
         )
 
     def compact_sink(
@@ -1165,9 +1233,8 @@ class StreamTriggerRuntime:
         — never a window where the data exists only in the hidden dir.
         """
         import glob as _glob
-        import shutil
 
-        sink = os.path.join(self.work_dir, "sink", lib_name, trigger)
+        sink = self._sink_dir(lib_name, trigger)
         old_files = sorted(_glob.glob(os.path.join(sink, "part-*.parquet")))
         if not old_files:
             return 0
@@ -1250,7 +1317,7 @@ class StreamTriggerRuntime:
             qkeys = list(self.stats)
         for qkey in qkeys:
             lib_name, _, trig = qkey.partition(".")
-            sink = os.path.join(self.work_dir, "sink", lib_name, trig)
+            sink = self._sink_dir(lib_name, trig)
             if os.path.isdir(sink) and any(
                 f.endswith(".parquet") for f in os.listdir(sink)
             ):
@@ -1266,13 +1333,15 @@ class StreamTriggerRuntime:
         (stream_reader.rs:60-110: 'trimmed according to the slowest
         consumer'). Streams not yet seen by every consumer are not
         trimmable."""
-        per_consumer = [s.frontier for s in self.stats.values()]
+        with self._lock:
+            per_consumer = [dict(s.frontier) for s in self.stats.values()]
         if not per_consumer:
             return {}
         keys = set.intersection(*[set(f) for f in per_consumer])
         return {
             k: min(f[k] for f in per_consumer) for k in keys
         }
+
 
 
 # ---------------------------------------------------------------------------
@@ -1290,101 +1359,63 @@ _CDC_RESULT_SCHEMA = (
 )
 
 
-def _make_cdc_partition_processor(fn, on_fired, sink_dir, acl_regex=None):
-    """Fused executor-side CDC processor (the keyspace twin of
-    _make_partition_processor): each task appends ALL its result rows (the
-    CDC sink keeps every status) to sink_dir — one part file per Arrow
-    chunk, bounded memory — and yields one status='stats' metadata row, so
-    a micro-batch (or a replay) is ONE job collecting |tasks| tiny rows.
-    Shared by the live trigger loop and replay_errors."""
+def _cdc_records(on_fired: Callable[[dict], Any] | None):
+    """The CDC layout's record builder (see _make_processor): change
+    records in seq order, each with its event-time snapshot and, when the
+    trigger has one, the onTriggerFired view of it."""
 
-    # owner-ACL check, per record — same error-path accounting as the
-    # stream processor (the reference authenticates the notification
-    # consumer's key access as the library owner)
-    acl_re = re.compile(acl_regex) if acl_regex is not None else None
+    def records(pdf: pd.DataFrame) -> tuple[dict, Any, Callable[[int], dict]]:
+        pdf = pdf.sort_values("seq")
+        # tolist() for seq/ts: callbacks receive native int and
+        # pd.Timestamp, never numpy scalars (API stability — see
+        # _stream_records)
+        seqs = pdf["seq"].tolist()
+        keys = pdf["key"].to_numpy()
+        events = pdf["event"].to_numpy()
+        tss = pdf["ts"].tolist()
+        snaps = pdf["snapshot"].to_numpy()
 
-    def process_partition(pdf_iter):
-        from redisgears_spark.workerpatch import ensure as _wp
+        def record(i: int) -> dict:
+            snap = snaps[i]
+            data = {
+                "event": events[i],
+                "key": keys[i],
+                "ts": tss[i],
+                # event-time snapshot (onTriggerFired stage): values
+                # captured when the event was produced
+                "snapshot": dict(snap) if snap is not None else {},
+            }
+            if on_fired is not None:
+                data["snapshot_view"] = on_fired(data)
+            return data
 
-        _wp()  # see workerpatch — removes ~130 ms/task of preamble
-        schema = _arrow_cdc_schema()
-        n_ok = n_err = 0
-        an_error = None
-        for pdf in pdf_iter:
-            n = len(pdf)
-            if not n:
-                continue
-            pdf = pdf.sort_values("seq")
-            # tolist() for seq/ts: callbacks receive native int and
-            # pd.Timestamp, never numpy scalars (API stability — see
-            # the stream processor above)
-            seqs = pdf["seq"].tolist()
-            keys = pdf["key"].to_numpy()
-            events = pdf["event"].to_numpy()
-            tss = pdf["ts"].tolist()
-            snaps = pdf["snapshot"].to_numpy()
-            status = ["ok"] * n
-            result: list = [None] * n
-            error: list = [None] * n
-            for i in range(n):
-                try:
-                    if acl_re is not None and acl_re.fullmatch(keys[i]) is None:
-                        raise GearsError(
-                            f"{NO_PERMISSIONS_MSG} ('{keys[i]}')"
-                        )
-                    snap = snaps[i]
-                    data = {
-                        "event": events[i],
-                        "key": keys[i],
-                        "ts": tss[i],
-                        # event-time snapshot (onTriggerFired stage):
-                        # values captured when the event was produced
-                        "snapshot": dict(snap) if snap is not None else {},
-                    }
-                    if on_fired is not None:
-                        data["snapshot_view"] = on_fired(data)
-                    res = fn(data)
-                    if res is not None:
-                        result[i] = json.dumps(res, default=str)
-                    n_ok += 1
-                except Exception as e:
-                    status[i] = "error"
-                    error[i] = f"{type(e).__name__}: {e}"
-                    an_error = error[i]
-                    n_err += 1
-            _write_parquet_part(
-                pd.DataFrame(
-                    {
-                        "seq": seqs,
-                        "key": keys,
-                        "event": events,
-                        "status": status,
-                        "result": result,
-                        "error": error,
-                    }
-                ),
-                sink_dir,
-                schema,
-            )
-        yield pd.DataFrame(
-            [
-                {
-                    "seq": 0,
-                    "key": "",
-                    "event": "",
-                    "status": "stats",
-                    "result": json.dumps(
-                        {"ok": n_ok, "err": n_err, "an_error": an_error}
-                    ),
-                    "error": None,
-                }
-            ]
+        return {"seq": seqs, "key": keys, "event": events}, keys, record
+
+    return records
+
+
+class _CdcSink:
+    """One task's CDC-layout writer: ALL result rows (the CDC sink keeps
+    every status) to `sink_dir`, one part file per Arrow chunk."""
+
+    def __init__(self, sink_dir: str):
+        self.sink_dir = sink_dir
+        self.schema = _arrow_cdc_schema()
+
+    def write(self, cols: dict, status: list, result: list, error: list) -> None:
+        _write_parquet_part(
+            pd.DataFrame(
+                {**cols, "status": status, "result": result, "error": error}
+            ),
+            self.sink_dir,
+            self.schema,
         )
 
-    return process_partition
+    def stats(self) -> dict:
+        return {}
 
 
-class KeyspaceTriggerRuntime:
+class KeyspaceTriggerRuntime(_TriggerRuntime):
     """CDC-trigger runtime over a `changes` feed.
 
     Re-entrancy suppression: the reference blocks notifications fired by
@@ -1398,6 +1429,12 @@ class KeyspaceTriggerRuntime:
     snapshot map is materialized in the same micro-batch row the action
     sees — event-time values, not action-time.
     """
+
+    trigger_kind = "keyspace_triggers"
+    _sink_root = "cdc_sink"
+    _id_cols = ("seq",)
+    _label = "keyspace trigger"
+    _declarative_hint = "use a callback consumer"
 
     def __init__(
         self,
@@ -1417,16 +1454,11 @@ class KeyspaceTriggerRuntime:
         (prefix match, expr/callback, DLQ, exactly-once sink) is shared.
         `source_options` carries the client options (fake_path or
         host/port/db/password, plus db= and flush_every=)."""
-        self.engine = engine
-        self.spark = engine.spark
+        super().__init__(engine, work_dir)
         self.changes_dir = changes_dir
         # the feed may legitimately be empty at trigger start (live mode:
         # no notification has fired yet) — the file source needs the dir
         os.makedirs(changes_dir, exist_ok=True)
-        self.work_dir = work_dir
-        self.stats: dict[str, TriggerStats] = {}
-        self.queries: dict[str, StreamingQuery] = {}
-        self._lock = threading.Lock()
         self._seq = 0
         self.source_format = source_format
         self.bridge = None
@@ -1500,34 +1532,16 @@ class KeyspaceTriggerRuntime:
         spec = lib.keyspace_triggers[name]
         qkey = f"{lib.name}.{name}"
         stats = self.stats.setdefault(qkey, TriggerStats())
-        sink_dir = os.path.join(self.work_dir, "cdc_sink", lib.name, name)
+        sink_dir = self._sink_dir(lib.name, name)
         ckpt_dir = os.path.join(self.work_dir, "cdc_ckpt", lib.name, name)
         os.makedirs(sink_dir, exist_ok=True)
 
         prefix = spec["prefix"]
-        fn = spec["fn"]
         expr = spec.get("expr")
-        on_fired = spec["on_trigger_fired"]
-        runtime = self
-
+        records = _cdc_records(spec["on_trigger_fired"])
+        open_sink = functools.partial(_CdcSink, sink_dir)
         owner = getattr(lib, "user", "default")
-        if expr is not None and self.engine.acl_read_regex(owner) is not None:
-            # same rule as the stream runtime: the declarative path has no
-            # per-record error path to carry ACL denials
-            raise GearsError(
-                f"declarative keyspace trigger '{qkey}': library owner "
-                f"'{owner}' has restricted key permissions; use a "
-                "callback consumer"
-            )
-
-        def make_processor():
-            # per-batch rebuild: owner ACL resolves at batch time
-            return _make_cdc_partition_processor(
-                fn,
-                on_fired,
-                sink_dir,
-                acl_regex=runtime.engine.acl_read_regex(owner),
-            )
+        self._guard_owner(qkey, owner, expr is not None)
 
         # batch-invariant plan fragments, built once per trigger (see
         # StreamTriggerRuntime.start_trigger — same per-batch py4j cost
@@ -1548,27 +1562,7 @@ class KeyspaceTriggerRuntime:
             ]
 
         def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            if (
-                expr is not None
-                and self.engine.acl_read_regex(owner) is not None
-            ):
-                # per-epoch re-check, same rule as the stream runtime: a
-                # restriction applied to the owner mid-run takes effect at
-                # the next batch. The raise terminates this streaming
-                # query (foreachBatch errors are fatal to the query), but
-                # the refused batch never commits — a restart after
-                # permissions are restored resumes from the checkpoint
-                # with no records lost; last_error records why.
-                msg = (
-                    f"declarative keyspace trigger '{qkey}': library "
-                    f"owner '{owner}' lost unrestricted key permissions "
-                    "while the trigger was running; query stopped — "
-                    "restart the trigger after restoring permissions "
-                    "(resumes from the checkpoint, no records lost)"
-                )
-                with self._lock:
-                    stats.last_error = msg
-                raise GearsError(msg)
+            self._guard_owner(qkey, owner, expr is not None, stats)
             # re-entrancy suppression baked into the predicate:
             # engine-origin writes excluded
             matched = batch_df.filter(match_pred)
@@ -1587,30 +1581,22 @@ class KeyspaceTriggerRuntime:
                 observed = results.observe(obs, *expr_observe_cols)
                 observed.write.mode("append").parquet(sink_dir)
                 m = obs.get
-                n_ok, n_err = m["ok"] or 0, m["err"] or 0
-                an_error = m["an_error"]
+                out = _BatchOutcome(
+                    ok=m["ok"] or 0, err=m["err"] or 0, an_error=m["an_error"]
+                )
             else:
-                # python path: fused executor-side sink write (see
-                # process_partition) — the collected result is |tasks|
-                # stats rows only
-                meta = matched.mapInPandas(
-                    make_processor(), _CDC_RESULT_SCHEMA
-                ).collect()
-                n_ok = n_err = 0
-                an_error = None
-                for r in meta:
-                    d = json.loads(r["result"])
-                    n_ok += d["ok"]
-                    n_err += d["err"]
-                    an_error = d["an_error"] or an_error
-            with self._lock:
-                stats.n_batches += 1
-                stats.n_records += n_ok + n_err
-                stats.n_success += n_ok
-                stats.n_failed += n_err
-                if n_err:
-                    stats.last_error = an_error
-            _ = runtime  # actions that write back must use append_changes(origin='trigger')
+                # python path: fused executor-side sink write, the owner's
+                # ACL resolved per micro-batch
+                out = self._run(
+                    matched,
+                    _make_processor(
+                        spec["fn"],
+                        self.engine.acl_read_regex(owner),
+                        records,
+                        open_sink,
+                    ),
+                )
+            self._settle(stats, out)
 
         query = (
             self.spark.readStream.schema(CHANGES_SCHEMA)
@@ -1618,7 +1604,9 @@ class KeyspaceTriggerRuntime:
             .parquet(self.changes_dir)
             .writeStream.foreachBatch(handle_batch)
             .option("checkpointLocation", ckpt_dir)
-            .queryName(qkey)
+            # a stream trigger of the same name runs as `qkey`; Spark
+            # refuses two active queries with one name
+            .queryName(f"{qkey}__keyspace")
             .start()
         )
         self.queries[qkey] = query
@@ -1627,33 +1615,7 @@ class KeyspaceTriggerRuntime:
     def process_available(self) -> None:
         if self.bridge is not None:
             self.bridge.drain()  # land buffered notifications first
-        for q in self.queries.values():
-            q.processAllAvailable()
-
-    def read_sink(
-        self, lib_name: str, trigger: str, exactly_once: bool = True
-    ) -> DataFrame:
-        """Read a CDC trigger's sink. The fused executor-side append is
-        at-least-once at task granularity (a retried task re-appends its
-        part file — same contract as the stream runtime's sink);
-        `exactly_once=True` collapses replays by `seq`, the change feed's
-        idempotency key. Ties prefer the successful row: a record that
-        errored once and succeeded on a task retry must resolve to 'ok'
-        (status desc — 'ok' > 'error' lexicographically — matches the
-        stream runtime's keep-latest-write semantics)."""
-        from pyspark.sql.window import Window as W
-
-        df = self.spark.read.parquet(
-            os.path.join(self.work_dir, "cdc_sink", lib_name, trigger)
-        )
-        if not exactly_once:
-            return df
-        w = W.partitionBy("seq").orderBy(F.col("status").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        super().process_available()
 
     def read_errors(self, lib_name: str, trigger: str) -> DataFrame:
         """CDC dead-letter view — parity with the stream runtime's
@@ -1666,7 +1628,7 @@ class KeyspaceTriggerRuntime:
         a task retry is not dead). Rows keep (seq, key, event) — seq is
         the change feed's idempotency key, so a fixed callback can re-run
         exactly the failed set. Empty/missing sink → empty DataFrame."""
-        sink_dir = os.path.join(self.work_dir, "cdc_sink", lib_name, trigger)
+        sink_dir = self._sink_dir(lib_name, trigger)
         if not os.path.isdir(sink_dir) or not any(
             f.endswith(".parquet") for f in os.listdir(sink_dir)
         ):
@@ -1675,95 +1637,37 @@ class KeyspaceTriggerRuntime:
             F.col("status") == "error"
         )
 
-    def replay_errors(
-        self,
-        lib_name: str,
-        trigger: str,
-        fn: Callable[[dict], Any] | None = None,
-    ) -> dict[str, int]:
-        """Re-run the CDC dead-letter queue: re-read exactly the failed
-        change records from the FEED (the replayable system of record —
-        DLQ rows carry identity, not payloads, and the event-time snapshot
-        lives in the feed row), push them through `fn` (default: the
-        trigger's current callback, i.e. whatever a library upgrade fixed
-        it to), and append the results to the sink. No explicit DLQ swap
-        is needed: the sink keeps every status and the exactly-once
-        collapse prefers 'ok', so a replayed success retires its error row
-        while a still-failing record stays dead. Feed rows trimmed away
-        since the failure are reported as "unreplayable" and REMAIN in the
-        DLQ view. Returns {"replayed", "ok", "still_failing",
-        "unreplayable"}. Run while the trigger is stopped; stats shift
-        replayed successes n_failed → n_success."""
-        lib = self.engine._libraries[lib_name]
-        spec = lib.keyspace_triggers[trigger]
-        fn = fn or spec["fn"]
-        if fn is None:
-            raise ValueError(
-                "replay needs a callback (declarative triggers do not "
-                "produce per-record errors)"
-            )
-        sink_dir = os.path.join(self.work_dir, "cdc_sink", lib_name, trigger)
+    def _replay_plan(self, lib_name, trigger, spec, fn, acl_regex):
+        """CDC layout: failed records re-read from the FEED (the event-time
+        snapshot lives in the feed row), results appended to the sink. No
+        DLQ swap is needed: the sink keeps every status and the
+        exactly-once collapse prefers 'ok', so a replayed success retires
+        its error row while a still-failing record stays dead."""
         failed = self.read_errors(lib_name, trigger).select("seq").distinct()
         n_failed = failed.count()
         if n_failed == 0:
-            return {
-                "replayed": 0,
-                "ok": 0,
-                "still_failing": 0,
-                "unreplayable": 0,
-            }
+            return None
         feed = self.spark.read.schema(CHANGES_SCHEMA).parquet(
             self.changes_dir
         )
         src = feed.join(F.broadcast(failed), ["seq"], "left_semi")
         n_replayed = src.select("seq").distinct().count()
-        n_unreplayable = n_failed - n_replayed
-        processor = _make_cdc_partition_processor(
-            fn,
-            spec["on_trigger_fired"],
-            sink_dir,
-            acl_regex=self.engine.acl_read_regex(
-                getattr(lib, "user", "default")
-            ),
-        )
-        n_ok = n_err = 0
-        for r in (
+        return _Replay(
             src.repartition(
                 self.spark.sparkContext.defaultParallelism, "key"
-            )
-            .sortWithinPartitions("key", "seq")
-            .mapInPandas(processor, _CDC_RESULT_SCHEMA)
-            .collect()
-        ):
-            if r["status"] == "stats":
-                d = json.loads(r["result"])
-                n_ok += d["ok"]
-                n_err += d["err"]
-        qkey = f"{lib_name}.{trigger}"
-        with self._lock:
-            if qkey in self.stats:
-                self.stats[qkey].n_success += n_ok
-                self.stats[qkey].n_failed = max(
-                    0, self.stats[qkey].n_failed - n_ok
-                )
-        return {
-            "replayed": n_replayed,
-            "ok": n_ok,
-            "still_failing": n_err,
-            "unreplayable": n_unreplayable,
-        }
+            ).sortWithinPartitions("key", "seq"),
+            _make_processor(
+                fn,
+                acl_regex,
+                _cdc_records(spec["on_trigger_fired"]),
+                functools.partial(_CdcSink, self._sink_dir(lib_name, trigger)),
+            ),
+            n_failed,
+            n_failed - n_replayed,
+            lambda: None,
+        )
 
     def stop_all(self) -> None:
         if self.bridge is not None:
             self.bridge.detach()
-        for q in self.queries.values():
-            try:
-                q.stop()
-            except Exception:
-                pass
-        self.queries.clear()
-
-    def stop_library(self, lib_name: str) -> None:
-        """Stop every query owned by one library and drop its stats (see
-        _stop_owned)."""
-        _stop_owned(self, lib_name)
+        super().stop_all()

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from redisgears_spark.engine import GearsEngine
+from redisgears_spark.streaming.triggers import read_spool
 
 
 def windowed_stream_agg(
@@ -115,26 +116,6 @@ class WindowedAggRuntime:
     def _ckpt_dir(self) -> str:
         return os.path.join(self.work_dir, "window_ckpt")
 
-    def _source(self) -> DataFrame:
-        from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-
-        raw_schema = (
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        if self.source_adapter is not None:
-            raw = (
-                self.spark.readStream.schema(raw_schema)
-                .option("maxFilesPerTrigger", 8)
-                .parquet(self.spool_dir)
-            )
-            return self.source_adapter(raw)
-        return (
-            self.spark.readStream.schema(STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 8)
-            .parquet(self.spool_dir)
-        )
-
     def start(
         self,
         *,
@@ -143,7 +124,7 @@ class WindowedAggRuntime:
         slide: str | None = None,
         watermark: str = "10 seconds",
     ) -> StreamingQuery:
-        src = self._source()
+        src = read_spool(self.spark, self.spool_dir, self.source_adapter)
         if prefix:
             src = src.filter(F.col("stream_key").startswith(prefix))
         agg = windowed_stream_agg(

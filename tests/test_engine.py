@@ -249,6 +249,59 @@ class TestTimeouts:
             lambda: engine.run_on_key("tkey", "slow", "customer", 42, timeout=1.0),
         )
 
+    def test_call_timeout_cancels_jobs_started_after_deadline(self, engine):
+        """A body that catches its cancelled job's error and starts a second
+        long JVM job does not get to finish it: the call's jobs are
+        cancelled until the body returns, so the second job ends within
+        5 s of the raise, not SUCCEEDED."""
+        import threading
+        import time as _t
+
+        tracker = engine.spark.sparkContext.statusTracker()
+        second_started = threading.Event()
+        jobs_before_second: set = set()
+
+        def scan(client, n):
+            # a fresh DataFrame each time: collecting a cancelled one again
+            # re-raises its failed stage without starting a job
+            return client.spark.range(0, n, 1, 8).selectExpr(
+                "sum(hash(id))"
+            ).collect()
+
+        def stubborn(client, n):
+            try:
+                return scan(client, n)
+            except Exception:  # the deadline cancelled it: scan again
+                pass
+            jobs_before_second.update(tracker.getJobIdsForGroup())
+            second_started.set()
+            return scan(client, n)
+
+        engine.load_library(
+            lambda l: l.register_function("stubborn", stubborn), name="tstub"
+        )
+        engine.call("tstub", "stubborn", 1000)  # warm: the job starts in 1 s
+        with pytest.raises(GearsError, match="aborted"):
+            engine.call("tstub", "stubborn", 8_000_000_000, timeout=1.0)
+        t_raise = _t.monotonic()
+        assert second_started.wait(5), "the body never started its second job"
+
+        def second_jobs() -> set:
+            return set(tracker.getJobIdsForGroup()) - jobs_before_second
+
+        while not second_jobs() and _t.monotonic() - t_raise < 5:
+            _t.sleep(0.02)
+        second = second_jobs()
+        assert second, "the second job was never submitted"
+        while set(tracker.getActiveJobsIds()) & second and _t.monotonic() - t_raise < 5:
+            _t.sleep(0.05)
+        assert not set(tracker.getActiveJobsIds()) & second, (
+            "the second job outlived its call by 5 s"
+        )
+        statuses = [tracker.getJobInfo(j).status for j in second]
+        assert "SUCCEEDED" not in statuses, statuses
+        engine._pool.shutdown(wait=True)  # the body has returned
+
     def test_timed_out_call_counts_once(self, engine):
         """A body that outlives its timeout and then returns leaves one
         failed call: the caller saw the timeout, so the late success is

@@ -1072,6 +1072,49 @@ class TestKeyspaceTriggers:
         finally:
             rt.stop_all()
 
+    def test_same_name_stream_and_keyspace_triggers_list_own_stats(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Stream and keyspace triggers have separate registries, so one
+        library may hold both kinds under one name; each listing row shows
+        the counters of its own kind's runtime, whichever runtime was
+        built first."""
+
+        def setup(l):
+            l.register_stream_trigger("t", prefix="user:", fn=upper_type)
+            l.register_keyspace_trigger("t", prefix="user:", fn=cdc_fails_on_del)
+
+        engine = GearsEngine(spark, sf_dir)
+        lib = engine.load_library(setup, name="twin")
+        spool = str(tmp_path / "twin_spool")
+        os.makedirs(spool)
+        srt = StreamTriggerRuntime(
+            engine, spool, str(tmp_path / "twin_swork"),
+            source_adapter=events_to_stream,
+        )
+        krt = KeyspaceTriggerRuntime(
+            engine, str(tmp_path / "twin_changes"), str(tmp_path / "twin_kwork")
+        )
+        srt.start_trigger(lib, "t")
+        krt.start_trigger(lib, "t")
+        try:
+            krt.append_changes(
+                [{"key": "user:1", "event": "set"}, {"key": "user:2", "event": "del"}]
+            )
+            krt.process_available()
+            srt.process_available()
+            (entry,) = engine.list_libraries(verbose=2)
+            (stream_row,) = entry["stream_triggers"]
+            (keyspace_row,) = entry["keyspace_triggers"]
+            assert keyspace_row["stats"]["n_records"] == 2
+            assert keyspace_row["stats"]["n_failed"] == 1
+            assert "bad change user:2" in keyspace_row["stats"]["last_error"]
+            assert stream_row["stats"]["n_records"] == 0
+            assert stream_row["stats"]["last_error"] is None
+        finally:
+            srt.stop_all()
+            krt.stop_all()
+
 
 class TestWindowedAgg:
     """Event-time windows + watermarks (SURVEY §2.G additive capability —
