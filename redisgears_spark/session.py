@@ -35,8 +35,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # fixture events.ts is parquet TIMESTAMP(NANOS) — read as long,
-        # converted to timestamp in sources.keyspace.load_table
+        # a parquet TIMESTAMP(NANOS) column (pandas-written files) is read
+        # as long; sources.keyspace.load_table converts events.ts back
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Scan-task policy (r14, guide §2.2/§6): ONE task per file, big

@@ -11,15 +11,19 @@ reference docs/docs/examples/Examples.md), so prefix scans
 ``startswith`` filters instead of keyspace SCANs.
 
 Scale note: each table is a plain parquet read — predicate pushdown and
-column pruning reach the scan, and at 100 TB the same code reads a
-partitioned/bucketed layout with no change (partition pruning replaces the
-reference's hash-slot routing).
+column pruning reach the scan. The read carries its schema, taken from one
+parquet footer on the driver, so building a table's DataFrame starts no
+Spark job; a table is one file or a flat directory of part files.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 TABLES = [
     "region",
@@ -52,8 +56,8 @@ def _ensure_session_conf(spark: SparkSession) -> None:
     """The engine may be handed an externally-built SparkSession (the
     driver's). Two confs are load-bearing for correctness and are
     runtime-settable — pin them here so every entry point is safe:
-      * nanosAsLong — events.ts is parquet TIMESTAMP(NANOS), unreadable by
-        Spark otherwise;
+      * nanosAsLong — a parquet TIMESTAMP(NANOS) column (pandas writes
+        one for a datetime64[ns] column) is unreadable by Spark otherwise;
       * UTC session timezone — NTZ→timestamp casts must be tz-neutral to
         match the (UTC-naive) oracle.
     """
@@ -117,15 +121,80 @@ def reclaim_scratch() -> None:
         _SCRATCH_ROOT = None
 
 
+# the footer key under which Spark stores the schema it wrote
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, name: str, path: str) -> StructType:
+    """The Spark schema of table `name` at `path`, read from one parquet
+    footer on the driver, as Spark's ParquetFileFormat.readSchemaFromFooter
+    derives it: a Spark-written footer carries its StructType as JSON; any
+    other maps from its Arrow schema, tz-naive timestamps to timestamp_ntz
+    when the session infers NTZ, nanosecond timestamps to long (nanosAsLong,
+    pinned by _ensure_session_conf) and an all-null column (stored as
+    INT32) to int. A directory reads its first data file (names starting
+    '_' or '.' are not data), as Spark does without mergeSchema. Read on
+    every call: nothing is cached. A type with no mapping here, such as a
+    nested nanosecond timestamp, raises GearsError."""
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from redisgears_spark.engine import GearsError
+
+    file = path
+    if os.path.isdir(path):
+        entries = sorted(e for e in os.listdir(path) if e[0] not in "_.")
+        sub = [e for e in entries if os.path.isdir(os.path.join(path, e))]
+        if sub:
+            raise GearsError(
+                f"table '{name}': {path} holds subdirectory '{sub[0]}'; "
+                "only a file or a flat directory of parquet files is read"
+            )
+        if not entries:
+            raise GearsError(f"table '{name}': no data file in {path}")
+        file = os.path.join(path, entries[0])
+    elif not os.path.exists(path):
+        raise GearsError(f"table '{name}': no parquet file at {path}")
+    schema = pq.read_schema(file)
+    spark_json = (schema.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        return StructType.fromJson(json.loads(spark_json))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    fields = []
+    for f in schema:
+        spark_type = None
+        if pat.is_timestamp(f.type) and f.type.unit == "ns":
+            spark_type = LongType()
+        elif pat.is_null(f.type):
+            spark_type = IntegerType()
+        elif "timestamp[ns" not in str(f.type):
+            try:
+                spark_type = from_arrow_type(f.type, ntz)
+            except PySparkTypeError:
+                pass
+        if spark_type is None:
+            raise GearsError(
+                f"table '{name}': column '{f.name}' has type {f.type}, "
+                f"which has no Spark mapping here ({file})"
+            )
+        fields.append(StructField(f.name, spark_type))
+    return StructType(fields)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Pure `spark.read.parquet` so Catalyst owns
-    pushdown/pruning; no caching — callers that reuse a small dim should
-    broadcast it at the join site instead."""
+    """Read one fixture table: `spark.read` with the schema from the
+    table's parquet footer (_footer_schema), so building the DataFrame runs
+    no Spark job and Catalyst owns pushdown/pruning; no caching — callers
+    that reuse a small dim should broadcast it at the join site instead."""
     _ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # events.ts is parquet TIMESTAMP(NANOS), surfaced as long nanos under
-    # nanosAsLong (see session.py) — normalize to a micro timestamp, same
-    # truncation DuckDB applies when reading nano parquet.
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_footer_schema(spark, name, path)).parquet(path)
+    # a parquet TIMESTAMP(NANOS) ts (pandas-written fixtures; the generated
+    # ones store microseconds) surfaces as long nanos under nanosAsLong —
+    # normalize to a micro timestamp, same truncation DuckDB applies when
+    # reading nano parquet.
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

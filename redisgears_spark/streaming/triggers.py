@@ -352,6 +352,7 @@ class _TriggerRuntime:
 
     trigger_kind: str  # the Library attribute holding this kind's specs
     _sink_root: str  # work_dir subdirectory of the per-trigger sinks
+    _sink_schema: str  # the sink's columns, as every writer writes them
     _id_cols: tuple[str, ...]  # the sink's idempotency key
     _label: str  # how error messages name this kind of trigger
     _declarative_hint: str  # what a refused declarative owner should do
@@ -472,10 +473,13 @@ class _TriggerRuntime:
         and succeeded on a task retry resolves to 'ok'. A stream sink
         holds only 'ok' rows, all with the record's own id_ts, so which
         copy survives is arbitrary: copies differ only when the callback
-        is not deterministic. One shuffle on the key."""
+        is not deterministic. One shuffle on the key. A started trigger
+        with no committed batch yet reads as an empty frame."""
         from pyspark.sql.window import Window as W
 
-        df = self.spark.read.parquet(self._sink_dir(lib_name, trigger))
+        df = self.spark.read.schema(self._sink_schema).parquet(
+            self._sink_dir(lib_name, trigger)
+        )
         if not exactly_once:
             return df
         w = W.partitionBy(*self._id_cols).orderBy(F.col("status").desc())
@@ -660,6 +664,7 @@ class StreamTriggerRuntime(_TriggerRuntime):
 
     trigger_kind = "stream_triggers"
     _sink_root = "sink"
+    _sink_schema = _RESULT_SCHEMA
     _id_cols = ("stream_key", "id")
     _label = "trigger"
     _declarative_hint = (
@@ -1245,7 +1250,8 @@ class StreamTriggerRuntime(_TriggerRuntime):
         tmp = os.path.join(sink, ".compact-tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         (
-            self.spark.read.parquet(*old_files)
+            self.spark.read.schema(_RESULT_SCHEMA)
+            .parquet(*old_files)
             .repartition(target_partitions)
             .write.mode("overwrite")
             .parquet(tmp)
@@ -1432,6 +1438,7 @@ class KeyspaceTriggerRuntime(_TriggerRuntime):
 
     trigger_kind = "keyspace_triggers"
     _sink_root = "cdc_sink"
+    _sink_schema = _CDC_RESULT_SCHEMA
     _id_cols = ("seq",)
     _label = "keyspace trigger"
     _declarative_hint = "use a callback consumer"
@@ -1628,10 +1635,7 @@ class KeyspaceTriggerRuntime(_TriggerRuntime):
         a task retry is not dead). Rows keep (seq, key, event) — seq is
         the change feed's idempotency key, so a fixed callback can re-run
         exactly the failed set. Empty/missing sink → empty DataFrame."""
-        sink_dir = self._sink_dir(lib_name, trigger)
-        if not os.path.isdir(sink_dir) or not any(
-            f.endswith(".parquet") for f in os.listdir(sink_dir)
-        ):
+        if not os.path.isdir(self._sink_dir(lib_name, trigger)):
             return self.spark.createDataFrame([], _CDC_RESULT_SCHEMA)
         return self.read_sink(lib_name, trigger, exactly_once=True).filter(
             F.col("status") == "error"

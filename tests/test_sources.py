@@ -1,16 +1,25 @@
 """Command-log (AOF analog) custom data source: round-trip fidelity,
-per-segment parallelism, and filter pushdown INTO the Python source."""
+per-segment parallelism, and filter pushdown INTO the Python source.
+Keyspace tables: the footer-derived read schema, which builds a table's
+DataFrame without a Spark job and equals what Spark infers."""
 
 from __future__ import annotations
+
+import datetime
+import decimal
+import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from redisgears_spark.engine import GearsClient, GearsEngine, GearsError
 from redisgears_spark.sources.commandlog import (
     _SEQ_SPACE,
     register_commandlog_source,
     write_command_log,
 )
+from redisgears_spark.sources.keyspace import TABLES, load_table
 
 _MS = 1700000000123
 
@@ -434,3 +443,149 @@ def test_fakeredis_generic_type_semantics(tmp_path):
     assert sorted(c.scan_iter(_type="hash")) == ["h"]
     assert sorted(c.scan_iter(_type="stream")) == ["s"]
     assert sorted(c.scan_iter()) == ["h", "k", "s"]
+
+
+# -- keyspace tables: the read schema comes from the parquet footer ---------
+
+def _jobs_run_by(spark, work) -> list[int]:
+    """Ids of the Spark jobs `work()` starts, read from the status tracker
+    by job group. The tracker follows the listener bus in order, so once a
+    later marker job shows up every job of the group has been recorded."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"build-{uuid.uuid4().hex}"
+    for name, fn in ((group, work), (group + "-marker", sc.parallelize([1]).count)):
+        sc.setJobGroup(name, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never recorded"
+        time.sleep(0.01)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def _inferred_schema(spark, sf_dir, name):
+    """What Spark infers for a table, with load_table's events.ts rewrite."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df.schema
+
+
+def _assert_schema_parity(spark, sf_dir, names):
+    # load_table first: it pins the session confs inference depends on
+    built = {n: load_table(spark, sf_dir, n).schema for n in names}
+    assert built == {n: _inferred_schema(spark, sf_dir, n) for n in names}
+
+
+def test_building_a_table_runs_no_spark_job(spark, sf_dir):
+    """Building a table's DataFrame must start no Spark job: no schema
+    inference on the call path of a TFCALL's `client.table`/`lookup`."""
+    jobs = {
+        name: _jobs_run_by(spark, lambda n=name: load_table(spark, sf_dir, n))
+        for name in TABLES
+    }
+    assert jobs == {name: [] for name in TABLES}
+    client = GearsClient(GearsEngine(spark, sf_dir), read_only=True)
+    assert _jobs_run_by(spark, lambda: client.table("orders")) == []
+    assert _jobs_run_by(spark, lambda: client.lookup("customer", 7)) == []
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_matches_inference_on_fixtures(spark, sf_dir, scale):
+    """Every generated scale factor, next to the default test tables."""
+    _assert_schema_parity(spark, os.path.join(os.path.dirname(sf_dir), scale), TABLES)
+
+
+def _pandas_fixture():
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "event_id": [1, 2],
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:00:00.000000001", "2024-01-02 12:00:00.5"]
+            ),  # datetime64[ns]
+            "tz": pd.to_datetime(["2024-01-01", "2024-01-02"]).tz_localize(
+                "Europe/Berlin"
+            ),
+            "us": pd.to_datetime(["2024-01-01", "2024-01-02"]).astype(
+                "datetime64[us]"
+            ),
+            "cat": pd.Categorical(["view", "click"]),
+            "dec": [decimal.Decimal("1.25"), decimal.Decimal("30.50")],
+            "day": [datetime.date(2024, 1, 1), datetime.date(2024, 1, 2)],
+            "vec": [[1.0, 2.0], [3.0]],
+            "none": [None, None],
+        }
+    )
+
+
+def test_footer_schema_matches_inference_on_pandas_files(spark, tmp_path):
+    """ns / tz-aware / categorical / decimal / date / list / all-null
+    columns, in a populated and a zero-row file."""
+    pdf = _pandas_fixture()
+    pdf.to_parquet(tmp_path / "events.parquet")
+    pdf.iloc[:0].to_parquet(tmp_path / "orders.parquet")
+    _assert_schema_parity(spark, str(tmp_path), ["events", "orders"])
+    # the ns ts surfaces as a micro timestamp, like DuckDB's read
+    ts = load_table(spark, str(tmp_path), "events").orderBy("event_id")
+    assert [r["ts"] for r in ts.select("ts").collect()] == [
+        datetime.datetime(2024, 1, 1),
+        datetime.datetime(2024, 1, 2, 12, 0, 0, 500000),
+    ]
+
+
+def test_footer_schema_matches_inference_on_spark_directories(
+    spark, sf_dir, tmp_path
+):
+    """Spark-written multi-part table directories (the schema rides in the
+    footer's row metadata; _SUCCESS and .crc files are not data)."""
+    for name in TABLES:
+        spark.read.parquet(f"{sf_dir}/{name}.parquet").repartition(3).write.parquet(
+            str(tmp_path / f"{name}.parquet")
+        )
+    assert len(os.listdir(tmp_path / "lineitem.parquet")) > 3
+    _assert_schema_parity(spark, str(tmp_path), TABLES)
+
+
+def test_footer_schema_follows_the_session_ntz_setting(spark, sf_dir):
+    """A session that does not infer timestamp_ntz reads the tz-naive
+    fixture timestamps as timestamp, and so must the footer schema."""
+    bare = spark.newSession()
+    bare.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    _assert_schema_parity(bare, sf_dir, TABLES)
+    assert dict(load_table(bare, sf_dir, "orders").dtypes)["o_orderdate"] == (
+        "timestamp"
+    )
+
+
+def test_missing_table_raises_naming_table_and_path(spark, tmp_path):
+    path = str(tmp_path / "orders.parquet")
+    with pytest.raises(GearsError, match=f"'orders'.*{path}"):
+        load_table(spark, str(tmp_path), "orders")
+
+
+def test_unmapped_footer_type_raises_naming_the_column(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array([1], pa.uint32())}),
+        tmp_path / "orders.parquet",
+    )
+    with pytest.raises(GearsError, match="'orders'.*'o_orderkey'.*uint32"):
+        load_table(spark, str(tmp_path), "orders")
+
+
+def test_partitioned_table_directory_raises(spark, sf_dir, tmp_path):
+    spark.read.parquet(f"{sf_dir}/nation.parquet").write.partitionBy(
+        "n_regionkey"
+    ).parquet(str(tmp_path / "nation.parquet"))
+    with pytest.raises(GearsError, match="'nation'.*n_regionkey="):
+        load_table(spark, str(tmp_path), "nation")

@@ -1644,6 +1644,69 @@ class TestSinkCompaction:
         assert spark.read.parquet(sink).sort("id").collect() == before
 
 
+class TestSinkSchema:
+    """read_sink and compact_sink read a sink with the runtime's own
+    schema: no inference job, and a sink with no committed batch yet
+    reads as empty instead of failing UNABLE_TO_INFER_SCHEMA."""
+
+    @staticmethod
+    def _runtimes(spark, sf_dir, spool, work, tmp_path):
+        engine = GearsEngine(spark, sf_dir)
+
+        def setup(lib):
+            lib.register_stream_trigger(
+                "st", prefix="user:", fn=upper_type, window=10**9
+            )
+            lib.register_keyspace_trigger("kt", prefix="user:", fn=cdc_any_event)
+
+        lib = engine.load_library(setup, name="schemalib")
+        stream = StreamTriggerRuntime(
+            engine, spool, work, source_adapter=events_to_stream
+        )
+        cdc = KeyspaceTriggerRuntime(
+            engine, str(tmp_path / "changes"), str(tmp_path / "cdcwork")
+        )
+        return lib, stream, cdc
+
+    def test_read_sink_before_first_batch_is_empty(
+        self, spark, sf_dir, spool, work, tmp_path
+    ):
+        lib, stream, cdc = self._runtimes(spark, sf_dir, spool, work, tmp_path)
+        os.makedirs(spool, exist_ok=True)
+        stream.start_trigger(lib, "st")
+        cdc.start_trigger(lib, "kt")
+        try:
+            for rt, trig in ((stream, "st"), (cdc, "kt")):
+                for exactly_once in (True, False):
+                    sink = rt.read_sink("schemalib", trig, exactly_once)
+                    assert sink.count() == 0
+        finally:
+            stream.stop_all()
+            cdc.stop_all()
+
+    def test_known_schema_equals_inferred_sink_schema(
+        self, spark, sf_dir, spool, work, tmp_path
+    ):
+        lib, stream, cdc = self._runtimes(spark, sf_dir, spool, work, tmp_path)
+        write_slice(spark, sf_dir, spool, 0, 50)
+        cdc.append_changes(
+            [{"seq": 1, "key": "user:1", "event": "hset", "snapshot": {}}]
+        )
+        stream.start_trigger(lib, "st")
+        cdc.start_trigger(lib, "kt")
+        try:
+            stream.process_available()
+            cdc.process_available()
+        finally:
+            stream.stop_all()
+            cdc.stop_all()
+        for rt, trig in ((stream, "st"), (cdc, "kt")):
+            known = rt.read_sink("schemalib", trig, exactly_once=False)
+            inferred = spark.read.parquet(rt._sink_dir("schemalib", trig))
+            assert inferred.count() > 0
+            assert known.schema == inferred.schema
+
+
 class TestCdcExactlyOnceTieBreak:
     def test_retry_then_succeed_resolves_to_ok(self, spark, sf_dir, work):
         """A CDC record that errored on a first task attempt and succeeded
