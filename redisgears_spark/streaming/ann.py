@@ -46,26 +46,16 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import os
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.window import Window as W
 
 from redisgears_spark.engine import GearsEngine, GearsError
-from redisgears_spark.streaming.stateful import StatefulStatsRuntime
-
-_ANN_OUTPUT_SCHEMA = (
-    "cell long, n_vectors bigint, vec_ids array<bigint>, "
-    "qs array<array<bigint>>, nqs array<bigint>"
-)
-_ANN_STATE_SCHEMA = "inv string"
-
-_ROUTED_SCHEMA = "cell long, vec_id long, q array<bigint>, id bigint"
+from redisgears_spark.streaming.stateful import _StatefulRuntime
 
 
 def _quant_half_up(v):
@@ -235,7 +225,7 @@ def _make_cell_reducer(max_per_cell: int | None):
     return reducer
 
 
-class StreamingAnnIvfRuntime(StatefulStatsRuntime):
+class StreamingAnnIvfRuntime(_StatefulRuntime):
     """Continuously-maintained IVF ANN index over a vector stream.
 
     Records carry the vector as a JSON float array in
@@ -243,7 +233,24 @@ class StreamingAnnIvfRuntime(StatefulStatsRuntime):
     module docstring for the routing/state/exactness contract.
     """
 
-    _SINK_KEY = ("cell",)  # sink snapshots key on the cell space
+    _STEM = "ann"
+    _QUERY_NAME = "streaming_ann_ivf"
+    _OUTPUT_SCHEMA = (
+        "cell long, n_vectors bigint, vec_ids array<bigint>, "
+        "qs array<array<bigint>>, nqs array<bigint>"
+    )
+    _STATE_SCHEMA = "inv string"
+    _ROUTED_SCHEMA = "cell long, vec_id long, q array<bigint>, id bigint"
+    _GROUP = "cell"  # sink snapshots key on the cell space
+    _NO_LATEST = (
+        "StreamingAnnIvfRuntime has no per-key stats snapshot — use "
+        "inverted_lists() / topk()"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming ANN runtime "
+        "(state is an index, not per-key stats); use max_per_cell "
+        "for bounded state, stop()/flush() to clear"
+    )
 
     def __init__(
         self,
@@ -268,46 +275,11 @@ class StreamingAnnIvfRuntime(StatefulStatsRuntime):
         # bounded key space: state keys are the IVF cells
         self._state_key_cap = len(self.centroids)
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "ann_ckpt")
+    def _reducer(self) -> Callable:
+        return _make_cell_reducer(self.max_per_cell)
 
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "ann_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        routed = src.select("id", "fields").mapInPandas(
-            _make_router(self.centroids, self.vec_field, self.id_field),
-            _ROUTED_SCHEMA,
-        )
-        out = routed.groupBy("cell").applyInPandasWithState(
-            _make_cell_reducer(self.max_per_cell),
-            _ANN_OUTPUT_SCHEMA,
-            _ANN_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-        sink_dir = self.sink_dir
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(sink_dir)
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName("streaming_ann_ivf")
-                .start()
-            )
-        return self.query
+    def _router(self) -> Callable:
+        return _make_router(self.centroids, self.vec_field, self.id_field)
 
     def inverted_lists(self) -> DataFrame | None:
         """Latest committed inverted list per cell (highest epoch wins —
@@ -465,16 +437,3 @@ class StreamingAnnIvfRuntime(StatefulStatsRuntime):
             queries, nprobe, exclude_self=False
         )
         return scored.filter(F.col("cosine") >= threshold)
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingAnnIvfRuntime has no per-key stats snapshot — use "
-            "inverted_lists() / topk()"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming ANN runtime "
-            "(state is an index, not per-key stats); use max_per_cell "
-            "for bounded state, stop()/flush() to clear"
-        )

@@ -55,31 +55,17 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import os
 import zlib
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
-from redisgears_spark.streaming.stateful import StatefulStatsRuntime
+from redisgears_spark.streaming.stateful import _StatefulRuntime
 from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
-
-_IDX_OUTPUT_SCHEMA = (
-    "bucket long, n_shingles bigint, n_docs bigint, "
-    "shingles array<string>, postings array<array<bigint>>, "
-    "size_ids array<bigint>, sizes array<bigint>"
-)
-_IDX_STATE_SCHEMA = "idx string"
-
-# op: 'post' adds doc_id to a shingle's posting list, 'del' removes it;
-# 'size'/'delsize' maintain the doc-size slice (sh is NULL, n carries
-# the document's distinct-shingle count)
-_ROUTED_SCHEMA = "bucket long, doc_id long, sh string, n long, op string, id bigint"
 
 
 def shingle_bucket(s: str, n_buckets: int) -> int:
@@ -241,7 +227,7 @@ def _make_bucket_reducer():
     return reducer
 
 
-class StreamingShingleIndexRuntime(StatefulStatsRuntime):
+class StreamingShingleIndexRuntime(_StatefulRuntime):
     """Continuously-maintained corpus shingle index over a document
     stream, queryable for incremental batch-vs-corpus dedup.
 
@@ -250,7 +236,28 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
     routing/state/exactness contract.
     """
 
-    _SINK_KEY = ("bucket",)  # sink snapshots key on the bucket space
+    _STEM = "shidx"
+    _QUERY_NAME = "streaming_shingle_index"
+    _OUTPUT_SCHEMA = (
+        "bucket long, n_shingles bigint, n_docs bigint, "
+        "shingles array<string>, postings array<array<bigint>>, "
+        "size_ids array<bigint>, sizes array<bigint>"
+    )
+    _STATE_SCHEMA = "idx string"
+    # op: 'post' adds doc_id to a shingle's posting list, 'del' removes it;
+    # 'size'/'delsize' maintain the doc-size slice (sh is NULL, n carries
+    # the document's distinct-shingle count)
+    _ROUTED_SCHEMA = "bucket long, doc_id long, sh string, n long, op string, id bigint"
+    _GROUP = "bucket"  # sink snapshots key on the bucket space
+    _NO_LATEST = (
+        "StreamingShingleIndexRuntime has no per-key stats snapshot — "
+        "use postings() / doc_sizes() / screen()"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming shingle index "
+        "(state is an index, not per-key stats); emit `del` "
+        "tombstones to remove documents, stop()/flush() to clear"
+    )
 
     def __init__(
         self,
@@ -270,46 +277,11 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
         self.n_buckets = n_buckets
         self._state_key_cap = n_buckets  # bounded key space (buckets)
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "shidx_ckpt")
+    def _reducer(self) -> Callable:
+        return _make_bucket_reducer()
 
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "shidx_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        routed = src.select("id", "fields").mapInPandas(
-            _make_router(self.text_field, self.id_field, self.n_buckets),
-            _ROUTED_SCHEMA,
-        )
-        out = routed.groupBy("bucket").applyInPandasWithState(
-            _make_bucket_reducer(),
-            _IDX_OUTPUT_SCHEMA,
-            _IDX_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-        sink_dir = self.sink_dir
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(sink_dir)
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName("streaming_shingle_index")
-                .start()
-            )
-        return self.query
+    def _router(self) -> Callable:
+        return _make_router(self.text_field, self.id_field, self.n_buckets)
 
     def _latest(self) -> DataFrame | None:
         """Latest committed slice per bucket (highest epoch wins —
@@ -434,17 +406,4 @@ class StreamingShingleIndexRuntime(StatefulStatsRuntime):
                 ).alias("containment"),
             )
             .filter(F.col("jaccard") >= min_jaccard)
-        )
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingShingleIndexRuntime has no per-key stats snapshot — "
-            "use postings() / doc_sizes() / screen()"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming shingle index "
-            "(state is an index, not per-key stats); emit `del` "
-            "tombstones to remove documents, stop()/flush() to clear"
         )

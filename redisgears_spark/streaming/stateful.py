@@ -21,6 +21,12 @@ Scale: state is hash-partitioned by stream_key across executors; each key's
 state is O(1) (a handful of counters), so total state = O(|live keys|),
 evictable per key via the deletion path.
 
+Every stateful runtime — the ten here plus vocab.py, dedupindex.py and
+ann.py — is a `_StatefulRuntime`: it declares its directory stem, query
+name, schemas, group column and refusal messages, and supplies a
+`_reducer()` (plus a `_router()` when its keys are buckets). The query
+wiring, the sink, compaction and the lifecycle exist once, on the skeleton.
+
 API choice: Spark 4.1's newer `transformWithStateInPandas` was evaluated
 and is unavailable in this environment (its driver worker requires the
 `protobuf` Python package); `applyInPandasWithState` provides the same
@@ -29,9 +35,12 @@ per-key state + checkpoint semantics with no extra dependency.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import os
 import shutil
-from typing import Any, Iterator
+import time
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -41,16 +50,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from redisgears_spark.engine import GearsEngine, GearsError
 
-# canonical stream shape (triggers.STREAM_SCHEMA) in, running stats out
-_OUTPUT_SCHEMA = (
-    "stream_key string, n_records bigint, value_cents_total bigint, "
-    "last_id bigint, deleted boolean"
-)
-_STATE_SCHEMA = "n_records bigint, value_cents_total bigint, last_id bigint"
-
 _CTL_FIELD = "__ctl__"
 _CTL_DELETE = "del"
-
 
 
 def _ordered_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
@@ -73,6 +74,312 @@ def _ordered_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True).sort_values(
         "id", kind="mergesort"
     )
+
+
+class _StatefulRuntime:
+    """One applyInPandasWithState query over a stream spool: the shared
+    skeleton of every stateful runtime.
+
+    A runtime declares the class attributes below and a `_reducer()`;
+    the skeleton owns the constructor, the `<stem>_ckpt`/`<stem>_sink`
+    directories, the query wiring, the epoch-stamped sink, compaction,
+    FLUSHALL and the lifecycle. Read APIs stay on the runtimes."""
+
+    # <work_dir>/<stem>_ckpt and <stem>_sink. A renamed stem would
+    # silently start an empty checkpoint (pinned by test).
+    _STEM: str
+    _QUERY_NAME: str
+    _OUTPUT_SCHEMA: str
+    _STATE_SCHEMA: str
+    # the state key, and so the sink's key column: update mode emits one
+    # row per touched key per epoch, so "latest per key" is the live
+    # snapshot. Bucket-routed runtimes key on their bucket/cell column.
+    _GROUP = "stream_key"
+    # the router's output schema, for runtimes that define `_router()`
+    _ROUTED_SCHEMA: str
+    # event-log sinks (sessionize, rate-limit, CUSUM, bloom-dedup) append
+    # one row per closed session / per record: every row IS history, the
+    # sink is already O(events), and latest-per-key compaction would
+    # silently destroy it — those runtimes set this True and
+    # compact_sink() refuses (same fail-loud pattern as their latest()).
+    _SINK_EVENT_LOG = False
+    # why latest() / expire_idle() do not apply, naming the runtime's own
+    # read API — only the stats runtime has a per-key stats snapshot
+    _NO_LATEST: str
+    _NO_EXPIRY: str
+
+    def __init__(self, engine: GearsEngine, spool_dir: str, work_dir: str,
+                 source_adapter=None, files_per_trigger: int | None = None):
+        self.engine = engine
+        self.spark: SparkSession = engine.spark
+        self.spool_dir = spool_dir
+        self.work_dir = work_dir
+        self.source_adapter = source_adapter
+        # micro-batch chunking: files admitted per trigger. Default 8
+        # (the historical contract every runtime test pins). The
+        # registered streamed twins raise it together with a wider
+        # spool so the ROUTER stage runs at full core count — a
+        # file-stream batch plans one task per file, so an 8-file spool
+        # capped the Arrow router at 8-way parallelism on 32 cores.
+        # `None` means the default; an explicit 0 is a caller bug and
+        # refused loudly rather than silently coerced to 8.
+        if files_per_trigger is not None and files_per_trigger < 1:
+            raise ValueError(
+                f"files_per_trigger must be >= 1, got {files_per_trigger}"
+            )
+        self.files_per_trigger = (
+            8 if files_per_trigger is None else files_per_trigger
+        )
+        self.query: StreamingQuery | None = None
+        # wall-clock of each committed epoch, for idle-key expiry
+        self._epoch_seen: dict[int, float] = {}
+
+    @property
+    def _ckpt_dir(self) -> str:
+        return os.path.join(self.work_dir, f"{self._STEM}_ckpt")
+
+    @property
+    def sink_dir(self) -> str:
+        return os.path.join(self.work_dir, f"{self._STEM}_sink")
+
+    def _reducer(self) -> Callable:
+        """The per-group applyInPandasWithState function."""
+        raise NotImplementedError
+
+    def _router(self) -> Callable | None:
+        """An optional mapInPandas kernel over (id, fields) that emits
+        `_ROUTED_SCHEMA` rows keyed by `_GROUP` — bucket-routed runtimes
+        scatter each record into a bounded key space before the state
+        stage."""
+        return None
+
+    # ---- state-shuffle width (r14, guide §2.2) --------------------------
+    #
+    # A stateful micro-batch plans `spark.sql.shuffle.partitions` state
+    # tasks — each paying a state-store open/commit, a Python worker
+    # round-trip and a sink file, REGARDLESS of data volume. At
+    # core-count width those fixed costs dominate dimension-sized
+    # replays: the r13 driver measured every streamed twin FASTER at 8
+    # cores than at 32 (dedup_incremental_streamed 3.1 s @8 vs 4.4 s
+    # @32) because 32-core sessions planned 32 near-empty state tasks.
+    # Width is therefore derived from the BYTES the query will ingest —
+    # one state task per _STATE_TASK_INPUT_BYTES of spool, clamped to
+    # [1, defaultParallelism] — so a small replay runs a handful of
+    # state tasks while corpus-scale ingest still fans out to every
+    # core. The partition count never changes results (state is keyed;
+    # the bit-equality suites pin streamed == batch), and it is pinned
+    # per checkpoint, so one invocation's width cannot leak to another.
+    #
+    # A second cap: a runtime with a BOUNDED key space (the bucketed
+    # index runtimes — 64 shingle buckets, 32 word-freq buckets, 16 IVF
+    # cells) can never use more state tasks than keys; partitions past
+    # that open a store, commit an empty delta and write an empty sink
+    # file for nothing. Subclasses with bounded keys set _state_key_cap.
+    _STATE_TASK_INPUT_BYTES = 64 * 1024
+    _state_key_cap: int | None = None
+
+    def _spool_bytes(self) -> int:
+        total = 0
+        for root, _dirs, files in os.walk(self.spool_dir):
+            for f in files:
+                if f.startswith(("_", ".")):
+                    continue
+                try:
+                    total += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
+        return total
+
+    def _state_partitions(self) -> int:
+        want = -(-self._spool_bytes() // self._STATE_TASK_INPUT_BYTES)  # ceil div
+        cap = self.spark.sparkContext.defaultParallelism
+        if self._state_key_cap is not None:
+            cap = min(cap, self._state_key_cap)
+        return max(1, min(cap, want))
+
+    @contextlib.contextmanager
+    def _sized_state_shuffle(self):
+        """Pin spark.sql.shuffle.partitions to the bytes-derived state
+        width for the duration of query start. Structured Streaming
+        clones the session when the query starts (every batch plans on
+        the clone) and records the partition count in the checkpoint's
+        first offset entry, so restoring the session conf right after
+        .start() returns cannot race the stream (pinned by
+        tests/test_streaming_dedup.py's width test)."""
+        conf = self.spark.conf
+        prev = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(self._state_partitions()))
+        try:
+            yield
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev)
+
+    def _source(self) -> DataFrame:
+        from redisgears_spark.streaming.triggers import read_spool
+
+        return read_spool(
+            self.spark, self.spool_dir, self.source_adapter,
+            self.files_per_trigger,
+        )
+
+    def _start_stateful(self, prefix: str = "") -> StreamingQuery:
+        """The one query shape of every stateful runtime: prefix filter
+        on stream_key, the optional `_router()` mapInPandas, then
+        `_reducer()` per `_GROUP` key through applyInPandasWithState in
+        update mode, into an epoch-stamped parquet sink, checkpointed
+        under `_ckpt_dir` at the bytes-derived state width. Runtimes
+        differ only in the class attributes and `_reducer`/`_router`.
+        The sink also stamps each committed epoch's wall clock, which
+        idle-key expiry reads."""
+        src = self._source()
+        if prefix:
+            src = src.filter(F.col("stream_key").startswith(prefix))
+        router = self._router()
+        if router is not None:
+            src = src.select("id", "fields").mapInPandas(
+                router, self._ROUTED_SCHEMA
+            )
+        out = src.groupBy(self._GROUP).applyInPandasWithState(
+            self._reducer(),
+            self._OUTPUT_SCHEMA,
+            self._STATE_SCHEMA,
+            "update",
+            GroupStateTimeout.NoTimeout,
+        )
+        os.makedirs(self.sink_dir, exist_ok=True)
+
+        def sink(batch_df: DataFrame, epoch_id: int) -> None:
+            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
+                "append"
+            ).parquet(self.sink_dir)
+            self._epoch_seen[epoch_id] = time.time()
+
+        with self._sized_state_shuffle():
+            self.query = (
+                out.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", self._ckpt_dir)
+                .outputMode("update")
+                .queryName(self._QUERY_NAME)
+                .start()
+            )
+        return self.query
+
+    def start(self, prefix: str = "") -> StreamingQuery:
+        return self._start_stateful(prefix)
+
+    def _sink_df(self) -> DataFrame | None:
+        """The epoch-stamped sink as a DataFrame, or None before the
+        first committed batch. Read with the schema it was written with
+        (`F.lit(epoch_id)` writes an int), so a read starts no Spark
+        job to infer it."""
+        if not glob.glob(os.path.join(self.sink_dir, "*.parquet")):
+            return None
+        return self.spark.read.schema(
+            f"{self._OUTPUT_SCHEMA}, epoch int"
+        ).parquet(self.sink_dir)
+
+    def _append_tombstones(self, rows: list[tuple[str, int]]) -> None:
+        """Append one `del` control record per (stream_key, id) to the
+        spool — the deferred-job pattern expiry and force-close share;
+        drain the query to apply."""
+        from redisgears_spark.streaming.triggers import STREAM_SCHEMA
+
+        pdf = pd.DataFrame(
+            [
+                {
+                    "stream_key": key,
+                    "id": rec_id,
+                    "id_ts": pd.Timestamp("2024-01-01"),
+                    "fields": {_CTL_FIELD: _CTL_DELETE},
+                    "record": None,
+                }
+                for key, rec_id in rows
+            ]
+        )
+        self.spark.createDataFrame(pdf, STREAM_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(self.spool_dir)
+
+    def latest(self) -> dict[str, dict]:
+        raise GearsError(self._NO_LATEST)
+
+    def expire_idle(self, ttl_seconds: float) -> list[str]:
+        raise GearsError(self._NO_EXPIRY)
+
+    def process_available(self) -> None:
+        if self.query is not None:
+            self.query.processAllAvailable()
+
+    def stop(self) -> None:
+        if self.query is not None:
+            try:
+                self.query.stop()
+            except Exception:
+                pass
+            self.query = None
+
+    # -- sink compaction (the trim/maintain() discipline, retention.py) ------
+
+    def compact_sink(self) -> int:
+        """Rewrite the sink to only the LATEST-epoch rows per key —
+        the maintenance step that bounds sink growth at O(state) instead
+        of O(epochs × state) (update mode re-emits a key's full snapshot
+        every epoch it changes, so superseded epochs are dead weight).
+        Run it under the same maintenance cadence as stream trim
+        (retention.apply_retention) — the reference also defers
+        trim/expiry to post-notification maintenance rather than doing
+        it inline.
+
+        A key's snapshot may span several rows in one epoch (the
+        heavy-hitters top-k emits one row per rank), so compaction keeps
+        EVERY row of the key's highest epoch (left-semi join on the
+        per-key max), never a single max_by row — lossless for single-
+        and multi-row snapshots alike. Event-log runtimes (sessionize,
+        rate-limit, CUSUM, bloom-dedup) have nothing compactable — every
+        row is history — and refuse loudly instead.
+
+        The retained rows keep their ORIGINAL epoch numbers, and
+        checkpointed epoch ids are monotonic across restarts, so rows
+        appended after a compaction still supersede compacted ones in
+        every latest-per-key read. Requires the query to be stopped
+        (the sink directory is swapped atomically underneath the
+        readers). Returns the row count after compaction."""
+        if self._SINK_EVENT_LOG:
+            raise GearsError(
+                f"{type(self).__name__} sink is an event log (one row "
+                "per event, no superseded snapshots) — latest-per-key "
+                "compaction would destroy history; bound growth with "
+                "expiry/trim of the SOURCE instead"
+            )
+        if self.query is not None:
+            raise GearsError(
+                "compact_sink requires the streaming query to be "
+                "stopped — stop() first, compact, then start() resumes "
+                "from the checkpoint"
+            )
+        df = self._sink_df()
+        if df is None:
+            return 0
+        maxe = df.groupBy(self._GROUP).agg(F.max("epoch").alias("epoch"))
+        latest = df.join(maxe, [self._GROUP, "epoch"], "left_semi")
+        tmp = self.sink_dir + "_compacting"
+        shutil.rmtree(tmp, ignore_errors=True)
+        # the write materializes `latest` fully before the swap deletes
+        # its input files
+        latest.coalesce(8).write.parquet(tmp)
+        shutil.rmtree(self.sink_dir)
+        os.rename(tmp, self.sink_dir)
+        return self._sink_df().count()
+
+    # -- FLUSHALL (lib.rs:1627-1640): drop stream state, keep registry -------
+
+    def flush(self) -> None:
+        """Clear all streaming state (checkpoints + sink), keep the engine
+        registry intact — the FLUSHALL contract: consumers restart from a
+        clean slate, registrations survive."""
+        self.stop()
+        for d in (self._ckpt_dir, self.sink_dir):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def _running_stats(
@@ -134,196 +441,23 @@ def _running_stats(
     )
 
 
-class StatefulStatsRuntime:
-    """Owns the stateful running-stats query for a stream source."""
 
-    # the sink's key column(s): update mode emits one row per touched key
-    # per epoch, so "latest per key" is the live snapshot. Index-shaped
-    # runtimes (ANN cells, shingle/word-freq buckets) override this.
-    _SINK_KEY: tuple[str, ...] = ("stream_key",)
-    # event-log sinks (sessionize, rate-limit, CUSUM, bloom-dedup) append
-    # one row per closed session / per record: every row IS history, the
-    # sink is already O(events), and latest-per-key compaction would
-    # silently destroy it — those runtimes set this True and
-    # compact_sink() refuses (same fail-loud pattern as their latest()).
-    _SINK_EVENT_LOG: bool = False
+class StatefulStatsRuntime(_StatefulRuntime):
+    """Owns the stateful running-stats query for a stream source — the
+    one runtime whose sink is a per-key stats snapshot, so the only one
+    with working latest()/expire_idle()."""
 
-    def __init__(self, engine: GearsEngine, spool_dir: str, work_dir: str,
-                 source_adapter=None, files_per_trigger: int | None = None):
-        self.engine = engine
-        self.spark: SparkSession = engine.spark
-        self.spool_dir = spool_dir
-        self.work_dir = work_dir
-        self.source_adapter = source_adapter
-        # micro-batch chunking: files admitted per trigger. Default 8
-        # (the historical contract every runtime test pins). The
-        # registered streamed twins raise it together with a wider
-        # spool so the ROUTER stage runs at full core count — a
-        # file-stream batch plans one task per file, so an 8-file spool
-        # capped the Arrow router at 8-way parallelism on 32 cores.
-        # `None` means the default; an explicit 0 is a caller bug and
-        # refused loudly rather than silently coerced to 8.
-        if files_per_trigger is not None and files_per_trigger < 1:
-            raise ValueError(
-                f"files_per_trigger must be >= 1, got {files_per_trigger}"
-            )
-        self.files_per_trigger = (
-            8 if files_per_trigger is None else files_per_trigger
-        )
-        self.query: StreamingQuery | None = None
-        # wall-clock of each committed epoch, for idle-key expiry
-        self._epoch_seen: dict[int, float] = {}
+    _STEM = "stateful"
+    _QUERY_NAME = "stateful_stats"
+    # canonical stream shape (triggers.STREAM_SCHEMA) in, running stats out
+    _OUTPUT_SCHEMA = (
+        "stream_key string, n_records bigint, value_cents_total bigint, "
+        "last_id bigint, deleted boolean"
+    )
+    _STATE_SCHEMA = "n_records bigint, value_cents_total bigint, last_id bigint"
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "stateful_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "stateful_sink")
-
-    # ---- state-shuffle width (r14, guide §2.2) --------------------------
-    #
-    # A stateful micro-batch plans `spark.sql.shuffle.partitions` state
-    # tasks — each paying a state-store open/commit, a Python worker
-    # round-trip and a sink file, REGARDLESS of data volume. At
-    # core-count width those fixed costs dominate dimension-sized
-    # replays: the r13 driver measured every streamed twin FASTER at 8
-    # cores than at 32 (dedup_incremental_streamed 3.1 s @8 vs 4.4 s
-    # @32) because 32-core sessions planned 32 near-empty state tasks.
-    # Width is therefore derived from the BYTES the query will ingest —
-    # one state task per _STATE_TASK_INPUT_BYTES of spool, clamped to
-    # [1, defaultParallelism] — so a small replay runs a handful of
-    # state tasks while corpus-scale ingest still fans out to every
-    # core. The partition count never changes results (state is keyed;
-    # the bit-equality suites pin streamed == batch), and it is pinned
-    # per checkpoint, so one invocation's width cannot leak to another.
-    #
-    # A second cap: a runtime with a BOUNDED key space (the bucketed
-    # index runtimes — 64 shingle buckets, 32 word-freq buckets, 16 IVF
-    # cells) can never use more state tasks than keys; partitions past
-    # that open a store, commit an empty delta and write an empty sink
-    # file for nothing. Subclasses with bounded keys set _state_key_cap.
-    _STATE_TASK_INPUT_BYTES = 64 * 1024
-    _state_key_cap: int | None = None
-
-    def _spool_bytes(self) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(self.spool_dir):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return total
-
-    def _state_partitions(self) -> int:
-        want = -(-self._spool_bytes() // self._STATE_TASK_INPUT_BYTES)  # ceil div
-        cap = self.spark.sparkContext.defaultParallelism
-        if self._state_key_cap is not None:
-            cap = min(cap, self._state_key_cap)
-        return max(1, min(cap, want))
-
-    def _sized_state_shuffle(self):
-        """Context manager pinning spark.sql.shuffle.partitions to the
-        bytes-derived state width for the duration of query start.
-        Structured Streaming clones the session when the query starts
-        (every batch plans on the clone) and records the partition
-        count in the checkpoint's first offset entry, so restoring the
-        session conf right after .start() returns cannot race the
-        stream (pinned by tests/test_streaming_dedup.py's width test)."""
-        import contextlib
-
-        runtime = self
-
-        @contextlib.contextmanager
-        def _pin():
-            conf = runtime.spark.conf
-            prev = conf.get("spark.sql.shuffle.partitions")
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(runtime._state_partitions()),
-            )
-            try:
-                yield
-            finally:
-                conf.set("spark.sql.shuffle.partitions", prev)
-
-        return _pin()
-
-    def _source(self) -> DataFrame:
-        from redisgears_spark.streaming.triggers import read_spool
-
-        return read_spool(
-            self.spark, self.spool_dir, self.source_adapter,
-            self.files_per_trigger,
-        )
-
-    def _start_stateful(
-        self,
-        reducer,
-        out_schema: str,
-        state_schema: str,
-        name: str,
-        prefix: str = "",
-        track_epochs: bool = False,
-    ) -> StreamingQuery:
-        """Shared start shape for every stateful runtime in this module
-        (stats / heavy-hitters / sessionize / rate-limit): prefix filter,
-        applyInPandasWithState in update mode, epoch-stamped parquet
-        sink, checkpoint. One place for the query wiring — the four
-        runtimes differ only in reducer, schemas, and query name."""
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        out = src.groupBy("stream_key").applyInPandasWithState(
-            reducer,
-            out_schema,
-            state_schema,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(self.sink_dir)
-            if track_epochs:
-                import time as _time
-
-                self._epoch_seen[epoch_id] = _time.time()
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName(name)
-                .start()
-            )
-        return self.query
-
-    def _sink_df(self) -> DataFrame | None:
-        """The epoch-stamped sink as a DataFrame, or None before the
-        first committed batch."""
-        import glob
-
-        if not glob.glob(os.path.join(self.sink_dir, "*.parquet")):
-            return None
-        return self.spark.read.parquet(self.sink_dir)
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _running_stats,
-            _OUTPUT_SCHEMA,
-            _STATE_SCHEMA,
-            "stateful_stats",
-            prefix,
-            track_epochs=True,
-        )
+    def _reducer(self) -> Callable:
+        return _running_stats
 
     def latest(self) -> dict[str, dict]:
         """Most recent state snapshot per stream_key from the sink.
@@ -345,18 +479,6 @@ class StatefulStatsRuntime:
             for row in latest.collect()
         }
 
-    def process_available(self) -> None:
-        if self.query is not None:
-            self.query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self.query is not None:
-            try:
-                self.query.stop()
-            except Exception:
-                pass
-            self.query = None
-
     # -- TTL expiry (expiry-driven events, KeySpace_Triggers.md:11-13) -------
 
     def expire_idle(self, ttl_seconds: float) -> list[str]:
@@ -367,97 +489,17 @@ class StatefulStatsRuntime:
         reference also defers expiry/trim to post-notification jobs rather
         than doing it inline). Returns the expired keys; drain the query
         afterwards to apply."""
-        import time as _time
-
-        now = _time.time()
-        expired = []
+        now = time.time()
         rows = []
         for key, rec in self.latest().items():
             if rec["deleted"]:
                 continue
             seen = self._epoch_seen.get(rec["epoch"])
             if seen is not None and now - seen > ttl_seconds:
-                expired.append(key)
-                rows.append(
-                    {
-                        "stream_key": key,
-                        "id": rec["last_id"] + 1,
-                        "id_ts": pd.Timestamp("2024-01-01"),
-                        "fields": {_CTL_FIELD: _CTL_DELETE},
-                        "record": None,
-                    }
-                )
+                rows.append((key, rec["last_id"] + 1))
         if rows:
-            from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-
-            self.spark.createDataFrame(
-                pd.DataFrame(rows), STREAM_SCHEMA
-            ).coalesce(1).write.mode("append").parquet(self.spool_dir)
-        return expired
-
-    # -- sink compaction (the trim/maintain() discipline, retention.py) ------
-
-    def compact_sink(self) -> int:
-        """Rewrite the sink to only the LATEST-epoch rows per key —
-        the maintenance step that bounds sink growth at O(state) instead
-        of O(epochs × state) (update mode re-emits a key's full snapshot
-        every epoch it changes, so superseded epochs are dead weight).
-        Run it under the same maintenance cadence as stream trim
-        (retention.apply_retention) — the reference also defers
-        trim/expiry to post-notification maintenance rather than doing
-        it inline.
-
-        A key's snapshot may span several rows in one epoch (the
-        heavy-hitters top-k emits one row per rank), so compaction keeps
-        EVERY row of the key's highest epoch (left-semi join on the
-        per-key max), never a single max_by row — lossless for single-
-        and multi-row snapshots alike. Event-log runtimes (sessionize,
-        rate-limit, CUSUM, bloom-dedup) have nothing compactable — every
-        row is history — and refuse loudly instead.
-
-        The retained rows keep their ORIGINAL epoch numbers, and
-        checkpointed epoch ids are monotonic across restarts, so rows
-        appended after a compaction still supersede compacted ones in
-        every latest-per-key read. Requires the query to be stopped
-        (the sink directory is swapped atomically underneath the
-        readers). Returns the row count after compaction."""
-        if self._SINK_EVENT_LOG:
-            raise GearsError(
-                f"{type(self).__name__} sink is an event log (one row "
-                "per event, no superseded snapshots) — latest-per-key "
-                "compaction would destroy history; bound growth with "
-                "expiry/trim of the SOURCE instead"
-            )
-        if self.query is not None:
-            raise GearsError(
-                "compact_sink requires the streaming query to be "
-                "stopped — stop() first, compact, then start() resumes "
-                "from the checkpoint"
-            )
-        df = self._sink_df()
-        if df is None:
-            return 0
-        key_cols = list(self._SINK_KEY)
-        maxe = df.groupBy(*key_cols).agg(F.max("epoch").alias("epoch"))
-        latest = df.join(maxe, key_cols + ["epoch"], "left_semi")
-        tmp = self.sink_dir + "_compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        # the write materializes `latest` fully before the swap deletes
-        # its input files
-        latest.coalesce(8).write.parquet(tmp)
-        shutil.rmtree(self.sink_dir)
-        os.rename(tmp, self.sink_dir)
-        return self.spark.read.parquet(self.sink_dir).count()
-
-    # -- FLUSHALL (lib.rs:1627-1640): drop stream state, keep registry -------
-
-    def flush(self) -> None:
-        """Clear all streaming state (checkpoints + sink), keep the engine
-        registry intact — the FLUSHALL contract: consumers restart from a
-        clean slate, registrations survive."""
-        self.stop()
-        for d in (self._ckpt_dir, self.sink_dir):
-            shutil.rmtree(d, ignore_errors=True)
+            self._append_tombstones(rows)
+        return [key for key, _ in rows]
 
 
 # ---------------------------------------------------------------------------
@@ -470,13 +512,6 @@ class StatefulStatsRuntime:
 # checkpoint. MG guarantee carries over: after N records on a key, any
 # item with true count > N/(cap+1) is present, and every estimate is
 # within N/(cap+1) of truth.
-_HH_OUTPUT_SCHEMA = (
-    "stream_key string, item string, est_count bigint, "
-    "n_records bigint, rank bigint"
-)
-# counters as a JSON object column — MG state is a bounded dict
-# (≤ cap entries), far below any state-store row limit
-_HH_STATE_SCHEMA = "mg string, n_records bigint"
 
 
 def _make_hh_reducer(field: str, cap: int, topk: int):
@@ -522,7 +557,7 @@ def _make_hh_reducer(field: str, cap: int, topk: int):
     return reducer
 
 
-class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
+class StreamingHeavyHittersRuntime(_StatefulRuntime):
     """Per-stream-key streaming heavy hitters: a Misra-Gries summary per
     key in the state store, the current top-k emitted every micro-batch.
     The batch two-phase MG (text_heavy_hitters) answers "top items ever";
@@ -532,6 +567,25 @@ class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
 
     State per key is ≤ `cap` counters; total state O(|keys| * cap).
     """
+
+    _STEM = "hh"  # separate checkpoint from the stats query
+    _QUERY_NAME = "streaming_heavy_hitters"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, item string, est_count bigint, "
+        "n_records bigint, rank bigint"
+    )
+    # counters as a JSON object column — MG state is a bounded dict
+    # (≤ cap entries), far below any state-store row limit
+    _STATE_SCHEMA = "mg string, n_records bigint"
+    _NO_LATEST = (
+        "StreamingHeavyHittersRuntime has no per-key stats snapshot — "
+        "use top() for the current top-k per stream_key"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the heavy-hitters runtime "
+        "(its state is bounded Misra-Gries counters, not per-key "
+        "stats with tombstones); stop()/flush() clear state"
+    )
 
     def __init__(
         self,
@@ -548,22 +602,8 @@ class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
         self.cap = cap
         self.topk = topk
 
-    @property
-    def _ckpt_dir(self) -> str:  # separate checkpoint from the stats query
-        return os.path.join(self.work_dir, "hh_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "hh_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_hh_reducer(self.field, self.cap, self.topk),
-            _HH_OUTPUT_SCHEMA,
-            _HH_STATE_SCHEMA,
-            "streaming_heavy_hitters",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_hh_reducer(self.field, self.cap, self.topk)
 
     def top(self) -> dict[str, list[tuple[str, int]]]:
         """Latest top-k per stream_key: rows from each key's highest
@@ -590,35 +630,10 @@ class StreamingHeavyHittersRuntime(StatefulStatsRuntime):
             )
         return out
 
-    # The inherited stats surface does not apply here: the hh sink rows
-    # (stream_key, item, est_count, n_records, rank, epoch) carry no
-    # `deleted`/`last_id` columns, so the base latest()/expire_idle()
-    # would crash mid-iteration. Fail loudly with the right API instead.
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingHeavyHittersRuntime has no per-key stats snapshot — "
-            "use top() for the current top-k per stream_key"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the heavy-hitters runtime "
-            "(its state is bounded Misra-Gries counters, not per-key "
-            "stats with tombstones); stop()/flush() clear state"
-        )
-
 
 # ---------------------------------------------------------------------------
 # streaming sessionization (round 6)
 # ---------------------------------------------------------------------------
-
-# closed sessions out; the open session lives only in the state store
-_SESS_OUTPUT_SCHEMA = (
-    "stream_key string, session_start_id bigint, session_end_id bigint, "
-    "n_events bigint, close_reason string"
-)
-_SESS_STATE_SCHEMA = "session_start_id bigint, last_id bigint, n_events bigint"
 
 
 def _make_sessionizer(gap: int):
@@ -685,7 +700,7 @@ def _make_sessionizer(gap: int):
     return sessionize
 
 
-class StreamingSessionizeRuntime(StatefulStatsRuntime):
+class StreamingSessionizeRuntime(_StatefulRuntime):
     """Streaming gap sessionization — the batch `session_windows` query's
     continuous twin: per stream_key, group consecutive records whose id
     gap stays within `gap`, emitting each session exactly once when it
@@ -696,7 +711,23 @@ class StreamingSessionizeRuntime(StatefulStatsRuntime):
     axis: ms*2^20+seq); pass `gap` in the same packed units.
     """
 
+    _STEM = "sess"
+    _QUERY_NAME = "streaming_sessionize"
+    # closed sessions out; the open session lives only in the state store
+    _OUTPUT_SCHEMA = (
+        "stream_key string, session_start_id bigint, session_end_id bigint, "
+        "n_events bigint, close_reason string"
+    )
+    _STATE_SCHEMA = "session_start_id bigint, last_id bigint, n_events bigint"
     _SINK_EVENT_LOG = True  # closed-session log: one row per session; compaction would destroy it
+    _NO_LATEST = (
+        "StreamingSessionizeRuntime has no stats snapshot — use "
+        "sessions() for the closed-session log"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the sessionize runtime — "
+        "close_key() force-closes an open session"
+    )
 
     def __init__(
         self,
@@ -709,39 +740,14 @@ class StreamingSessionizeRuntime(StatefulStatsRuntime):
         super().__init__(engine, spool_dir, work_dir, source_adapter)
         self.gap = gap
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "sess_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "sess_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_sessionizer(self.gap),
-            _SESS_OUTPUT_SCHEMA,
-            _SESS_STATE_SCHEMA,
-            "streaming_sessionize",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_sessionizer(self.gap)
 
     def close_key(self, stream_key: str, at_id: int) -> None:
         """Force-close a key's open session by emitting the `del`
         control record into the spool (the deferred-job pattern the
         stats runtime uses for expiry); drain the query to apply."""
-        from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-
-        row = {
-            "stream_key": stream_key,
-            "id": at_id,
-            "id_ts": pd.Timestamp("2024-01-01"),
-            "fields": {_CTL_FIELD: _CTL_DELETE},
-            "record": None,
-        }
-        self.spark.createDataFrame(
-            pd.DataFrame([row]), STREAM_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(self.spool_dir)
+        self._append_tombstones([(stream_key, at_id)])
 
     def sessions(self) -> list[dict]:
         """All closed sessions, ordered (each was emitted exactly once)."""
@@ -754,30 +760,10 @@ class StreamingSessionizeRuntime(StatefulStatsRuntime):
         )
         return out
 
-    # closed-session sinks have no deleted/last_id columns; the base
-    # stats surface would crash — fail loudly with the right API
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingSessionizeRuntime has no stats snapshot — use "
-            "sessions() for the closed-session log"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the sessionize runtime — "
-            "close_key() force-closes an open session"
-        )
-
 
 # ---------------------------------------------------------------------------
 # streaming rate limiter (round 6)
 # ---------------------------------------------------------------------------
-
-_RL_OUTPUT_SCHEMA = (
-    "stream_key string, id bigint, admitted boolean, n_in_window bigint"
-)
-# sliding log of ADMITTED ids — bounded by the quota itself
-_RL_STATE_SCHEMA = "recent array<bigint>"
 
 
 def _make_rate_limiter(window: int, limit: int):
@@ -817,7 +803,7 @@ def _make_rate_limiter(window: int, limit: int):
     return rate_limit
 
 
-class StreamingRateLimitRuntime(StatefulStatsRuntime):
+class StreamingRateLimitRuntime(_StatefulRuntime):
     """Continuous sliding-window rate limiting — THE canonical RedisGears
     recipe (a keyspace trigger bumping a windowed per-key counter), here
     as a stateful streaming operator: per stream_key, admit a record iff
@@ -829,7 +815,22 @@ class StreamingRateLimitRuntime(StatefulStatsRuntime):
     checkpointed, so quota survives restarts.
     """
 
+    _STEM = "rl"
+    _QUERY_NAME = "streaming_rate_limit"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, id bigint, admitted boolean, n_in_window bigint"
+    )
+    # sliding log of ADMITTED ids — bounded by the quota itself
+    _STATE_SCHEMA = "recent array<bigint>"
     _SINK_EVENT_LOG = True  # verdict log: one row per record; compaction would destroy it
+    _NO_LATEST = (
+        "StreamingRateLimitRuntime has no stats snapshot — use "
+        "decisions() for the admit/throttle log"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the rate-limit runtime — "
+        "state is already bounded at `limit` ids per key"
+    )
 
     def __init__(
         self,
@@ -844,22 +845,8 @@ class StreamingRateLimitRuntime(StatefulStatsRuntime):
         self.window = window
         self.limit = limit
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "rl_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "rl_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_rate_limiter(self.window, self.limit),
-            _RL_OUTPUT_SCHEMA,
-            _RL_STATE_SCHEMA,
-            "streaming_rate_limit",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_rate_limiter(self.window, self.limit)
 
     def decisions(self) -> list[dict]:
         """All admit/throttle decisions, (stream_key, id)-ordered."""
@@ -870,31 +857,10 @@ class StreamingRateLimitRuntime(StatefulStatsRuntime):
         out.sort(key=lambda r: (r["stream_key"], r["id"]))
         return out
 
-    # decision sinks have no deleted/last_id columns; fail loudly
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingRateLimitRuntime has no stats snapshot — use "
-            "decisions() for the admit/throttle log"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the rate-limit runtime — "
-            "state is already bounded at `limit` ids per key"
-        )
-
 
 # ---------------------------------------------------------------------------
 # streaming CUSUM drift detector (round 6)
 # ---------------------------------------------------------------------------
-
-_CUSUM_OUTPUT_SCHEMA = (
-    "stream_key string, id bigint, cusum_cents bigint, drift_alarm boolean"
-)
-# the whole detector state is ONE integer per key — CUSUM's recurrence
-# S = max(0, S + x - k) is already incremental, which is why the batch
-# operator needs the prefix closed form and this runtime does not
-_CUSUM_STATE_SCHEMA = "s bigint"
 
 
 def _make_cusum(allowance_cents: int, threshold_cents: int):
@@ -938,7 +904,7 @@ def _make_cusum(allowance_cents: int, threshold_cents: int):
     return cusum
 
 
-class StreamingCusumRuntime(StatefulStatsRuntime):
+class StreamingCusumRuntime(_StatefulRuntime):
     """Continuous CUSUM drift detection per stream key — the online form
     of `events_cusum_drift`: the batch operator must distribute the
     recurrence through its prefix closed form, while the stream keeps
@@ -952,7 +918,25 @@ class StreamingCusumRuntime(StatefulStatsRuntime):
     level being monitored).
     """
 
+    _STEM = "cusum"
+    _QUERY_NAME = "streaming_cusum"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, id bigint, cusum_cents bigint, drift_alarm boolean"
+    )
+    # the whole detector state is ONE integer per key — CUSUM's recurrence
+    # S = max(0, S + x - k) is already incremental, which is why the batch
+    # operator needs the prefix closed form and this runtime does not
+    _STATE_SCHEMA = "s bigint"
     _SINK_EVENT_LOG = True  # score log: one row per record; compaction would destroy it
+    _NO_LATEST = (
+        "StreamingCusumRuntime has no stats snapshot — use scores() "
+        "for the per-record score log"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the CUSUM runtime — a `del` "
+        "control record resets a key's detector; stop()/flush() clear "
+        "state"
+    )
 
     def __init__(
         self,
@@ -967,22 +951,8 @@ class StreamingCusumRuntime(StatefulStatsRuntime):
         self.allowance_cents = allowance_cents
         self.threshold_cents = threshold_cents
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "cusum_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "cusum_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_cusum(self.allowance_cents, self.threshold_cents),
-            _CUSUM_OUTPUT_SCHEMA,
-            _CUSUM_STATE_SCHEMA,
-            "streaming_cusum",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_cusum(self.allowance_cents, self.threshold_cents)
 
     def scores(self) -> list[dict]:
         """All per-record CUSUM scores, (stream_key, id)-ordered."""
@@ -997,12 +967,6 @@ class StreamingCusumRuntime(StatefulStatsRuntime):
 # ---------------------------------------------------------------------------
 # streaming distinct count (round 8): a mergeable HLL in the state store
 # ---------------------------------------------------------------------------
-
-_HLLS_OUTPUT_SCHEMA = (
-    "stream_key string, n_records bigint, estimate bigint, "
-    "n_zero_registers bigint"
-)
-_HLLS_STATE_SCHEMA = "registers string, n_records bigint"
 
 
 def _hll_add(registers: list, value: str, p: int) -> None:
@@ -1077,7 +1041,7 @@ def _make_hll_reducer(field: str, p: int):
     return reducer
 
 
-class StreamingDistinctRuntime(StatefulStatsRuntime):
+class StreamingDistinctRuntime(_StatefulRuntime):
     """Per-stream-key streaming distinct count: one HyperLogLog per key
     in the state store, the current estimate emitted every micro-batch.
     The batch trio (events_hll_user_estimate) answers "how many distinct
@@ -1095,6 +1059,23 @@ class StreamingDistinctRuntime(StatefulStatsRuntime):
     cardinalities raise p like the batch hll_distinct(m) widths.
     """
 
+    _STEM = "hll"
+    _QUERY_NAME = "streaming_hll_distinct"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, n_records bigint, estimate bigint, "
+        "n_zero_registers bigint"
+    )
+    _STATE_SCHEMA = "registers string, n_records bigint"
+    _NO_LATEST = (
+        "StreamingDistinctRuntime has no per-key stats snapshot — "
+        "use estimates() for the current distinct estimates"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming-distinct "
+        "runtime (its state is an HLL register array, not per-key "
+        "stats with tombstones); stop()/flush() clear state"
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1110,22 +1091,8 @@ class StreamingDistinctRuntime(StatefulStatsRuntime):
         self.field = field
         self.p = p
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "hll_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "hll_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_hll_reducer(self.field, self.p),
-            _HLLS_OUTPUT_SCHEMA,
-            _HLLS_STATE_SCHEMA,
-            "streaming_hll_distinct",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_hll_reducer(self.field, self.p)
 
     def estimates(self) -> dict[str, dict]:
         """Latest estimate per stream_key (highest committed epoch)."""
@@ -1152,23 +1119,6 @@ class StreamingDistinctRuntime(StatefulStatsRuntime):
             for r in rows
         }
 
-    # the HLL sink rows carry no deleted/last_id columns; the base stats
-    # surface cannot apply — fail loudly with the right API (the same
-    # contract as the heavy-hitters runtime).
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingDistinctRuntime has no per-key stats snapshot — "
-            "use estimates() for the current distinct estimates"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-distinct "
-            "runtime (its state is an HLL register array, not per-key "
-            "stats with tombstones); stop()/flush() clear state"
-        )
-
 
 # ---------------------------------------------------------------------------
 # streaming distinct count via KMV (round 9): the state-store sketch that is
@@ -1176,12 +1126,6 @@ class StreamingDistinctRuntime(StatefulStatsRuntime):
 # order-statistic estimator — so a live counter and its batch backfill agree
 # exactly (contrast the HLL pair, which shares only the error bound).
 # ---------------------------------------------------------------------------
-
-_KMVS_OUTPUT_SCHEMA = (
-    "stream_key string, n_records bigint, n_in_sketch bigint, "
-    "kth_h bigint, estimate double"
-)
-_KMVS_STATE_SCHEMA = "mins string, n_records bigint"
 
 
 def _kmv_merge(mins: list, value: str, k: int) -> list:
@@ -1255,7 +1199,7 @@ def _make_kmv_reducer(field: str, k: int):
     return reducer
 
 
-class StreamingKmvRuntime(StatefulStatsRuntime):
+class StreamingKmvRuntime(_StatefulRuntime):
     """Per-stream-key streaming distinct count via K-minimum-values: the
     k smallest distinct 32-bit md5-prefix hashes per key live in the
     state store; the estimate is the batch kmv_distinct order statistic.
@@ -1273,6 +1217,23 @@ class StreamingKmvRuntime(StatefulStatsRuntime):
     pinned against the batch builder in tests.
     """
 
+    _STEM = "kmv"
+    _QUERY_NAME = "streaming_kmv_distinct"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, n_records bigint, n_in_sketch bigint, "
+        "kth_h bigint, estimate double"
+    )
+    _STATE_SCHEMA = "mins string, n_records bigint"
+    _NO_LATEST = (
+        "StreamingKmvRuntime has no per-key stats snapshot — use "
+        "estimates() for the current distinct estimates"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming-KMV runtime "
+        "(its state is a k-minimum hash list, not per-key stats "
+        "with tombstones); stop()/flush() clear state"
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1288,22 +1249,8 @@ class StreamingKmvRuntime(StatefulStatsRuntime):
         self.field = field
         self.k = k
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "kmv_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "kmv_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_kmv_reducer(self.field, self.k),
-            _KMVS_OUTPUT_SCHEMA,
-            _KMVS_STATE_SCHEMA,
-            "streaming_kmv_distinct",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_kmv_reducer(self.field, self.k)
 
     def estimates(self) -> dict[str, dict]:
         """Latest estimate per stream_key (highest committed epoch)."""
@@ -1331,29 +1278,10 @@ class StreamingKmvRuntime(StatefulStatsRuntime):
             for r in rows
         }
 
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingKmvRuntime has no per-key stats snapshot — use "
-            "estimates() for the current distinct estimates"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-KMV runtime "
-            "(its state is a k-minimum hash list, not per-key stats "
-            "with tombstones); stop()/flush() clear state"
-        )
-
 
 # ---------------------------------------------------------------------------
 # Streaming hash-sample quantiles — the 8th stateful runtime (round 10)
 # ---------------------------------------------------------------------------
-
-_HSQS_OUTPUT_SCHEMA = (
-    "stream_key string, n_records bigint, n_sample bigint, "
-    "p25 bigint, p50 bigint, p75 bigint, p90 bigint"
-)
-_HSQS_STATE_SCHEMA = "samp string, n_records bigint"
 
 
 def _hsq_merge(samp: list, row_id: str, value: int, k: int) -> list:
@@ -1430,7 +1358,7 @@ def _make_hsq_reducer(id_field: str, value_field: str, k: int):
     return reducer
 
 
-class StreamingQuantileRuntime(StatefulStatsRuntime):
+class StreamingQuantileRuntime(_StatefulRuntime):
     """Per-stream-key streaming quantiles via the bottom-k-by-hash row
     sample: the k rows whose md5 hash of `id_field` is smallest live in
     the state store with their integer `value_field`; quantiles are
@@ -1451,6 +1379,23 @@ class StreamingQuantileRuntime(StatefulStatsRuntime):
     beyond-reference operator for the training-data-pipeline tier.
     """
 
+    _STEM = "hsq"
+    _QUERY_NAME = "streaming_hash_sample_quantiles"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, n_records bigint, n_sample bigint, "
+        "p25 bigint, p50 bigint, p75 bigint, p90 bigint"
+    )
+    _STATE_SCHEMA = "samp string, n_records bigint"
+    _NO_LATEST = (
+        "StreamingQuantileRuntime has no per-key stats snapshot — use "
+        "quantiles() for the current sample quantiles"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming-quantile "
+        "runtime (its state is a k-minimum sample list, not per-key "
+        "stats with tombstones); stop()/flush() clear state"
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1468,22 +1413,8 @@ class StreamingQuantileRuntime(StatefulStatsRuntime):
         self.value_field = value_field
         self.k = k
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "hsq_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "hsq_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_hsq_reducer(self.id_field, self.value_field, self.k),
-            _HSQS_OUTPUT_SCHEMA,
-            _HSQS_STATE_SCHEMA,
-            "streaming_hash_sample_quantiles",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_hsq_reducer(self.id_field, self.value_field, self.k)
 
     def quantiles(self) -> dict[str, dict]:
         """Latest quantile row per stream_key (highest committed epoch)."""
@@ -1511,31 +1442,10 @@ class StreamingQuantileRuntime(StatefulStatsRuntime):
             for r in rows
         }
 
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingQuantileRuntime has no per-key stats snapshot — use "
-            "quantiles() for the current sample quantiles"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-quantile "
-            "runtime (its state is a k-minimum sample list, not per-key "
-            "stats with tombstones); stop()/flush() clear state"
-        )
-
 
 # ---------------------------------------------------------------------------
 # Streaming Bloom-filter dedup — the 9th stateful runtime (round 10)
 # ---------------------------------------------------------------------------
-
-_BLOOMS_OUTPUT_SCHEMA = (
-    "stream_key string, id bigint, item string, first_seen boolean, "
-    "bits_set bigint"
-)
-_BLOOMS_STATE_SCHEMA = (
-    "bloom string, n_records bigint, n_first bigint, n_suppressed bigint"
-)
 
 
 def _bloom_positions(value: str, m: int, k: int) -> list[int]:
@@ -1618,7 +1528,7 @@ def _make_bloom_dedup(field: str, m: int, k: int):
     return reducer
 
 
-class StreamingBloomDedupRuntime(StatefulStatsRuntime):
+class StreamingBloomDedupRuntime(_StatefulRuntime):
     """Continuous first-seen deduplication per stream_key — the streaming
     half of the dedup family (operators/dedup.py is the batch half): an
     m-bit / k-hash Bloom filter lives in the state store and every
@@ -1649,7 +1559,26 @@ class StreamingBloomDedupRuntime(StatefulStatsRuntime):
     recipe with bounded memory and checkpointed state.
     """
 
+    _STEM = "bloomdedup"
+    _QUERY_NAME = "streaming_bloom_dedup"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, id bigint, item string, first_seen boolean, "
+        "bits_set bigint"
+    )
+    _STATE_SCHEMA = (
+        "bloom string, n_records bigint, n_first bigint, n_suppressed bigint"
+    )
     _SINK_EVENT_LOG = True  # verdict log: one row per record; compaction would destroy it
+    _NO_LATEST = (
+        "StreamingBloomDedupRuntime has no per-key stats snapshot — "
+        "use dedup_stats() for totals or verdicts() for the deduped "
+        "stream"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming Bloom dedup "
+        "runtime (dropping a filter would re-admit duplicates); "
+        "stop()/flush() clear state"
+    )
 
     def __init__(
         self,
@@ -1672,22 +1601,8 @@ class StreamingBloomDedupRuntime(StatefulStatsRuntime):
         self.m = m
         self.k = k
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "bloomdedup_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "bloomdedup_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_bloom_dedup(self.field, self.m, self.k),
-            _BLOOMS_OUTPUT_SCHEMA,
-            _BLOOMS_STATE_SCHEMA,
-            "streaming_bloom_dedup",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_bloom_dedup(self.field, self.m, self.k)
 
     def verdicts(self) -> DataFrame | None:
         """All per-record verdicts committed so far (epoch-stamped), or
@@ -1731,30 +1646,10 @@ class StreamingBloomDedupRuntime(StatefulStatsRuntime):
             for r in rows
         }
 
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingBloomDedupRuntime has no per-key stats snapshot — "
-            "use dedup_stats() for totals or verdicts() for the deduped "
-            "stream"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming Bloom dedup "
-            "runtime (dropping a filter would re-admit duplicates); "
-            "stop()/flush() clear state"
-        )
-
 
 # ---------------------------------------------------------------------------
 # Streaming MinHash signatures — the 10th stateful runtime (round 11)
 # ---------------------------------------------------------------------------
-
-_MHS_OUTPUT_SCHEMA = (
-    "stream_key string, n_records bigint, n_items bigint, "
-    "signature string, bands string"
-)
-_MHS_STATE_SCHEMA = "sig string, n_records bigint, n_items bigint"
 
 _MH_N = 32  # operators/dedup._MINHASH_N — shared family width
 _MH_BANDS = 8
@@ -1859,7 +1754,7 @@ def _make_minhash_reducer(field: str):
     return reducer
 
 
-class StreamingMinHashRuntime(StatefulStatsRuntime):
+class StreamingMinHashRuntime(_StatefulRuntime):
     """Per-stream-key continuous MinHash signature — the live half of the
     near-duplicate family (operators/dedup's MinHash+LSH is the batch
     half): every key's 32-component signature over the VALUES of `field`
@@ -1885,6 +1780,23 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
     many values flow past — the firehose-safe shape.
     """
 
+    _STEM = "minhash"
+    _QUERY_NAME = "streaming_minhash"
+    _OUTPUT_SCHEMA = (
+        "stream_key string, n_records bigint, n_items bigint, "
+        "signature string, bands string"
+    )
+    _STATE_SCHEMA = "sig string, n_records bigint, n_items bigint"
+    _NO_LATEST = (
+        "StreamingMinHashRuntime has no per-key stats snapshot — use "
+        "signatures() for the current sketches"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming-MinHash "
+        "runtime (its state is a min-signature, not per-key stats "
+        "with tombstones); stop()/flush() clear state"
+    )
+
     def __init__(
         self,
         engine: GearsEngine,
@@ -1896,22 +1808,8 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
         super().__init__(engine, spool_dir, work_dir, source_adapter)
         self.field = field
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "minhash_ckpt")
-
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "minhash_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        return self._start_stateful(
-            _make_minhash_reducer(self.field),
-            _MHS_OUTPUT_SCHEMA,
-            _MHS_STATE_SCHEMA,
-            "streaming_minhash",
-            prefix,
-        )
+    def _reducer(self) -> Callable:
+        return _make_minhash_reducer(self.field)
 
     def signatures(self) -> dict[str, dict]:
         """Latest signature + band hashes per stream_key (highest
@@ -1957,16 +1855,3 @@ class StreamingMinHashRuntime(StatefulStatsRuntime):
             )
         a, b = sigs[key_a]["signature"], sigs[key_b]["signature"]
         return sum(1 for x, y in zip(a, b) if x == y) / float(_MH_N)
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingMinHashRuntime has no per-key stats snapshot — use "
-            "signatures() for the current sketches"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming-MinHash "
-            "runtime (its state is a min-signature, not per-key stats "
-            "with tombstones); stop()/flush() clear state"
-        )

@@ -40,25 +40,16 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import os
 import re
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
-from redisgears_spark.streaming.stateful import StatefulStatsRuntime
-
-_WF_OUTPUT_SCHEMA = (
-    "bucket long, n_docs bigint, words array<string>, freqs array<bigint>"
-)
-_WF_STATE_SCHEMA = "wf string"
-
-_ROUTED_SCHEMA = "bucket long, doc_id long, counts string, op string, id bigint"
+from redisgears_spark.streaming.stateful import _StatefulRuntime
 
 
 def _tokens_py(text: str) -> list[str]:
@@ -167,7 +158,7 @@ def _make_bucket_reducer():
     return reducer
 
 
-class StreamingWordFreqRuntime(StatefulStatsRuntime):
+class StreamingWordFreqRuntime(_StatefulRuntime):
     """Continuously-maintained word-frequency table over a document
     stream — the live vocabulary state pipeline_bpe_extend consumes.
 
@@ -175,7 +166,24 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
     in ``fields[id_field]``. See the module docstring for the contract.
     """
 
-    _SINK_KEY = ("bucket",)  # sink snapshots key on the bucket space
+    _STEM = "wf"
+    _QUERY_NAME = "streaming_word_freq"
+    _OUTPUT_SCHEMA = (
+        "bucket long, n_docs bigint, words array<string>, freqs array<bigint>"
+    )
+    _STATE_SCHEMA = "wf string"
+    _ROUTED_SCHEMA = "bucket long, doc_id long, counts string, op string, id bigint"
+    _GROUP = "bucket"  # sink snapshots key on the bucket space
+    _NO_LATEST = (
+        "StreamingWordFreqRuntime has no per-key stats snapshot — "
+        "use word_freq()"
+    )
+    _NO_EXPIRY = (
+        "TTL expiry is not supported for the streaming word-freq "
+        "runtime (state is a frequency table, not per-key stats); "
+        "emit `del` tombstones to remove documents, stop()/flush() "
+        "to clear"
+    )
 
     def __init__(
         self,
@@ -195,46 +203,11 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
         self.n_buckets = n_buckets
         self._state_key_cap = n_buckets  # bounded key space (buckets)
 
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.work_dir, "wf_ckpt")
+    def _reducer(self) -> Callable:
+        return _make_bucket_reducer()
 
-    @property
-    def sink_dir(self) -> str:
-        return os.path.join(self.work_dir, "wf_sink")
-
-    def start(self, prefix: str = "") -> StreamingQuery:
-        src = self._source()
-        if prefix:
-            src = src.filter(F.col("stream_key").startswith(prefix))
-        routed = src.select("id", "fields").mapInPandas(
-            _make_router(self.text_field, self.id_field, self.n_buckets),
-            _ROUTED_SCHEMA,
-        )
-        out = routed.groupBy("bucket").applyInPandasWithState(
-            _make_bucket_reducer(),
-            _WF_OUTPUT_SCHEMA,
-            _WF_STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        os.makedirs(self.sink_dir, exist_ok=True)
-        sink_dir = self.sink_dir
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(sink_dir)
-
-        with self._sized_state_shuffle():
-            self.query = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", self._ckpt_dir)
-                .outputMode("update")
-                .queryName("streaming_word_freq")
-                .start()
-            )
-        return self.query
+    def _router(self) -> Callable:
+        return _make_router(self.text_field, self.id_field, self.n_buckets)
 
     def word_freq(self) -> DataFrame:
         """The live frequency table as (word, freq, symbols) rows — the
@@ -268,18 +241,4 @@ class StreamingWordFreqRuntime(StatefulStatsRuntime):
             .groupBy("word")
             .agg(F.sum("freq").alias("freq"))
             .select("word", "freq", F.split("word", "").alias("symbols"))
-        )
-
-    def latest(self) -> dict[str, dict]:
-        raise GearsError(
-            "StreamingWordFreqRuntime has no per-key stats snapshot — "
-            "use word_freq()"
-        )
-
-    def expire_idle(self, ttl_seconds: float) -> list[str]:
-        raise GearsError(
-            "TTL expiry is not supported for the streaming word-freq "
-            "runtime (state is a frequency table, not per-key stats); "
-            "emit `del` tombstones to remove documents, stop()/flush() "
-            "to clear"
         )
