@@ -14,6 +14,9 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# where Python-worker Unix sockets live; see get_spark
+SOCKET_DIR = "/tmp"
+
 
 def get_spark(
     app_name: str = "redisgears-spark",
@@ -58,6 +61,33 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", "1")
         .config("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Python workers (UDFs, mapInPandas, applyInPandasWithState) talk
+        # to the JVM over a Unix domain socket, not loopback TCP, so a
+        # reused worker's first Arrow batch does not wait out TCP's
+        # delayed ACK. One 4-core probe timed that wait at ~46 ms over TCP
+        # and 10-14 ms here; end to end on perfbench trigger_stream the
+        # difference stayed inside run-to-run noise.
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        # The daemon binds <dir>/.<uuid>.sock (a 42-byte name) and AF_UNIX
+        # caps the whole path at 107 bytes. The default <dir> is
+        # java.io.tmpdir, which a caller may point deep into a run
+        # directory, so the sockets go to the short system temp root.
+        .config("spark.python.unix.domain.socket.dir", SOCKET_DIR)
+        # Checkpoint and state-store files are written without .crc
+        # sidecars. With no native Hadoop library, every local Hadoop file
+        # create forks `chmod` (~8 ms each): a stream trigger's batch
+        # forked 6 times (data + .crc for sources/0/N, offsets/N,
+        # commits/N), and 3 with this setting. On perfbench
+        # trigger_stream (4 cores) the batch's commit phase went from
+        # ~80-90 to ~45 ms and its source phase from ~62 to ~43 ms. Only
+        # the FileContext-based checkpoint manager reads this key; parquet
+        # reads and writes go through fs.file.impl and keep their
+        # checksums. A checkpoint written with .crc files resumes
+        # unchanged.
+        .config(
+            "spark.hadoop.fs.AbstractFileSystem.file.impl",
+            "org.apache.hadoop.fs.local.RawLocalFs",
+        )
         # keep saveAsTable warehouse data out of the repo/cwd
         .config(
             "spark.sql.warehouse.dir",

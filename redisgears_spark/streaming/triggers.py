@@ -772,9 +772,12 @@ class StreamTriggerRuntime(_TriggerRuntime):
         The batch's file list comes from the checkpoint's file-source log
         (`<ckpt>/sources/0/<batchId>` — one JSON entry per file), because
         the DataFrame handed to foreachBatch is a logical-RDD wrapper
-        whose inputFiles() is empty. Reading the log is a driver-side
-        file read, not a Spark job. Falls back to defaultParallelism when
-        the log or the files are missing (non-file sources, remote FS)."""
+        whose inputFiles() is empty. Every 10th batch's log is compacted
+        into `<batchId>.compact`, which lists every file since the start,
+        each with its `batchId`; only this batch's entries count. Reading
+        the log is a driver-side file read, not a Spark job. Falls back to
+        defaultParallelism when the log or the files are missing
+        (non-file sources, remote FS)."""
         default = self.spark.sparkContext.defaultParallelism
         try:
             from urllib.parse import urlparse
@@ -784,8 +787,9 @@ class StreamTriggerRuntime(_TriggerRuntime):
             # so respool-heavy batches are sized by their true volume
             src_root = os.path.join(ckpt_dir, "sources")
             logs = [
-                os.path.join(src_root, i, str(epoch_id))
+                os.path.join(src_root, i, str(epoch_id)) + suffix
                 for i in sorted(os.listdir(src_root))
+                for suffix in ("", ".compact")
             ]
             logs = [p for p in logs if os.path.isfile(p)]
             total = 0
@@ -800,6 +804,10 @@ class StreamTriggerRuntime(_TriggerRuntime):
                         for entry in json.loads(line) if line.startswith(
                             "["
                         ) else [json.loads(line)]:
+                            # a compact log's earlier entries may name
+                            # files that retention has since removed
+                            if entry.get("batchId", epoch_id) != epoch_id:
+                                continue
                             p = urlparse(entry["path"]).path or entry["path"]
                             total += os.path.getsize(p)
             if total <= 0:
@@ -1000,11 +1008,17 @@ class StreamTriggerRuntime(_TriggerRuntime):
                 # checkpoint's file-source log (no extra job) and targets
                 # _ROWS_PER_PYTHON_TASK rows per task, capped at
                 # defaultParallelism — huge backfill batches still get
-                # full parallelism
+                # full parallelism. A one-task batch needs no shuffle at
+                # all: coalesce(1) gathers the scan into one partition and
+                # the sort gives it the same (stream_key, id) order, so the
+                # processor job runs as one stage instead of two
                 nparts = self._python_stage_partitions(ckpt_dir, epoch_id)
-                admitted = matched.repartition(
-                    nparts, "stream_key"
-                ).sortWithinPartitions("stream_key", "id")
+                spread = (
+                    matched.coalesce(1)
+                    if nparts == 1
+                    else matched.repartition(nparts, "stream_key")
+                )
+                admitted = spread.sortWithinPartitions("stream_key", "id")
             else:
                 # declarative trigger: a stateless Catalyst row expression
                 # needs no per-key ordering — no shuffle at all
