@@ -3,13 +3,11 @@
 Why: every PySpark task begins with `worker_util.setup_spark_files`, which
 unconditionally calls `importlib.invalidate_caches()` (pyspark 4.1.2,
 worker_util.py:144). On a worker whose `sys.path` contains zip archives
-(pyspark.zip, py4j-src.zip, the spark-core jar — always, in any stock
-deployment), each call makes every cached `zipimporter` re-read its whole
-archive central directory. Measured on this engine's bench shapes: ~130 ms
-of pure worker CPU per task, before user code runs — 60-80% of the entire
-python-callback micro-batch cost, and the dominant term in the
-trigger-vs-passthrough overhead ratio (a profiled task spends 0.51 s in
-`zipimport._read_directory` out of 0.72 s total).
+(pyspark.zip, py4j-src.zip — always, in any stock deployment), each call
+makes every cached `zipimporter` re-read its whole archive central
+directory before user code runs. On 4 cores a one-task `rdd.map` job
+took ~308 ms when every task paid it and ~76 ms when none did; the call
+alone timed 117-165 ms inside a task.
 
 The invalidation exists so files shipped mid-session (SparkContext.addPyFile)
 become importable. `worker_util.add_path` only mutates `sys.path` when a NEW
@@ -23,11 +21,25 @@ an ALREADY-KNOWN path mid-session no longer invalidates zipimporter caches.
 Directory-based imports are unaffected (FileFinder auto-invalidates via
 directory mtime). This engine never re-ships archives.
 
-`ensure()` is called at the top of every Arrow kernel this engine ships
-(trigger processors, stateful reducers, similarity/multimodal/BPE kernels).
-Each reused worker pays the stock preamble once — its first task — and is
-patched from its second task on. Importing this module on the DRIVER is
-harmless: the driver never runs `setup_spark_files`.
+Where the patch is installed:
+
+- In the Python daemon. `session.get_spark` sets
+  `spark.python.daemon.module` to this module, whose `__main__` calls
+  `ensure()` and then runs `pyspark.daemon.manager()`. Every worker the
+  daemon forks starts patched, so every task takes the short preamble:
+  plain RDD and UDF tasks, and the PythonRDDs behind `createDataFrame`
+  of a local list, which run none of this engine's kernels. A worker
+  still invalidates once, on its first task, when `add_path` adds the
+  session's SparkFiles directory.
+- At the top of every Arrow kernel this engine ships (trigger processors,
+  stateful reducers, similarity/multimodal/BPE kernels), through
+  `ensure()` or `arrow_kernel`. That is the fallback for a session built
+  without `get_spark`'s settings (a bare `SparkSession.builder`): there
+  a worker pays the stock preamble until one of those kernels reaches
+  it, and is patched from its next task on.
+
+Importing this module on the DRIVER is harmless: the driver never runs
+`setup_spark_files`.
 """
 
 from __future__ import annotations
@@ -86,3 +98,15 @@ def arrow_kernel(fn):
         return fn(*args, **kwargs)
 
     return wrapper
+
+
+if __name__ == "__main__":
+    # Python daemon entry point (spark.python.daemon.module). Patch through
+    # the imported module, not this `__main__` copy, so that kernel-site
+    # ensure() calls in forked workers see the patch as already installed.
+    from pyspark import daemon
+
+    from redisgears_spark import workerpatch
+
+    workerpatch.ensure()
+    daemon.manager()
