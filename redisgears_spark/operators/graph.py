@@ -390,8 +390,6 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = scratch_parquet(_pairs(spark, sf_dir), label="graph-pairs")
     n_edges = 2 * pairs.count()  # parquet-metadata count; sizes the strategy
     if n_edges <= _PR_LOCAL_EDGE_LIMIT:
-        from redisgears_spark.workerpatch import arrow_kernel
-
         # coalesce, not repartition: the one kernel task reads the
         # scratch files directly (narrow) instead of paying a
         # pair-list shuffle into a single reducer; mapInArrow hands
@@ -406,7 +404,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return stream.coalesce(1).mapInArrow(
-            arrow_kernel(_pagerank_local_kernel),
+            _pagerank_local_kernel,
             "part_key long, degree long, pagerank_scaled long",
         )
 

@@ -265,11 +265,7 @@ def customer_fuzzy_link(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.size("ms") >= 2)
             .select("ms")
         )
-        from redisgears_spark.workerpatch import arrow_kernel
-
-        matched = members.mapInArrow(
-            arrow_kernel(_match_kernel), "ka long, kb long"
-        ).distinct()
+        matched = members.mapInArrow(_match_kernel, "ka long, kb long").distinct()
     # Dedup the (ka < kb) matches BEFORE the symmetric explode (r14): a
     # pair can collide on several shared variants, and the fixture's
     # dense digit names make matches plentiful (36M at 10x bench scale)

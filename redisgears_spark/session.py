@@ -69,8 +69,9 @@ def get_spark(
         # to the JVM over a Unix domain socket, not loopback TCP, so a
         # reused worker's first Arrow batch does not wait out TCP's
         # delayed ACK. One 4-core probe timed that wait at ~46 ms over TCP
-        # and 10-14 ms here; end to end on perfbench trigger_stream the
-        # difference stayed inside run-to-run noise.
+        # and 10-14 ms here. On perfbench trigger_stream (4 cores, 10
+        # seeds) typical_ms read a median 395 ms with this setting and
+        # 441 ms over TCP.
         .config("spark.python.unix.domain.socket.enabled", "true")
         # The daemon binds <dir>/.<uuid>.sock (a 42-byte name) and AF_UNIX
         # caps the whole path at 107 bytes. The default <dir> is
@@ -78,13 +79,13 @@ def get_spark(
         # directory, so the sockets go to the short system temp root.
         .config("spark.python.unix.domain.socket.dir", SOCKET_DIR)
         # Python workers fork from a daemon that has already installed
-        # workerpatch, so no task pays stock PySpark's per-task
-        # importlib.invalidate_caches() (~230 ms of wall time a task on 4
-        # cores, rereading zip directories), including tasks that run
-        # none of this engine's kernels: plain RDD/UDF tasks and the
-        # PythonRDD behind createDataFrame of a local list. On perfbench
-        # tfcall (4 cores), log_event's Spark time fell from ~770-885 to
-        # ~320-365 ms.
+        # the lazy import-cache invalidator, so no task pays stock
+        # PySpark's per-task importlib.invalidate_caches() (~230 ms of
+        # wall time a task on 4 cores, rereading zip directories),
+        # including tasks that run none of this engine's kernels: plain
+        # RDD/UDF tasks and the PythonRDD behind createDataFrame of a
+        # local list. On perfbench tfcall (4 cores), log_event's Spark
+        # time fell from ~770-885 to ~320-365 ms.
         .config("spark.python.daemon.module", "redisgears_spark.workerpatch")
         # Checkpoint and state-store files are written without .crc
         # sidecars. With no native Hadoop library, every local Hadoop file

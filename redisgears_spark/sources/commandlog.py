@@ -206,9 +206,6 @@ class CommandLogReader(DataSourceReader):
         (BENCH commandlog section). Timestamps are int64 micros in a
         timestamp('us') array; the map/struct columns are built once per
         chunk."""
-        from redisgears_spark.workerpatch import ensure as _wp
-
-        _wp()  # see workerpatch — removes ~130 ms/task of worker preamble
         import pyarrow as pa
 
         ts_type = pa.timestamp("us")

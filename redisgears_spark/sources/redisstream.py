@@ -425,9 +425,6 @@ class RedisBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: _KeyPartition):
-        from redisgears_spark.workerpatch import ensure as _wp
-
-        _wp()  # see workerpatch — removes ~130 ms/task of worker preamble
         if partition is None or partition.key is None:
             return  # zero matching streams — empty scan
         client = _make_client(partition.options)

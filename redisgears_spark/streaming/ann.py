@@ -96,9 +96,6 @@ def _make_router(centroids, vec_field: str, id_field: str):
             _CTL_DELETE,
             _CTL_FIELD,
         )
-        from redisgears_spark.workerpatch import ensure as _wp
-
-        _wp()
         import warnings
 
         # silence np.fromstring's DeprecationWarning ONCE per task (a

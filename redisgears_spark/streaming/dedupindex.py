@@ -65,7 +65,6 @@ from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
 from redisgears_spark.streaming.stateful import _StatefulRuntime
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 
 
 def shingle_bucket(s: str, n_buckets: int) -> int:
@@ -88,9 +87,6 @@ def _make_router(text_field: str, id_field: str, n_buckets: int):
             _CTL_DELETE,
             _CTL_FIELD,
         )
-        from redisgears_spark.workerpatch import ensure as _wp
-
-        _wp()
         for pdf in batches:
             # columnar buffers, not per-row dicts: a corpus batch
             # scatters |shingles| posting rows — list-of-dicts →
@@ -370,7 +366,7 @@ class StreamingShingleIndexRuntime(_StatefulRuntime):
                 )
 
         sh_new = new_docs.select("doc_id", "text").mapInPandas(
-            _arrow_kernel(shingle), "doc_id long, sh array<string>"
+            shingle, "doc_id long, sh array<string>"
         )
         ex_new = sh_new.select(
             F.col("doc_id").alias("new_id"), F.explode("sh").alias("s")

@@ -65,9 +65,6 @@ def _ordered_frame(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
     corrupted order-sensitive state (reproduced: a sessionizer fed
     [50,51] then [1,2,3] persisted start=50 > end=3 and missed the gap
     close). Every reducer below funnels through this."""
-    from redisgears_spark.workerpatch import ensure as _wp
-
-    _wp()  # see workerpatch — removes ~130 ms/task of worker preamble
     frames = [pdf for pdf in pdfs if len(pdf)]
     if not frames:
         return pd.DataFrame(columns=["id"])

@@ -260,9 +260,6 @@ def _make_processor(
     acl_re = re.compile(acl_regex) if acl_regex is not None else None
 
     def process(batches: Any) -> Any:
-        from redisgears_spark.workerpatch import ensure as _wp
-
-        _wp()  # skip the per-task zipimport rescan from the 2nd task on
         sink = open_sink()
         n_ok = n_err = 0
         an_error: str | None = None
@@ -509,8 +506,13 @@ class _TriggerRuntime:
         (error-does-not-halt), so retention can trim their source rows;
         replay before trimming to keep unreplayable at 0. Stats shift
         accordingly: replayed successes move n_failed → n_success."""
-        lib = self.engine._libraries[lib_name]
-        spec = getattr(lib, self.trigger_kind)[trigger]
+        with self.engine._lock:
+            lib = self.engine._libraries.get(lib_name)
+            if lib is None:
+                raise GearsError(f"unknown library '{lib_name}'")
+            spec = getattr(lib, self.trigger_kind).get(trigger)
+            if spec is None:
+                raise GearsError(f"unknown {self._label} '{lib_name}.{trigger}'")
         fn = fn or spec["fn"]
         if fn is None:
             raise ValueError(

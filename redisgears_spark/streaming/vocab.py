@@ -73,9 +73,6 @@ def _make_router(text_field: str, id_field: str, n_buckets: int):
             _CTL_DELETE,
             _CTL_FIELD,
         )
-        from redisgears_spark.workerpatch import ensure as _wp
-
-        _wp()
         for pdf in batches:
             rows = []
             for fields, rec_id in zip(pdf["fields"], pdf["id"]):

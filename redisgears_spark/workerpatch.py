@@ -21,33 +21,25 @@ an ALREADY-KNOWN path mid-session no longer invalidates zipimporter caches.
 Directory-based imports are unaffected (FileFinder auto-invalidates via
 directory mtime). This engine never re-ships archives.
 
-Where the patch is installed:
+Where the patch is installed: in the Python daemon, and only there.
+`session.get_spark` sets `spark.python.daemon.module` to this module,
+whose `__main__` installs the patch and then runs
+`pyspark.daemon.manager()`. Every worker the daemon forks starts patched,
+so every task takes the short preamble: plain RDD and UDF tasks, Arrow
+kernels (mapInPandas, applyInPandas, applyInPandasWithState), Python
+data-source reads, and the PythonRDDs behind `createDataFrame` of a local
+list. A worker still invalidates once, on its first task, when `add_path`
+adds the session's SparkFiles directory.
 
-- In the Python daemon. `session.get_spark` sets
-  `spark.python.daemon.module` to this module, whose `__main__` calls
-  `ensure()` and then runs `pyspark.daemon.manager()`. Every worker the
-  daemon forks starts patched, so every task takes the short preamble:
-  plain RDD and UDF tasks, and the PythonRDDs behind `createDataFrame`
-  of a local list, which run none of this engine's kernels. A worker
-  still invalidates once, on its first task, when `add_path` adds the
-  session's SparkFiles directory.
-- At the top of every Arrow kernel this engine ships (trigger processors,
-  stateful reducers, similarity/multimodal/BPE kernels), through
-  `ensure()` or `arrow_kernel`. That is the fallback for a session built
-  without `get_spark`'s settings (a bare `SparkSession.builder`): there
-  a worker pays the stock preamble until one of those kernels reaches
-  it, and is patched from its next task on.
-
-Importing this module on the DRIVER is harmless: the driver never runs
-`setup_spark_files`.
+A session built without `get_spark`'s settings (a bare
+`SparkSession.builder`) starts workers from the stock daemon: they stay
+unpatched and pay the stock per-task preamble. Results are the same.
 """
 
 from __future__ import annotations
 
 import importlib
 import sys
-
-_done = False
 
 
 class _LazyInvalidator:
@@ -68,45 +60,17 @@ class _LazyInvalidator:
         return getattr(self._real, attr)
 
 
-def ensure() -> None:
-    """Idempotent; ~100 ns after the first call. Safe on driver and worker."""
-    global _done
-    if _done:
-        return
-    _done = True
+if __name__ == "__main__":
+    # Python daemon entry point (spark.python.daemon.module)
     try:
         import pyspark.worker_util as wu
 
-        if not isinstance(getattr(wu, "importlib", None), _LazyInvalidator):
-            wu.importlib = _LazyInvalidator(importlib)  # type: ignore[assignment]
-    except Exception:
-        # never let an internal-layout change in pyspark break user jobs;
+        wu.importlib = _LazyInvalidator(importlib)  # type: ignore[assignment]
+    except ImportError:
+        # never let an internal-layout change in pyspark stop the daemon;
         # the patch is a perf fix, not a correctness dependency
         pass
 
-
-def arrow_kernel(fn):
-    """Wrap a mapInPandas/applyInPandas kernel so every worker that runs
-    it installs the lazy-invalidation patch first. Use at the call site:
-    `.mapInPandas(arrow_kernel(score), schema)` — the wrapper is what
-    gets pickled, so ensure() runs worker-side before the kernel body."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        ensure()
-        return fn(*args, **kwargs)
-
-    return wrapper
-
-
-if __name__ == "__main__":
-    # Python daemon entry point (spark.python.daemon.module). Patch through
-    # the imported module, not this `__main__` copy, so that kernel-site
-    # ensure() calls in forked workers see the patch as already installed.
     from pyspark import daemon
 
-    from redisgears_spark import workerpatch
-
-    workerpatch.ensure()
     daemon.manager()

@@ -2318,6 +2318,39 @@ class TestDeadLetterQueue:
         }
 
 
+@pytest.mark.parametrize(
+    "kind, lib_name, trigger, msg",
+    [
+        ("stream", "nolib", "r", "unknown library 'nolib'"),
+        ("stream", "rlib", "nope", "unknown trigger 'rlib.nope'"),
+        ("keyspace", "nolib", "k", "unknown library 'nolib'"),
+        ("keyspace", "cdclib", "nope", "unknown keyspace trigger 'cdclib.nope'"),
+    ],
+)
+def test_replay_errors_names_an_unknown_library_or_trigger(
+    spark, sf_dir, tmp_path, kind, lib_name, trigger, msg
+):
+    """replay_errors looks the names up under the engine lock and refuses
+    an unknown one with a GearsError, as call() does, not a KeyError."""
+    engine = GearsEngine(spark, sf_dir)
+    work = str(tmp_path / "work")
+    if kind == "stream":
+        engine.load_library(
+            lambda l: l.register_stream_trigger("r", prefix="user:", fn=upper_type),
+            name="rlib",
+        )
+        rt = StreamTriggerRuntime(engine, str(tmp_path / "spool"), work)
+    else:
+        engine.load_library(
+            lambda l: l.register_keyspace_trigger("k", prefix="user:", fn=cdc_any_event),
+            name="cdclib",
+        )
+        rt = KeyspaceTriggerRuntime(engine, str(tmp_path / "changes"), work)
+    with pytest.raises(GearsError) as err:
+        rt.replay_errors(lib_name, trigger)
+    assert str(err.value) == msg
+
+
 class TestCdcDeadLetterQueue:
     """DLQ parity for keyspace (CDC) triggers: the reference surfaces
     last_error/counters identically for stream and keyspace triggers

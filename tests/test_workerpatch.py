@@ -1,10 +1,12 @@
-"""The Python-worker import-cache patch (redisgears_spark.workerpatch):
-installed once in the daemon that `get_spark` starts, so every forked
-worker and every task it runs is patched; kept as a per-kernel fallback on
-sessions built without `get_spark`."""
+"""The Python-worker import-cache patch (redisgears_spark.workerpatch): it
+is installed in one place, the daemon that `get_spark` starts, so every
+worker that daemon forks runs every task patched, whatever the task kind.
+A session built without `get_spark` is unpatched, and its kernels still
+give the same results."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -13,21 +15,111 @@ import textwrap
 import uuid
 import zipfile
 
+import pandas as pd
 import pytest
+from pyspark.sql.datasource import DataSource, DataSourceReader
+from pyspark.sql.streaming.state import GroupStateTimeout
 
+from redisgears_spark.session import SOCKET_DIR
 
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SOCKET_GLOB = os.path.join(SOCKET_DIR, ".*.sock")
+_STATE_SCHEMA = "wu_type string, main string"
 
 
-def _worker_state(_):
-    """What the worker that runs this task holds: the type behind
+def _state():
+    """What the worker that runs this code holds: the type behind
     worker_util.importlib, and the module the process was started as."""
     import sys
 
     import pyspark.worker_util as wu
 
     main_spec = getattr(sys.modules["__main__"], "__spec__", None)
-    yield (type(wu.importlib).__name__, getattr(main_spec, "name", None))
+    return (type(wu.importlib).__name__, getattr(main_spec, "name", None))
+
+
+def _worker_state(_):
+    yield _state()
+
+
+def _state_frame():
+    return pd.DataFrame([_state()], columns=["wu_type", "main"])
+
+
+def _group_probe(pdf):
+    return _state_frame()
+
+
+def _map_probe(batches):
+    for _ in batches:
+        yield _state_frame()
+
+
+def _stateful_probe(key, pdfs, state):
+    for _ in pdfs:
+        pass
+    yield _state_frame()
+
+
+class _ProbeReader(DataSourceReader):
+    def read(self, partition):
+        yield _state()
+
+
+class _ProbeSource(DataSource):
+    @classmethod
+    def name(cls):
+        return "workerpatch_probe"
+
+    def schema(self):
+        return _STATE_SCHEMA
+
+    def reader(self, schema):
+        return _ProbeReader()
+
+
+def _rdd_states(spark, tmp_path):
+    return spark.sparkContext.parallelize(range(4), 4).mapPartitions(_worker_state).collect()
+
+
+def _map_in_pandas_states(spark, tmp_path):
+    return spark.range(4, numPartitions=4).mapInPandas(_map_probe, _STATE_SCHEMA).collect()
+
+
+def _apply_in_pandas_states(spark, tmp_path):
+    return spark.range(4).groupBy("id").applyInPandas(_group_probe, _STATE_SCHEMA).collect()
+
+
+def _data_source_states(spark, tmp_path):
+    spark.dataSource.register(_ProbeSource)
+    return spark.read.format(_ProbeSource.name()).load().collect()
+
+
+def _stateful_batch_states(spark, tmp_path):
+    """One applyInPandasWithState micro-batch over a file stream."""
+    src = str(tmp_path / "src")
+    spark.range(4).write.parquet(src)
+    name = f"workerpatch_{uuid.uuid4().hex}"
+    query = (
+        spark.readStream.schema("id long")
+        .parquet(src)
+        .groupBy("id")
+        .applyInPandasWithState(
+            _stateful_probe,
+            _STATE_SCHEMA,
+            "n long",
+            "update",
+            GroupStateTimeout.NoTimeout,
+        )
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return spark.table(name).collect()
 
 
 def _run_child(script, cwd, pythonpath=None):
@@ -49,14 +141,24 @@ def _run_child(script, cwd, pythonpath=None):
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
-def test_plain_rdd_task_runs_in_a_patched_worker(spark):
-    """No kernel is involved: the worker was forked from the workerpatch
-    daemon and starts with the lazy invalidator in place."""
-    sc = spark.sparkContext
-    assert sc.getConf().get("spark.python.daemon.module") == (
+@pytest.mark.parametrize(
+    "run",
+    [
+        _rdd_states,
+        _map_in_pandas_states,
+        _apply_in_pandas_states,
+        _data_source_states,
+        _stateful_batch_states,
+    ],
+    ids=["rdd", "mapInPandas", "applyInPandas", "data_source", "applyInPandasWithState"],
+)
+def test_every_task_kind_runs_in_a_patched_worker(spark, tmp_path, run):
+    """No probe kernel installs anything: its worker was forked from the
+    workerpatch daemon and starts with the lazy invalidator in place."""
+    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == (
         "redisgears_spark.workerpatch"
     )
-    got = set(sc.parallelize(range(4), 4).mapPartitions(_worker_state).collect())
+    got = {tuple(row) for row in run(spark, tmp_path)}
     assert got == {("_LazyInvalidator", "redisgears_spark.workerpatch")}
 
 
@@ -79,37 +181,39 @@ def test_module_shipped_mid_session_imports_in_a_later_task(spark, tmp_path):
     assert sc.parallelize([0], 1).mapPartitions(load).collect() == [42]
 
 
-def test_kernel_installs_the_patch_on_a_bare_session(tmp_path):
+def test_bare_session_runs_a_shipped_kernel_in_an_unpatched_worker(tmp_path):
     """A session built without get_spark's settings starts workers from the
-    stock daemon; a kernel wrapped by arrow_kernel patches its worker."""
+    stock daemon. One of the engine's Arrow kernels gives its usual result
+    there, and installs nothing: the worker it ran in stays stock."""
     got = _run_child(
         """
         import json
         from pyspark.sql import SparkSession
-        from redisgears_spark.workerpatch import arrow_kernel
+        from redisgears_spark.operators.dedup import _shingles_py, shingle_pass
 
         spark = SparkSession.builder.master("local[1]").getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
 
-        def plain(_):
+        def probe(batches):
             import pyspark.worker_util as wu
-            yield type(wu.importlib).__name__
-
-        def kernel(it):
-            import pyspark.worker_util as wu
-            for pdf in it:
+            for pdf in batches:
                 yield pdf.assign(t=type(wu.importlib).__name__)
 
-        before = spark.sparkContext.parallelize([0], 1).mapPartitions(plain).collect()
-        fn = arrow_kernel(kernel)
-        after = spark.range(1, numPartitions=1).mapInPandas(fn, "id long, t string")
-        print(json.dumps({"before": before[0], "after": after.first()["t"]}))
+        text = "the quick brown fox jumps over the lazy dog"
+        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        row = shingle_pass(docs).collect()[0]
+        after = spark.range(1, numPartitions=1).mapInPandas(probe, "id long, t string")
+        print(json.dumps({
+            "exact": list(row["sh"]) == _shingles_py(text),
+            "n": len(row["sh"]),
+            "after": after.first()["t"],
+        }))
         spark.stop()
         """,
         cwd=str(tmp_path),
         pythonpath=_REPO_DIR,
     )
-    assert got == {"before": "module", "after": "_LazyInvalidator"}
+    assert got == {"exact": True, "n": 7, "after": "module"}
 
 
 @pytest.fixture(scope="module")
@@ -117,7 +221,8 @@ def outside_checkout(tmp_path_factory):
     """A driver run from a directory outside the checkout, PYTHONPATH unset,
     the package found through sys.path only; it runs one Python task and
     exits without stopping its SparkContext."""
-    return _run_child(
+    sockets_before = set(glob.glob(_SOCKET_GLOB))
+    got = _run_child(
         f"""
         import json, sys
         sys.path.insert(0, {_REPO_DIR!r})
@@ -130,11 +235,12 @@ def outside_checkout(tmp_path_factory):
             yield type(wu.importlib).__name__
 
         got = sc.parallelize([0], 1).mapPartitions(state).collect()
-        sock = sc._accumulatorServer.server_address
-        print(json.dumps({{"worker": got[0], "sock": sock}}))
+        print(json.dumps({{"worker": got[0]}}))
         """,
         cwd=str(tmp_path_factory.mktemp("outside")),
     )
+    got["new_sockets"] = sorted(set(glob.glob(_SOCKET_GLOB)) - sockets_before)
+    return got
 
 
 def test_daemon_imports_when_the_driver_runs_outside_the_checkout(outside_checkout):
@@ -142,6 +248,6 @@ def test_daemon_imports_when_the_driver_runs_outside_the_checkout(outside_checko
 
 
 def test_exit_without_stop_leaves_no_accumulator_socket(outside_checkout):
-    """pyspark removes the driver's accumulator socket only in stop()."""
-    assert outside_checkout["sock"].endswith(".sock")
-    assert not os.path.exists(outside_checkout["sock"])
+    """A driver that exits without SparkContext.stop() leaves no Unix
+    socket behind."""
+    assert outside_checkout["new_sockets"] == []
