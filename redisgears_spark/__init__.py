@@ -24,4 +24,7 @@ Layout:
 
 __version__ = "0.1.0"
 
+# installs the Python-worker import-cache patch in every process that
+# imports the package, a worker that unpickles a kernel included
+from redisgears_spark import workerpatch  # noqa: E402,F401
 from redisgears_spark.engine import GearsEngine, Library  # noqa: E402,F401

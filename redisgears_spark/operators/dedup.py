@@ -40,6 +40,7 @@ from redisgears_spark.functions.hashing import (
     splitmix64_sql,
 )
 from redisgears_spark.operators.registry import query
+from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.sources.keyspace import (
     load_table,
     rebalanced,
@@ -111,7 +112,9 @@ def shingle_pass(docs: DataFrame) -> DataFrame:
             ]
             yield pd.DataFrame(out, columns=["doc_id", "sh"])
 
-    return rebalanced(docs).mapInPandas(shingle, "doc_id long, sh array<string>")
+    return rebalanced(docs).mapInPandas(
+        _arrow_kernel(shingle), "doc_id long, sh array<string>"
+    )
 
 
 def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,7 +575,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
                 )
 
         labels = edges.repartition(1).mapInPandas(
-            cc_union_find, "doc_id long, cluster_id long"
+            _arrow_kernel(cc_union_find), "doc_id long, cluster_id long"
         )
         result = labels.withColumn(
             "is_survivor", F.col("doc_id") == F.col("cluster_id")
@@ -739,7 +742,7 @@ def _sketch_pass(docs: DataFrame) -> DataFrame:
                 )
 
     return rebalanced(docs).mapInPandas(
-        sketch,
+        _arrow_kernel(sketch),
         "doc_id long, sh array<string>, "
         "bands array<struct<band_id:int,band_hash:long>>",
     )
@@ -1028,7 +1031,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = (
         rebalanced(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
         .mapInPandas(
-            sign,
+            _arrow_kernel(sign),
             "doc_id long, sim_lo long, sim_hi long, band_id int, band_bits long",
         )
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redisgears_spark.operators.registry import query
+from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.sources.keyspace import load_table
 
 FEATURE_SCHEMA = (
@@ -89,7 +90,7 @@ def extract_features(df: DataFrame) -> DataFrame:
                 }
             )
 
-    return df.select("doc_id", "payload").mapInPandas(batches, FEATURE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_arrow_kernel(batches), FEATURE_SCHEMA)
 
 
 @query(
@@ -168,7 +169,7 @@ def resize_images(df: DataFrame, max_side: int = 64) -> DataFrame:
                 ],
             )
 
-    return df.select("doc_id", "payload").mapInPandas(batches, RESIZED_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_arrow_kernel(batches), RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_offset long, frame_crc long"
@@ -205,7 +206,7 @@ def sample_frames(df: DataFrame) -> DataFrame:
                 out, columns=["doc_id", "frame_idx", "frame_offset", "frame_crc"]
             )
 
-    return df.select("doc_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_arrow_kernel(batches), FRAME_SCHEMA)
 
 
 @query(
@@ -387,7 +388,7 @@ def embed_payloads(df: DataFrame) -> DataFrame:
             )
 
     return df.select("doc_id", "payload").mapInPandas(
-        batches, "doc_id long, embedding array<double>, model string"
+        _arrow_kernel(batches), "doc_id long, embedding array<double>, model string"
     )
 
 

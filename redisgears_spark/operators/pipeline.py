@@ -21,6 +21,7 @@ from redisgears_spark.functions.hashing import (
     md5_hash32_sql,
 )
 from redisgears_spark.operators.registry import query
+from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.operators.text import _TOKENS, _TOKENS_SQL
 from redisgears_spark.sources.keyspace import (
     load_table,
@@ -77,7 +78,7 @@ def _gram_rows(spark: SparkSession, sf_dir: str, predicate) -> DataFrame:
         .filter(predicate)
         .select("doc_id", "text")
     )
-    return docs.mapInPandas(grams, "doc_id long, g string")
+    return docs.mapInPandas(_arrow_kernel(grams), "doc_id long, g string")
 
 
 @query(
@@ -1124,7 +1125,7 @@ def _dist_bpe_rounds(
         b = best[0]
         recs.append((round_offset + i, b["l"], b["r"], int(b["n"])))
         nxt = cur.mapInPandas(
-            _merge_symbols_factory(b["l"], b["r"]),
+            _arrow_kernel(_merge_symbols_factory(b["l"], b["r"])),
             "word string, freq long, symbols array<string>",
         )
         nxt = nxt.localCheckpoint(eager=True)  # bound the lineage
@@ -1446,7 +1447,7 @@ def pipeline_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.expr(_TOKENS).alias("w")
     )
     out = docs.mapInPandas(
-        apply_merges, "doc_id long, n_ws_tokens long, n_bpe_tokens long"
+        _arrow_kernel(apply_merges), "doc_id long, n_ws_tokens long, n_bpe_tokens long"
     )
     return out.select(
         "doc_id",
@@ -1554,7 +1555,7 @@ def _bpe_extend(
         cnt = row[0]["n"] or 0
         recs.append((rnd, lft, rgt, int(cnt), "base"))
         nxt = cur.mapInPandas(
-            _merge_symbols_factory(lft, rgt),
+            _arrow_kernel(_merge_symbols_factory(lft, rgt)),
             "word string, freq long, symbols array<string>",
         ).localCheckpoint(eager=True)
         if cur is not union_wf:
@@ -3208,7 +3209,7 @@ def pipeline_contamination_gram_sensitivity(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     g = docs.mapInPandas(
-        grams3, "n int, doc_id long, g string"
+        _arrow_kernel(grams3), "n int, doc_id long, g string"
     ).select("n", "doc_id", F.md5("g").alias("gh"))
     is_eval = F.col("doc_id") % _DECON_EVAL_MOD == 0
     eg = g.filter(is_eval).select("n", "gh").distinct()

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from redisgears_spark.operators.registry import query
+from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.operators.text import _TOKENS_SQL
 from redisgears_spark.sources.keyspace import load_table, rebalanced
 
@@ -228,7 +229,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = rebalanced(
         load_table(spark, sf_dir, "embeddings").select("vec_id", F.expr(_QUANT).alias("v"))
     )
-    scored = corpus.mapInPandas(score, "q_id long, n_id long, cosine double")
+    scored = corpus.mapInPandas(_arrow_kernel(score), "q_id long, n_id long, cosine double")
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -296,7 +297,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = rebalanced(
         load_table(spark, sf_dir, "embeddings").select("vec_id", F.expr(_QUANT).alias("v"))
     )
-    return corpus.mapInPandas(score, "a_id long, b_id long, cosine double")
+    return corpus.mapInPandas(_arrow_kernel(score), "a_id long, b_id long, cosine double")
 
 
 def embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,7 +392,7 @@ def embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.expr(_QUANT).alias("v")
     ))
     buckets = emb.mapInPandas(
-        bucketize,
+        _arrow_kernel(bucketize),
         "vec_id long, tbl long, bucket long, v array<bigint>",
     )
     return (
@@ -588,7 +589,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     # Lloyd step: per-(cell, dim) exact-integer mean over quantized values —
     # map-side partials, one tiny final agg, zero corpus-width shuffles
     stats = (
-        vecs.mapInPandas(partial_stats, "cell long, pos long, s long, n long")
+        vecs.mapInPandas(_arrow_kernel(partial_stats), "cell long, pos long, s long, n long")
         .groupBy("cell", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .filter(F.col("n") > 0)
@@ -662,7 +663,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         F.expr(_QUANT).alias("q"),
     ))
     lists = vecs.mapInPandas(
-        assign_corpus, "vec_id long, cell long, n_q array<bigint>, n_nq long"
+        _arrow_kernel(assign_corpus), "vec_id long, cell long, n_q array<bigint>, n_nq long"
     )
     cand = (
         lists.join(F.broadcast(probes), "cell")
@@ -803,7 +804,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = rebalanced(load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v")
     ))
-    buckets = emb.mapInPandas(bucketize, "vec_id long, tbl long, bucket long")
+    buckets = emb.mapInPandas(_arrow_kernel(bucketize), "vec_id long, tbl long, bucket long")
 
     queries = buckets.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "tbl", "bucket"
@@ -918,7 +919,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, seeds_pdf=None):
         )
     )
     stats = (
-        vecs.mapInPandas(partial_stats, "m long, k long, pos long, s long, n long")
+        vecs.mapInPandas(_arrow_kernel(partial_stats), "m long, k long, pos long, s long, n long")
         .groupBy("m", "k", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .filter(F.col("n") > 0)
@@ -992,7 +993,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
     )
-    codes = emb.mapInPandas(encode, "vec_id long, code long")
+    codes = emb.mapInPandas(_arrow_kernel(encode), "vec_id long, code long")
 
     # query LUTs: tiny (8 queries × M × K doubles), shipped in the closure
     q_pdf = _vec_slice(fetched, 0, _N_QUERIES - 1)
@@ -1023,7 +1024,9 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    shortlist = codes.mapInPandas(adc_shortlist, "q_id long, n_id long, adc double")
+    shortlist = codes.mapInPandas(
+        _arrow_kernel(adc_shortlist), "q_id long, n_id long, adc double"
+    )
     w_adc = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
     cand = (
         shortlist.filter(F.col("n_id") != F.col("q_id"))
@@ -1503,7 +1506,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", F.expr(_QUANT).alias("v")
         )
     )
-    return corpus.mapInPandas(score, "q_id long, n_id long, cosine double")
+    return corpus.mapInPandas(_arrow_kernel(score), "q_id long, n_id long, cosine double")
 
 
 _MMR_POOL = 20  # relevance pool fed to the re-ranker
@@ -1646,7 +1649,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", F.expr(_QUANT).alias("v")
         )
     )
-    scored = corpus.mapInPandas(score, "q_id long, n_id long, cosine double")
+    scored = corpus.mapInPandas(_arrow_kernel(score), "q_id long, n_id long, cosine double")
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     pool = (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1688,6 +1691,9 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
+    # applyInPandas inspects the kernel's arity, so mmr takes no
+    # arrow_kernel wrapper; it refers to _block_cosine, so unpickling it
+    # imports the package, which installs workerpatch
     return cand.groupBy("q_id").applyInPandas(
         mmr, "q_id long, n_id long, mmr_rank long, relevance double"
     )
@@ -2637,7 +2643,7 @@ def _ivfpq_codebooks(spark: SparkSession, sf_dir: str, C_ivf=None, seeds_pdf=Non
     )
     stats = (
         vecs.mapInPandas(
-            partial_stats,
+            _arrow_kernel(partial_stats),
             "m long, k long, pos long, s long, n long",
         )
         .groupBy("m", "k", "pos")
@@ -2751,7 +2757,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     codes = emb.mapInPandas(
-        encode,
+        _arrow_kernel(encode),
         "vec_id long, cell long, code_lo long, code_hi long, vnorm double",
     )
 
@@ -2822,7 +2828,9 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "cell", "vec_id", "code_lo", "code_hi", "vnorm")
     )
-    shortlist = cand_rows.mapInPandas(adc_shortlist, "q_id long, n_id long, adc double")
+    shortlist = cand_rows.mapInPandas(
+        _arrow_kernel(adc_shortlist), "q_id long, n_id long, adc double"
+    )
     w_adc = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
     cand = (
         shortlist.withColumn("_r", F.row_number().over(w_adc))
@@ -3082,7 +3090,9 @@ def dedup_embedding_incremental(
         .join(incr_ids, "vec_id", "anti")
         .select("vec_id", F.expr(_QUANT).alias("v"))
     )
-    return base.mapInPandas(score, "new_id long, base_id long, cosine double")
+    return base.mapInPandas(
+        _arrow_kernel(score), "new_id long, base_id long, cosine double"
+    )
 
 
 @query("dedup_embedding_incremental_streamed", oracle=_INCR_EMB_ORACLE)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from redisgears_spark.operators.registry import query
+from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.sources.keyspace import (
     load_table,
     rebalanced,
@@ -391,7 +392,7 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("text")
     )
     counted = (
-        docs.mapInPandas(bigram_rows, "bigram string")
+        docs.mapInPandas(_arrow_kernel(bigram_rows), "bigram string")
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -86,7 +86,7 @@ def get_spark(
         # RDD/UDF tasks and the PythonRDD behind createDataFrame of a
         # local list. On perfbench tfcall (4 cores), log_event's Spark
         # time fell from ~770-885 to ~320-365 ms.
-        .config("spark.python.daemon.module", "redisgears_spark.workerpatch")
+        .config("spark.python.daemon.module", "redisgears_spark.workerdaemon")
         # Checkpoint and state-store files are written without .crc
         # sidecars. With no native Hadoop library, every local Hadoop file
         # create forks `chmod` (~8 ms each): a stream trigger's batch

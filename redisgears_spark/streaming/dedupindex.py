@@ -65,6 +65,7 @@ from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
 from redisgears_spark.streaming.stateful import _StatefulRuntime
+from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 
 
 def shingle_bucket(s: str, n_buckets: int) -> int:
@@ -87,6 +88,7 @@ def _make_router(text_field: str, id_field: str, n_buckets: int):
             _CTL_DELETE,
             _CTL_FIELD,
         )
+
         for pdf in batches:
             # columnar buffers, not per-row dicts: a corpus batch
             # scatters |shingles| posting rows — list-of-dicts →
@@ -366,7 +368,7 @@ class StreamingShingleIndexRuntime(_StatefulRuntime):
                 )
 
         sh_new = new_docs.select("doc_id", "text").mapInPandas(
-            shingle, "doc_id long, sh array<string>"
+            _arrow_kernel(shingle), "doc_id long, sh array<string>"
         )
         ex_new = sh_new.select(
             F.col("doc_id").alias("new_id"), F.explode("sh").alias("s")

@@ -1,12 +1,13 @@
 """The Python-worker import-cache patch (redisgears_spark.workerpatch): it
-is installed in one place, the daemon that `get_spark` starts, so every
-worker that daemon forks runs every task patched, whatever the task kind.
-A session built without `get_spark` is unpatched, and its kernels still
-give the same results."""
+is installed in one place, the import of the package. The daemon that
+`get_spark` starts imports it, so every worker that daemon forks runs every
+task patched, whatever the task kind. On a session built without
+`get_spark`, a worker is patched once it unpickles one of the engine's
+kernels: a module-level kernel imports the package, and a closure goes
+through `arrow_kernel`."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import subprocess
@@ -20,10 +21,7 @@ import pytest
 from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from redisgears_spark.session import SOCKET_DIR
-
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_SOCKET_GLOB = os.path.join(SOCKET_DIR, ".*.sock")
 _STATE_SCHEMA = "wu_type string, main string"
 
 
@@ -153,13 +151,13 @@ def _run_child(script, cwd, pythonpath=None):
     ids=["rdd", "mapInPandas", "applyInPandas", "data_source", "applyInPandasWithState"],
 )
 def test_every_task_kind_runs_in_a_patched_worker(spark, tmp_path, run):
-    """No probe kernel installs anything: its worker was forked from the
-    workerpatch daemon and starts with the lazy invalidator in place."""
+    """No probe kernel refers to the package: its worker was forked from
+    the workerdaemon and starts with the lazy invalidator in place."""
     assert spark.sparkContext.getConf().get("spark.python.daemon.module") == (
-        "redisgears_spark.workerpatch"
+        "redisgears_spark.workerdaemon"
     )
     got = {tuple(row) for row in run(spark, tmp_path)}
-    assert got == {("_LazyInvalidator", "redisgears_spark.workerpatch")}
+    assert got == {("_LazyInvalidator", "redisgears_spark.workerdaemon")}
 
 
 def test_module_shipped_mid_session_imports_in_a_later_task(spark, tmp_path):
@@ -181,39 +179,76 @@ def test_module_shipped_mid_session_imports_in_a_later_task(spark, tmp_path):
     assert sc.parallelize([0], 1).mapPartitions(load).collect() == [42]
 
 
-def test_bare_session_runs_a_shipped_kernel_in_an_unpatched_worker(tmp_path):
+def test_importing_the_package_installs_the_patch():
+    """A worker that unpickles a kernel pickled by reference imports the
+    package, and that import alone installs the patch."""
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import pyspark.worker_util as wu\n"
+            "before = type(wu.importlib).__name__\n"
+            "import redisgears_spark.operators.dedup\n"
+            "print(before, type(wu.importlib).__name__)",
+        ],
+        cwd=_REPO_DIR,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.split() == ["module", "_LazyInvalidator"]
+
+
+def test_kernel_installs_the_patch_on_a_bare_session(tmp_path):
     """A session built without get_spark's settings starts workers from the
-    stock daemon. One of the engine's Arrow kernels gives its usual result
-    there, and installs nothing: the worker it ran in stays stock."""
+    stock daemon. A plain task leaves its worker stock; a closure wrapped by
+    arrow_kernel patches the worker that unpickles it, and one of the
+    engine's wrapped kernels gives its usual result there."""
     got = _run_child(
         """
         import json
         from pyspark.sql import SparkSession
-        from redisgears_spark.operators.dedup import _shingles_py, shingle_pass
 
         spark = SparkSession.builder.master("local[1]").getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
 
-        def probe(batches):
+        def plain(_):
+            import pyspark.worker_util as wu
+            yield type(wu.importlib).__name__
+
+        def kernel(batches):
             import pyspark.worker_util as wu
             for pdf in batches:
                 yield pdf.assign(t=type(wu.importlib).__name__)
 
+        before = spark.sparkContext.parallelize([0], 1).mapPartitions(plain).collect()
+        from redisgears_spark.operators.dedup import _shingles_py, shingle_pass
+        from redisgears_spark.workerpatch import arrow_kernel
+
+        after = spark.range(1, numPartitions=1).mapInPandas(
+            arrow_kernel(kernel), "id long, t string"
+        )
         text = "the quick brown fox jumps over the lazy dog"
         docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
         row = shingle_pass(docs).collect()[0]
-        after = spark.range(1, numPartitions=1).mapInPandas(probe, "id long, t string")
         print(json.dumps({
+            "before": before[0],
+            "after": after.first()["t"],
             "exact": list(row["sh"]) == _shingles_py(text),
             "n": len(row["sh"]),
-            "after": after.first()["t"],
         }))
         spark.stop()
         """,
         cwd=str(tmp_path),
         pythonpath=_REPO_DIR,
     )
-    assert got == {"exact": True, "n": 7, "after": "module"}
+    assert got == {
+        "before": "module",
+        "after": "_LazyInvalidator",
+        "exact": True,
+        "n": 7,
+    }
 
 
 @pytest.fixture(scope="module")
@@ -221,8 +256,7 @@ def outside_checkout(tmp_path_factory):
     """A driver run from a directory outside the checkout, PYTHONPATH unset,
     the package found through sys.path only; it runs one Python task and
     exits without stopping its SparkContext."""
-    sockets_before = set(glob.glob(_SOCKET_GLOB))
-    got = _run_child(
+    return _run_child(
         f"""
         import json, sys
         sys.path.insert(0, {_REPO_DIR!r})
@@ -235,12 +269,11 @@ def outside_checkout(tmp_path_factory):
             yield type(wu.importlib).__name__
 
         got = sc.parallelize([0], 1).mapPartitions(state).collect()
-        print(json.dumps({{"worker": got[0]}}))
+        sock = sc._accumulatorServer.server_address
+        print(json.dumps({{"worker": got[0], "sock": sock}}))
         """,
         cwd=str(tmp_path_factory.mktemp("outside")),
     )
-    got["new_sockets"] = sorted(set(glob.glob(_SOCKET_GLOB)) - sockets_before)
-    return got
 
 
 def test_daemon_imports_when_the_driver_runs_outside_the_checkout(outside_checkout):
@@ -248,6 +281,6 @@ def test_daemon_imports_when_the_driver_runs_outside_the_checkout(outside_checko
 
 
 def test_exit_without_stop_leaves_no_accumulator_socket(outside_checkout):
-    """A driver that exits without SparkContext.stop() leaves no Unix
-    socket behind."""
-    assert outside_checkout["new_sockets"] == []
+    """pyspark removes the driver's accumulator socket only in stop()."""
+    assert outside_checkout["sock"].endswith(".sock")
+    assert not os.path.exists(outside_checkout["sock"])
