@@ -40,7 +40,6 @@ from redisgears_spark.functions.hashing import (
     splitmix64_sql,
 )
 from redisgears_spark.operators.registry import query
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.sources.keyspace import (
     load_table,
     rebalanced,
@@ -84,6 +83,17 @@ def _shingles_py(text: str) -> list[str]:
     return [""]
 
 
+def _shingle_kernel(batches):
+    import pandas as pd
+
+    for pdf in batches:
+        out = [
+            (doc_id, _shingles_py(text))
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+        ]
+        yield pd.DataFrame(out, columns=["doc_id", "sh"])
+
+
 def shingle_pass(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, sh) through the Arrow shingle kernel.
 
@@ -101,19 +111,8 @@ def shingle_pass(docs: DataFrame) -> DataFrame:
     filter pushdown — filtering first means only the rows a branch needs
     are ever shingled; the r13 incremental-screen rewrite).
     """
-
-    def shingle(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = [
-                (doc_id, _shingles_py(text))
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(out, columns=["doc_id", "sh"])
-
     return rebalanced(docs).mapInPandas(
-        _arrow_kernel(shingle), "doc_id long, sh array<string>"
+        _shingle_kernel, "doc_id long, sh array<string>"
     )
 
 
@@ -545,6 +544,21 @@ def union_find_labels(edges) -> dict:
     return {x: find(x) for x in seen}
 
 
+def _cc_union_find_kernel(batches):
+    import pandas as pd
+
+    labels = union_find_labels(
+        (a, b)
+        for pdf in batches
+        for a, b in zip(pdf["src"], pdf["dst"])
+    )
+    if labels:
+        nodes = sorted(labels)
+        yield pd.DataFrame(
+            {"doc_id": nodes, "cluster_id": [labels[x] for x in nodes]}
+        )
+
+
 def connected_components(pairs: DataFrame) -> DataFrame:
     """Min-label connected components over an (a_id, b_id) pair DataFrame →
     (doc_id, cluster_id, is_survivor). Strategy auto-selected by edge count
@@ -559,23 +573,8 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     n_edges = edges.count()  # cheap parquet-metadata count; sizes the strategy
 
     if n_edges <= _CC_LOCAL_EDGE_LIMIT:
-
-        def cc_union_find(batches):
-            import pandas as pd
-
-            labels = union_find_labels(
-                (a, b)
-                for pdf in batches
-                for a, b in zip(pdf["src"], pdf["dst"])
-            )
-            if labels:
-                nodes = sorted(labels)
-                yield pd.DataFrame(
-                    {"doc_id": nodes, "cluster_id": [labels[x] for x in nodes]}
-                )
-
         labels = edges.repartition(1).mapInPandas(
-            _arrow_kernel(cc_union_find), "doc_id long, cluster_id long"
+            _cc_union_find_kernel, "doc_id long, cluster_id long"
         )
         result = labels.withColumn(
             "is_survivor", F.col("doc_id") == F.col("cluster_id")
@@ -691,6 +690,42 @@ def _hash64_str(values) -> "object":
     )
 
 
+def _sketch_kernel(batches):
+    import numpy as np
+    import pandas as pd
+
+    # fixed salts for the 32 hash functions
+    salts = _splitmix64(np.arange(1, _MINHASH_N + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15))
+    with np.errstate(over="ignore"):
+        for pdf in batches:
+            shs = [_shingles_py(t) for t in pdf["text"]]
+            # flat hash of every shingle in the batch, then per-doc
+            # column-min via reduceat — one vectorized pass, no
+            # per-document numpy round trips
+            lens = np.fromiter((len(s) for s in shs), dtype=np.int64, count=len(shs))
+            offsets = np.zeros(len(shs), dtype=np.int64)
+            np.cumsum(lens[:-1], out=offsets[1:])
+            flat = _hash64_str([s for sh in shs for s in sh])
+            salted = _splitmix64(flat[:, None] ^ salts[None, :])
+            sig = np.minimum.reduceat(salted, offsets, axis=0)  # (docs, N)
+            # fold each row-group of the signature into one bucket hash
+            acc = np.zeros((len(shs), _MINHASH_BANDS), dtype=np.uint64)
+            banded = sig.reshape(len(shs), _MINHASH_BANDS, _MINHASH_ROWS)
+            for r in range(_MINHASH_ROWS):
+                acc = _splitmix64(acc ^ banded[:, :, r])
+            acc = acc.view(np.int64)
+            bands_col = [
+                [
+                    {"band_id": b, "band_hash": int(row[b])}
+                    for b in range(_MINHASH_BANDS)
+                ]
+                for row in acc
+            ]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "sh": shs, "bands": bands_col}
+            )
+
+
 def _sketch_pass(docs: DataFrame) -> DataFrame:
     """One narrow Python pass: (doc_id, text) → (doc_id, sh, bands) where
     `bands` is the exploded-ready MinHash LSH band list.
@@ -704,45 +739,8 @@ def _sketch_pass(docs: DataFrame) -> DataFrame:
     Takes the (doc_id, text) relation as an argument so callers can push
     row filters BELOW the kernel (see shingle_pass).
     """
-    import numpy as np
-
-    # fixed salts for the 32 hash functions
-    salts = _splitmix64(np.arange(1, _MINHASH_N + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15))
-
-    def sketch(batches):
-        import pandas as pd
-
-        with np.errstate(over="ignore"):
-            for pdf in batches:
-                shs = [_shingles_py(t) for t in pdf["text"]]
-                # flat hash of every shingle in the batch, then per-doc
-                # column-min via reduceat — one vectorized pass, no
-                # per-document numpy round trips
-                lens = np.fromiter((len(s) for s in shs), dtype=np.int64, count=len(shs))
-                offsets = np.zeros(len(shs), dtype=np.int64)
-                np.cumsum(lens[:-1], out=offsets[1:])
-                flat = _hash64_str([s for sh in shs for s in sh])
-                salted = _splitmix64(flat[:, None] ^ salts[None, :])
-                sig = np.minimum.reduceat(salted, offsets, axis=0)  # (docs, N)
-                # fold each row-group of the signature into one bucket hash
-                acc = np.zeros((len(shs), _MINHASH_BANDS), dtype=np.uint64)
-                banded = sig.reshape(len(shs), _MINHASH_BANDS, _MINHASH_ROWS)
-                for r in range(_MINHASH_ROWS):
-                    acc = _splitmix64(acc ^ banded[:, :, r])
-                acc = acc.view(np.int64)
-                bands_col = [
-                    [
-                        {"band_id": b, "band_hash": int(row[b])}
-                        for b in range(_MINHASH_BANDS)
-                    ]
-                    for row in acc
-                ]
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "sh": shs, "bands": bands_col}
-                )
-
     return rebalanced(docs).mapInPandas(
-        _arrow_kernel(sketch),
+        _sketch_kernel,
         "doc_id long, sh array<string>, "
         "bands array<struct<band_id:int,band_hash:long>>",
     )
@@ -902,6 +900,60 @@ _SIMHASH_BANDS = 4  # 32 bits per band
 _SIMHASH_K = 6  # near-dup ⇔ hamming <= K (Manku et al.'s 3/64 ratio, scaled)
 
 
+def _simhash_kernel(batches):
+    import re
+    from hashlib import md5
+
+    import numpy as np
+    import pandas as pd
+
+    band_width = 64 // (_SIMHASH_BANDS // 2)  # 32 bits, two bands per word
+    bit_idx = np.arange(64, dtype=np.uint64)
+    weights = np.uint64(1) << bit_idx
+    band_shifts = np.arange(_SIMHASH_BANDS // 2, dtype=np.uint64) * np.uint64(band_width)
+    band_mask = np.uint64((1 << band_width) - 1)
+    for pdf in batches:
+        wlists = [
+            [x for x in re.split(r"\s+", t.lower(), flags=re.ASCII) if x]
+            or [""]
+            for t in pdf["text"]
+        ]
+        lens = np.fromiter((len(w) for w in wlists), dtype=np.int64, count=len(wlists))
+        offsets = np.zeros(len(wlists), dtype=np.int64)
+        np.cumsum(lens[:-1], out=offsets[1:])
+        # 128-bit word hashes as two uint64 columns — md5's 16 bytes,
+        # little-endian halves = DuckDB md5_number_upper / _lower
+        # (the round-13 migration that let the oracle replay the
+        # signature; was blake2b-16)
+        buf = b"".join(
+            md5(w.encode()).digest() for ws in wlists for w in ws
+        )
+        flat = np.frombuffer(buf, dtype="<u8").reshape(-1, 2)
+        sims = np.empty((len(wlists), 2), dtype=np.uint64)
+        with np.errstate(over="ignore"):
+            for half in (0, 1):
+                # per-bit ±1 balance per doc, one vectorized reduceat
+                bits = (
+                    (flat[:, half][:, None] >> bit_idx[None, :]) & np.uint64(1)
+                ).astype(np.int32)
+                balance = np.add.reduceat(2 * bits - 1, offsets, axis=0)
+                sims[:, half] = ((balance > 0) * weights).sum(axis=1)
+        # four 32-bit bands: two per signature word
+        band_bits = (
+            (sims[:, :, None] >> band_shifts[None, None, :]) & band_mask
+        ).reshape(len(wlists), _SIMHASH_BANDS)
+        n = len(wlists)
+        yield pd.DataFrame(
+            {
+                "doc_id": np.repeat(pdf["doc_id"].to_numpy(), _SIMHASH_BANDS),
+                "sim_lo": np.repeat(sims[:, 0].view(np.int64), _SIMHASH_BANDS),
+                "sim_hi": np.repeat(sims[:, 1].view(np.int64), _SIMHASH_BANDS),
+                "band_id": np.tile(np.arange(_SIMHASH_BANDS, dtype=np.int32), n),
+                "band_bits": band_bits.reshape(-1).view(np.int64),
+            }
+        )
+
+
 @query(
     "dedup_simhash",
     oracle="""
@@ -973,65 +1025,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     check on candidates is xor+bit_count over the two signature words —
     JVM built-ins.
     """
-    import numpy as np
-
-    band_width = 64 // (_SIMHASH_BANDS // 2)  # 32 bits, two bands per word
-    bit_idx = np.arange(64, dtype=np.uint64)
-    weights = np.uint64(1) << bit_idx
-    band_shifts = np.arange(_SIMHASH_BANDS // 2, dtype=np.uint64) * np.uint64(band_width)
-    band_mask = np.uint64((1 << band_width) - 1)
-
-    def sign(batches):
-        import re
-        from hashlib import md5
-
-        import pandas as pd
-
-        for pdf in batches:
-            wlists = [
-                [x for x in re.split(r"\s+", t.lower(), flags=re.ASCII) if x]
-                or [""]
-                for t in pdf["text"]
-            ]
-            lens = np.fromiter((len(w) for w in wlists), dtype=np.int64, count=len(wlists))
-            offsets = np.zeros(len(wlists), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            # 128-bit word hashes as two uint64 columns — md5's 16 bytes,
-            # little-endian halves = DuckDB md5_number_upper / _lower
-            # (the round-13 migration that let the oracle replay the
-            # signature; was blake2b-16)
-            buf = b"".join(
-                md5(w.encode()).digest() for ws in wlists for w in ws
-            )
-            flat = np.frombuffer(buf, dtype="<u8").reshape(-1, 2)
-            sims = np.empty((len(wlists), 2), dtype=np.uint64)
-            with np.errstate(over="ignore"):
-                for half in (0, 1):
-                    # per-bit ±1 balance per doc, one vectorized reduceat
-                    bits = (
-                        (flat[:, half][:, None] >> bit_idx[None, :]) & np.uint64(1)
-                    ).astype(np.int32)
-                    balance = np.add.reduceat(2 * bits - 1, offsets, axis=0)
-                    sims[:, half] = ((balance > 0) * weights).sum(axis=1)
-            # four 32-bit bands: two per signature word
-            band_bits = (
-                (sims[:, :, None] >> band_shifts[None, None, :]) & band_mask
-            ).reshape(len(wlists), _SIMHASH_BANDS)
-            n = len(wlists)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(pdf["doc_id"].to_numpy(), _SIMHASH_BANDS),
-                    "sim_lo": np.repeat(sims[:, 0].view(np.int64), _SIMHASH_BANDS),
-                    "sim_hi": np.repeat(sims[:, 1].view(np.int64), _SIMHASH_BANDS),
-                    "band_id": np.tile(np.arange(_SIMHASH_BANDS, dtype=np.int32), n),
-                    "band_bits": band_bits.reshape(-1).view(np.int64),
-                }
-            )
-
     bands = (
         rebalanced(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
         .mapInPandas(
-            _arrow_kernel(sign),
+            _simhash_kernel,
             "doc_id long, sim_lo long, sim_hi long, band_id int, band_bits long",
         )
     )

@@ -18,13 +18,13 @@ until the decode stage so upstream exchanges never carry blobs.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redisgears_spark.operators.registry import query
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.sources.keyspace import load_table
 
 FEATURE_SCHEMA = (
@@ -68,29 +68,29 @@ def _decode_image(payload: bytes) -> tuple[int, int, str]:
         return (n % 640) + 1, (n % 480) + 1, "fake"
 
 
+def _feature_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import zlib
+
+    for pdf in it:
+        payloads = pdf["payload"]
+        decoded = [_decode_image(p) for p in payloads]
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "payload_len": payloads.map(len).astype("int64"),
+                "checksum": payloads.map(
+                    lambda p: zlib.crc32(p) & 0x7FFFFFFF
+                ).astype("int64"),
+                "width": [d[0] for d in decoded],
+                "height": [d[1] for d in decoded],
+                "format": [d[2] for d in decoded],
+            }
+        )
+
+
 def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
-        for pdf in it:
-            payloads = pdf["payload"]
-            decoded = [_decode_image(p) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload_len": payloads.map(len).astype("int64"),
-                    "checksum": payloads.map(
-                        lambda p: zlib.crc32(p) & 0x7FFFFFFF
-                    ).astype("int64"),
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "format": [d[2] for d in decoded],
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(_arrow_kernel(batches), FEATURE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_feature_kernel, FEATURE_SCHEMA)
 
 
 @query(
@@ -150,32 +150,53 @@ def _resize_image(payload: bytes, max_side: int) -> tuple[int, int, int, int, by
         return w, h, ow, oh, payload[:keep]
 
 
+def _resize_kernel(it: Iterator[pd.DataFrame], max_side: int) -> Iterator[pd.DataFrame]:
+    for pdf in it:
+        rows = [
+            (doc_id, *_resize_image(bytes(p), max_side))
+            for doc_id, p in zip(pdf["doc_id"], pdf["payload"])
+        ]
+        yield pd.DataFrame(
+            rows,
+            columns=[
+                "doc_id", "width", "height", "out_width", "out_height",
+                "resized",
+            ],
+        )
+
+
 def resize_images(df: DataFrame, max_side: int = 64) -> DataFrame:
     """Arrow-batched resize over binary payloads: (doc_id, payload) →
     original + output geometry + resized payload. Scale: batch-bounded
     memory; the blob column is pruned to exactly this stage's input."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (doc_id, *_resize_image(bytes(p), max_side))
-                for doc_id, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "out_width", "out_height",
-                    "resized",
-                ],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(_arrow_kernel(batches), RESIZED_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(
+        partial(_resize_kernel, max_side=max_side), RESIZED_SCHEMA
+    )
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_offset long, frame_crc long"
 
 _FRAME_SIZE = 256  # fake fixed-size frames carved from the payload
 _FRAME_STRIDE = 4  # sample every 4th frame
+
+
+def _frame_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    import zlib
+
+    for pdf in it:
+        out = []
+        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
+            p = bytes(p)
+            n_frames = max(1, len(p) // _FRAME_SIZE)
+            for idx in range(0, n_frames, _FRAME_STRIDE):
+                off = idx * _FRAME_SIZE
+                frame = p[off : off + _FRAME_SIZE]
+                out.append(
+                    (doc_id, idx, off, zlib.crc32(frame) & 0x7FFFFFFF)
+                )
+        yield pd.DataFrame(
+            out, columns=["doc_id", "frame_idx", "frame_offset", "frame_crc"]
+        )
 
 
 def sample_frames(df: DataFrame) -> DataFrame:
@@ -187,26 +208,7 @@ def sample_frames(df: DataFrame) -> DataFrame:
     Scale: fan-out happens executor-side inside the Arrow batch; only
     fixed-width frame descriptors leave the stage, never frame payloads,
     so the downstream exchange is O(frames), not O(bytes)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
-        for pdf in it:
-            out = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                n_frames = max(1, len(p) // _FRAME_SIZE)
-                for idx in range(0, n_frames, _FRAME_STRIDE):
-                    off = idx * _FRAME_SIZE
-                    frame = p[off : off + _FRAME_SIZE]
-                    out.append(
-                        (doc_id, idx, off, zlib.crc32(frame) & 0x7FFFFFFF)
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "frame_offset", "frame_crc"]
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(_arrow_kernel(batches), FRAME_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(_frame_kernel, FRAME_SCHEMA)
 
 
 @query(
@@ -374,21 +376,21 @@ def _embed_payload(payload: bytes) -> list:
         return [float(x) / root for x in w]
 
 
+def _embed_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in it:
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "embedding": [_embed_payload(p) for p in pdf["payload"]],
+                "model": "fake-md5-16",
+            }
+        )
+
+
 def embed_payloads(df: DataFrame) -> DataFrame:
     """Arrow-batched (doc_id, payload) → (doc_id, embedding, model)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "embedding": [_embed_payload(p) for p in pdf["payload"]],
-                    "model": "fake-md5-16",
-                }
-            )
-
     return df.select("doc_id", "payload").mapInPandas(
-        _arrow_kernel(batches), "doc_id long, embedding array<double>, model string"
+        _embed_kernel, "doc_id long, embedding array<double>, model string"
     )
 
 

@@ -12,6 +12,8 @@ prefix sum over a deterministic order — integer arithmetic throughout.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -21,7 +23,6 @@ from redisgears_spark.functions.hashing import (
     md5_hash32_sql,
 )
 from redisgears_spark.operators.registry import query
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.operators.text import _TOKENS, _TOKENS_SQL
 from redisgears_spark.sources.keyspace import (
     load_table,
@@ -48,6 +49,22 @@ _DECON_GRAMS_CTE = f"""
 """
 
 
+def _grams_kernel(batches):
+    import re
+
+    import pandas as pd
+
+    for pdf in batches:
+        ids: list = []
+        gs: list = []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
+            for i in range(len(w) - (_DECON_N - 1)):
+                ids.append(doc_id)
+                gs.append(" ".join(w[i : i + _DECON_N]))
+        yield pd.DataFrame({"doc_id": ids, "g": gs})
+
+
 def _gram_rows(spark: SparkSession, sf_dir: str, predicate) -> DataFrame:
     """documents[predicate] → exploded (doc_id, g) word-5-gram rows.
 
@@ -58,27 +75,12 @@ def _gram_rows(spark: SparkSession, sf_dir: str, predicate) -> DataFrame:
     the stage: only (doc_id, gram) rows flow on, and the join key is
     md5(gram) computed JVM-side after, so exchanges carry fixed-width rows.
     """
-    import re
-
-    def grams(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids: list = []
-            gs: list = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
-                for i in range(len(w) - (_DECON_N - 1)):
-                    ids.append(doc_id)
-                    gs.append(" ".join(w[i : i + _DECON_N]))
-            yield pd.DataFrame({"doc_id": ids, "g": gs})
-
     docs = rebalanced(
         load_table(spark, sf_dir, "documents")
         .filter(predicate)
         .select("doc_id", "text")
     )
-    return docs.mapInPandas(_arrow_kernel(grams), "doc_id long, g string")
+    return docs.mapInPandas(_grams_kernel, "doc_id long, g string")
 
 
 @query(
@@ -1125,7 +1127,7 @@ def _dist_bpe_rounds(
         b = best[0]
         recs.append((round_offset + i, b["l"], b["r"], int(b["n"])))
         nxt = cur.mapInPandas(
-            _arrow_kernel(_merge_symbols_factory(b["l"], b["r"])),
+            partial(_merge_symbols, left=b["l"], right=b["r"]),
             "word string, freq long, symbols array<string>",
         )
         nxt = nxt.localCheckpoint(eager=True)  # bound the lineage
@@ -1135,26 +1137,23 @@ def _dist_bpe_rounds(
     return recs, cur
 
 
-def _merge_symbols_factory(left: str, right: str):
+def _merge_symbols(batches, left: str, right: str):
     """Arrow-batched merge of one (left, right) pair (the per-round BPE
     apply step, delegating to the shared _apply_merge)."""
     import pandas as pd
 
-    def apply(batches):
-        for pdf in batches:
-            out = [
-                _apply_merge(list(syms), left, right)
-                for syms in pdf["symbols"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "freq": pdf["freq"],
-                    "symbols": out,
-                }
-            )
-
-    return apply
+    for pdf in batches:
+        out = [
+            _apply_merge(list(syms), left, right)
+            for syms in pdf["symbols"]
+        ]
+        yield pd.DataFrame(
+            {
+                "word": pdf["word"],
+                "freq": pdf["freq"],
+                "symbols": out,
+            }
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1398,6 +1397,36 @@ def _learned_merges(spark: SparkSession, sf_dir: str) -> list:
     ]
 
 
+def _bpe_apply_kernel(batches, merges: list):
+    import pandas as pd
+
+    def encode(word: str) -> int:
+        syms = list(word)
+        for lft, rgt in merges:
+            syms = _apply_merge(syms, lft, rgt)
+        return len(syms)
+
+    cache: dict[str, int] = {}
+    for pdf in batches:
+        n_bpe = []
+        n_ws = []
+        for toks in pdf["w"]:
+            n_ws.append(len(toks))
+            total = 0
+            for t in toks:
+                if t not in cache:
+                    cache[t] = encode(t)
+                total += cache[t]
+            n_bpe.append(total)
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "n_ws_tokens": n_ws,
+                "n_bpe_tokens": n_bpe,
+            }
+        )
+
+
 @query("pipeline_bpe_apply", oracle=_bpe_apply_oracle_sql())
 def pipeline_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus WITH the learned BPE merges — the apply half
@@ -1407,47 +1436,18 @@ def pipeline_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its real tokenizer instead of the whitespace proxy.
 
     Scale: merges are a driver-side list (8 pairs — the trained
-    artifact, broadcast by closure); the apply is ONE Arrow-batched
+    artifact, bound to the kernel by value); the apply is ONE Arrow-batched
     pass per document over its per-word symbol sequences (merge order
     must follow training order — BPE's greedy apply); nothing but
     (doc_id, two counts) leaves the stage.
     """
     merges = _learned_merges(spark, sf_dir)
-
-    def apply_merges(batches):
-        import pandas as pd
-
-        def encode(word: str) -> int:
-            syms = list(word)
-            for lft, rgt in merges:
-                syms = _apply_merge(syms, lft, rgt)
-            return len(syms)
-
-        cache: dict[str, int] = {}
-        for pdf in batches:
-            n_bpe = []
-            n_ws = []
-            for toks in pdf["w"]:
-                n_ws.append(len(toks))
-                total = 0
-                for t in toks:
-                    if t not in cache:
-                        cache[t] = encode(t)
-                    total += cache[t]
-                n_bpe.append(total)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_ws_tokens": n_ws,
-                    "n_bpe_tokens": n_bpe,
-                }
-            )
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("w")
     )
     out = docs.mapInPandas(
-        _arrow_kernel(apply_merges), "doc_id long, n_ws_tokens long, n_bpe_tokens long"
+        partial(_bpe_apply_kernel, merges=merges),
+        "doc_id long, n_ws_tokens long, n_bpe_tokens long",
     )
     return out.select(
         "doc_id",
@@ -1555,7 +1555,7 @@ def _bpe_extend(
         cnt = row[0]["n"] or 0
         recs.append((rnd, lft, rgt, int(cnt), "base"))
         nxt = cur.mapInPandas(
-            _arrow_kernel(_merge_symbols_factory(lft, rgt)),
+            partial(_merge_symbols, left=lft, right=rgt),
             "word string, freq long, symbols array<string>",
         ).localCheckpoint(eager=True)
         if cur is not union_wf:
@@ -3126,6 +3126,29 @@ def pipeline_survivor_policy_delta(
     )
 
 
+def _grams3_kernel(batches):
+    import re
+
+    import pandas as pd
+
+    for pdf in batches:
+        ns: list = []
+        ids: list = []
+        gs: list = []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            w = [
+                x
+                for x in re.split(r"\s+", text.lower(), flags=re.ASCII)
+                if x
+            ]
+            for n in (3, 5, 8):
+                for i in range(len(w) - (n - 1)):
+                    ns.append(n)
+                    ids.append(doc_id)
+                    gs.append(" ".join(w[i:i + n]))
+        yield pd.DataFrame({"n": ns, "doc_id": ids, "g": gs})
+
+
 @query(
     "pipeline_contamination_gram_sensitivity",
     oracle=f"""
@@ -3182,34 +3205,11 @@ def pipeline_contamination_gram_sensitivity(
     three gram streams tagged by n (the _gram_rows lesson — the text
     never re-tokenizes per n); exchanges carry (n, doc_id, md5) only.
     """
-    import re as _re
-
-    def grams3(batches):
-        import pandas as pd
-
-        ns_out: list = []
-        for pdf in batches:
-            ns: list = []
-            ids: list = []
-            gs: list = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = [
-                    x
-                    for x in _re.split(r"\s+", text.lower(), flags=_re.ASCII)
-                    if x
-                ]
-                for n in (3, 5, 8):
-                    for i in range(len(w) - (n - 1)):
-                        ns.append(n)
-                        ids.append(doc_id)
-                        gs.append(" ".join(w[i:i + n]))
-            yield pd.DataFrame({"n": ns, "doc_id": ids, "g": gs})
-
     docs = rebalanced(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     g = docs.mapInPandas(
-        _arrow_kernel(grams3), "n int, doc_id long, g string"
+        _grams3_kernel, "n int, doc_id long, g string"
     ).select("n", "doc_id", F.md5("g").alias("gh"))
     is_eval = F.col("doc_id") % _DECON_EVAL_MOD == 0
     eg = g.filter(is_eval).select("n", "gh").distinct()

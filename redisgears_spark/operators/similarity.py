@@ -17,12 +17,13 @@ aggregate) — JVM-side, no Python in the hot path.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from redisgears_spark.operators.registry import query
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.operators.text import _TOKENS_SQL
 from redisgears_spark.sources.keyspace import load_table, rebalanced
 
@@ -182,6 +183,33 @@ _TOPK_EXACT_ORACLE = f"""
     """
 
 
+def _query_topk_kernel(batches, bc, k: int):
+    import numpy as np
+    import pandas as pd
+
+    q_ids, Q = bc.value
+    for pdf in batches:
+        n_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        B = np.vstack(pdf["v"].to_numpy()).astype("int64")
+        cos = _block_cosine(Q, B)  # queries x batch
+        qq, nn = np.broadcast_arrays(q_ids[:, None], n_ids[None, :])
+        keep = qq != nn
+        out = pd.DataFrame(
+            {
+                "q_id": qq[keep],
+                "n_id": nn[keep],
+                "cosine": cos[keep],
+            }
+        )
+        # executor-side pre-reduction: keep top-k per query per batch
+        out = (
+            out.sort_values(["cosine", "n_id"], ascending=[False, True])
+            .groupby("q_id", group_keys=False)
+            .head(k)
+        )
+        yield out
+
+
 @query("sim_topk_bruteforce", oracle=_TOPK_EXACT_ORACLE)
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k for each query vector (vec_id < 8).
@@ -194,48 +222,38 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over |queries|*|corpus| scored pairs pre-reduced executor-side
     to |queries|*k per batch. For large query sets switch to sim_ann_lsh.
     """
-    import numpy as np
-
-    # queries ship once per executor as a broadcast (not per-task closure)
+    # queries ship once per executor as a broadcast, not in every task's kernel
     bc = spark.sparkContext.broadcast(
         _corpus_numpy(spark, sf_dir, predicate=F.col("vec_id") < _N_QUERIES)
     )
-
-    def score(batches):
-        import pandas as pd
-
-        q_ids, Q = bc.value
-        for pdf in batches:
-            n_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            B = np.vstack(pdf["v"].to_numpy()).astype("int64")
-            cos = _block_cosine(Q, B)  # queries x batch
-            qq, nn = np.broadcast_arrays(q_ids[:, None], n_ids[None, :])
-            keep = qq != nn
-            out = pd.DataFrame(
-                {
-                    "q_id": qq[keep],
-                    "n_id": nn[keep],
-                    "cosine": cos[keep],
-                }
-            )
-            # executor-side pre-reduction: keep top-k per query per batch
-            out = (
-                out.sort_values(["cosine", "n_id"], ascending=[False, True])
-                .groupby("q_id", group_keys=False)
-                .head(_TOP_K)
-            )
-            yield out
-
     corpus = rebalanced(
         load_table(spark, sf_dir, "embeddings").select("vec_id", F.expr(_QUANT).alias("v"))
     )
-    scored = corpus.mapInPandas(_arrow_kernel(score), "q_id long, n_id long, cosine double")
+    scored = corpus.mapInPandas(
+        partial(_query_topk_kernel, bc=bc, k=_TOP_K), "q_id long, n_id long, cosine double"
+    )
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOP_K)
         .select("q_id", "n_id", "cosine", "rank")
     )
+
+
+def _pair_score_kernel(batches, bc):
+    import numpy as np
+    import pandas as pd
+
+    ids, M = bc.value
+    for pdf in batches:
+        a_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        A = np.vstack(pdf["v"].to_numpy()).astype("int64")
+        cos = _block_cosine(A, M)
+        aa, bb = np.broadcast_arrays(a_ids[:, None], ids[None, :])
+        keep = (aa < bb) & (cos >= 0.35)
+        yield pd.DataFrame(
+            {"a_id": aa[keep], "b_id": bb[keep], "cosine": cos[keep]}
+        )
 
 
 @query(
@@ -275,29 +293,79 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 reads 0.52–0.74 s WITH the fix in place — the fix itself costs
     ≲0.1 s at sf0.1, the rest of the r10 delta was box state.
     """
-    import numpy as np
-
-    # corpus ships once per executor as a broadcast (not per-task closure)
+    # corpus ships once per executor as a broadcast, not in every task's kernel
     bc = spark.sparkContext.broadcast(_corpus_numpy(spark, sf_dir))
-
-    def score(batches):
-        import pandas as pd
-
-        ids, M = bc.value
-        for pdf in batches:
-            a_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            A = np.vstack(pdf["v"].to_numpy()).astype("int64")
-            cos = _block_cosine(A, M)
-            aa, bb = np.broadcast_arrays(a_ids[:, None], ids[None, :])
-            keep = (aa < bb) & (cos >= 0.35)
-            yield pd.DataFrame(
-                {"a_id": aa[keep], "b_id": bb[keep], "cosine": cos[keep]}
-            )
-
     corpus = rebalanced(
         load_table(spark, sf_dir, "embeddings").select("vec_id", F.expr(_QUANT).alias("v"))
     )
-    return corpus.mapInPandas(_arrow_kernel(score), "a_id long, b_id long, cosine double")
+    return corpus.mapInPandas(
+        partial(_pair_score_kernel, bc=bc), "a_id long, b_id long, cosine double"
+    )
+
+
+def _sign_bucket_kernel(batches, planes):
+    """Bucket bit = EXACT integer sign of (quantized vector · ±1
+    plane) — with the Rademacher planes the projection is a sum of
+    int64 micro-units, so buckets are order-independent and the
+    DuckDB oracle replays them bit-for-bit (no float boundary)."""
+    import numpy as np
+    import pandas as pd
+
+    P = planes.reshape(-1, planes.shape[-1]).T  # (dim, T*B) of ±1
+    weights = (1 << np.arange(_LSH_BITS, dtype="int64"))
+    for pdf in batches:
+        Q = np.vstack(pdf["v"].to_numpy()).astype("int64")
+        bits = (Q @ P) > 0
+        bits = bits.reshape(len(Q), _LSH_TABLES, _LSH_BITS)
+        bucket = (bits * weights[None, None, :]).sum(axis=2)
+        vec_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        n = len(Q)
+        yield pd.DataFrame(
+            {
+                "vec_id": np.repeat(vec_ids, _LSH_TABLES),
+                "tbl": np.tile(
+                    np.arange(_LSH_TABLES, dtype="int64"), n
+                ),
+                "bucket": bucket.reshape(-1),
+                "v": [
+                    row
+                    for row in pdf["v"]
+                    for _ in range(_LSH_TABLES)
+                ],
+            }
+        )
+
+
+def _bucket_verify_kernel(key, pdf):
+    """One (table, bucket) group: stack the member vectors, one
+    blocked exact-integer matmul, emit above-threshold (a<b) pairs.
+    Chunked so a hot bucket stays bounded-memory."""
+    import numpy as np
+    import pandas as pd
+
+    ids = pdf["vec_id"].to_numpy(dtype="int64")
+    if len(ids) < 2:
+        return pd.DataFrame(
+            {"a_id": [], "b_id": [], "cosine": []}
+        ).astype({"a_id": "int64", "b_id": "int64", "cosine": "float64"})
+    M = np.vstack([np.asarray(x, dtype="int64") for x in pdf["v"]])
+    outs = []
+    for lo in range(0, len(ids), 4096):
+        hi = min(lo + 4096, len(ids))
+        cos = _block_cosine(M[lo:hi], M)
+        aa = np.repeat(ids[lo:hi], len(ids))
+        bb = np.tile(ids, hi - lo)
+        keep = (aa < bb) & (cos.ravel() >= 0.35)
+        outs.append(
+            pd.DataFrame(
+                {
+                    "a_id": aa[keep],
+                    "b_id": bb[keep],
+                    "cosine": cos.ravel()[keep],
+                }
+            )
+        )
+    return pd.concat(outs, ignore_index=True)
 
 
 def embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,78 +394,16 @@ def embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     planes = np.array(_sign_planes(), dtype="int64")
-
-    def bucket_verify(key, pdf):
-        """One (table, bucket) group: stack the member vectors, one
-        blocked exact-integer matmul, emit above-threshold (a<b) pairs.
-        Chunked so a hot bucket stays bounded-memory."""
-        import pandas as pd
-
-        ids = pdf["vec_id"].to_numpy(dtype="int64")
-        if len(ids) < 2:
-            return pd.DataFrame(
-                {"a_id": [], "b_id": [], "cosine": []}
-            ).astype({"a_id": "int64", "b_id": "int64", "cosine": "float64"})
-        M = np.vstack([np.asarray(x, dtype="int64") for x in pdf["v"]])
-        outs = []
-        for lo in range(0, len(ids), 4096):
-            hi = min(lo + 4096, len(ids))
-            cos = _block_cosine(M[lo:hi], M)
-            aa = np.repeat(ids[lo:hi], len(ids))
-            bb = np.tile(ids, hi - lo)
-            keep = (aa < bb) & (cos.ravel() >= 0.35)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "a_id": aa[keep],
-                        "b_id": bb[keep],
-                        "cosine": cos.ravel()[keep],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    def bucketize(batches):
-        """Bucket bit = EXACT integer sign of (quantized vector · ±1
-        plane) — with the Rademacher planes the projection is a sum of
-        int64 micro-units, so buckets are order-independent and the
-        DuckDB oracle replays them bit-for-bit (no float boundary)."""
-        import pandas as pd
-
-        P = planes.reshape(-1, planes.shape[-1]).T  # (dim, T*B) of ±1
-        weights = (1 << np.arange(_LSH_BITS, dtype="int64"))
-        for pdf in batches:
-            Q = np.vstack(pdf["v"].to_numpy()).astype("int64")
-            bits = (Q @ P) > 0
-            bits = bits.reshape(len(Q), _LSH_TABLES, _LSH_BITS)
-            bucket = (bits * weights[None, None, :]).sum(axis=2)
-            vec_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            n = len(Q)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vec_ids, _LSH_TABLES),
-                    "tbl": np.tile(
-                        np.arange(_LSH_TABLES, dtype="int64"), n
-                    ),
-                    "bucket": bucket.reshape(-1),
-                    "v": [
-                        row
-                        for row in pdf["v"]
-                        for _ in range(_LSH_TABLES)
-                    ],
-                }
-            )
-
     emb = rebalanced(load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_QUANT).alias("v")
     ))
     buckets = emb.mapInPandas(
-        _arrow_kernel(bucketize),
+        partial(_sign_bucket_kernel, planes=planes),
         "vec_id long, tbl long, bucket long, v array<bigint>",
     )
     return (
         buckets.groupBy("tbl", "bucket")
-        .applyInPandas(bucket_verify, "a_id long, b_id long, cosine double")
+        .applyInPandas(_bucket_verify_kernel, "a_id long, b_id long, cosine double")
         .dropDuplicates(["a_id", "b_id"])
     )
 
@@ -516,6 +522,39 @@ _IVF_CELLS = 16
 _IVF_NPROBE = 10
 
 
+def _ivf_stats_kernel(batches, C):
+    """Assign cells AND accumulate the Lloyd sums in one pass,
+    executor-side: each partition emits |cells|*dim partial rows
+    (int64 sums + counts) instead of shuffling |corpus|*dim exploded
+    values through a join. Order-independent integer sums keep the
+    refinement bit-stable under any partitioning."""
+    import numpy as np
+    import pandas as pd
+
+    sums = None  # (cells, dim) int64
+    counts = np.zeros(_IVF_CELLS, dtype="int64")
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        Q = np.vstack(pdf["q"].to_numpy()).astype("int64")
+        if sums is None:
+            sums = np.zeros((_IVF_CELLS, Q.shape[1]), dtype="int64")
+        cell = (V @ C.T).argmax(axis=1)  # ties → lowest cell index
+        for c in np.unique(cell):
+            sums[c] += Q[cell == c].sum(axis=0)
+        counts += np.bincount(cell, minlength=_IVF_CELLS)
+    if sums is None:
+        return
+    cells, dim = sums.shape
+    yield pd.DataFrame(
+        {
+            "cell": np.repeat(np.arange(cells, dtype="int64"), dim),
+            "pos": np.tile(np.arange(dim, dtype="int64"), cells),
+            "s": sums.reshape(-1),
+            "n": np.repeat(counts, dim),
+        }
+    )
+
+
 def _ivf_centroids(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     """Deterministic IVF coarse quantizer: fixed seed vectors (vec_id
     100..115) + ONE distributed Lloyd refinement, retrained per
@@ -550,37 +589,6 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     C = np.vstack(seeds_pdf["v"].to_numpy()).astype("float64")
     C = C / np.linalg.norm(C, axis=1, keepdims=True)
 
-    def partial_stats(batches):
-        """Assign cells AND accumulate the Lloyd sums in one pass,
-        executor-side: each partition emits |cells|*dim partial rows
-        (int64 sums + counts) instead of shuffling |corpus|*dim exploded
-        values through a join. Order-independent integer sums keep the
-        refinement bit-stable under any partitioning."""
-        import pandas as pd
-
-        sums = None  # (cells, dim) int64
-        counts = np.zeros(_IVF_CELLS, dtype="int64")
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            Q = np.vstack(pdf["q"].to_numpy()).astype("int64")
-            if sums is None:
-                sums = np.zeros((_IVF_CELLS, Q.shape[1]), dtype="int64")
-            cell = (V @ C.T).argmax(axis=1)  # ties → lowest cell index
-            for c in np.unique(cell):
-                sums[c] += Q[cell == c].sum(axis=0)
-            counts += np.bincount(cell, minlength=_IVF_CELLS)
-        if sums is None:
-            return
-        cells, dim = sums.shape
-        yield pd.DataFrame(
-            {
-                "cell": np.repeat(np.arange(cells, dtype="int64"), dim),
-                "pos": np.tile(np.arange(dim, dtype="int64"), cells),
-                "s": sums.reshape(-1),
-                "n": np.repeat(counts, dim),
-            }
-        )
-
     vecs = rebalanced(emb.select(
         "vec_id",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
@@ -589,7 +597,9 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     # Lloyd step: per-(cell, dim) exact-integer mean over quantized values —
     # map-side partials, one tiny final agg, zero corpus-width shuffles
     stats = (
-        vecs.mapInPandas(_arrow_kernel(partial_stats), "cell long, pos long, s long, n long")
+        vecs.mapInPandas(
+            partial(_ivf_stats_kernel, C=C), "cell long, pos long, s long, n long"
+        )
         .groupBy("cell", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .filter(F.col("n") > 0)
@@ -599,6 +609,27 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     for r in stats:
         refined[r["cell"], r["pos"]] = (r["s"] / r["n"]) / 1e6
     return refined / np.linalg.norm(refined, axis=1, keepdims=True)
+
+
+def _ivf_assign_kernel(batches, C):
+    """One pass emits the inverted list AND the quantized vector +
+    norm — the candidate rescore joins against this output instead of
+    re-scanning the embeddings table (scan count matters at 100 TB)."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        Q = np.vstack(pdf["q"].to_numpy()).astype("int64")
+        cell = (V @ C.T).argmax(axis=1)
+        yield pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
+                "cell": cell.astype("int64"),
+                "n_q": list(Q),
+                "n_nq": np.einsum("ij,ij->i", Q, Q),
+            }
+        )
 
 
 def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
@@ -625,25 +656,6 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         spark, sf_dir, seeds_pdf=_vec_slice(fetched, 100, 100 + _IVF_CELLS - 1)
     )
 
-    def assign_corpus(batches):
-        """One pass emits the inverted list AND the quantized vector +
-        norm — the candidate rescore joins against this output instead of
-        re-scanning the embeddings table (scan count matters at 100 TB)."""
-        import pandas as pd
-
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            Q = np.vstack(pdf["q"].to_numpy()).astype("int64")
-            cell = (V @ C.T).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
-                    "cell": cell.astype("int64"),
-                    "n_q": list(Q),
-                    "n_nq": np.einsum("ij,ij->i", Q, Q),
-                }
-            )
-
     q_pdf = _vec_slice(fetched, 0, _N_QUERIES - 1)
     QV = np.vstack(q_pdf["v"].to_numpy()).astype("float64")
     q_ids = q_pdf["vec_id"].to_numpy(dtype="int64")
@@ -663,7 +675,8 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         F.expr(_QUANT).alias("q"),
     ))
     lists = vecs.mapInPandas(
-        _arrow_kernel(assign_corpus), "vec_id long, cell long, n_q array<bigint>, n_nq long"
+        partial(_ivf_assign_kernel, C=C),
+        "vec_id long, cell long, n_q array<bigint>, n_nq long",
     )
     cand = (
         lists.join(F.broadcast(probes), "cell")
@@ -766,6 +779,29 @@ def _sign_planes(dim: int = 64):
     return out
 
 
+def _lsh_bucket_kernel(batches, planes):
+    import numpy as np
+    import pandas as pd
+
+    # sign-bit bucketing as one (batch × dim) @ (dim × tables*bits)
+    # matmul per Arrow batch — vectorized, deterministic
+    P = planes.reshape(-1, planes.shape[-1]).T  # (dim, tables*bits)
+    weights = (1 << np.arange(_LSH_BITS, dtype="int64"))
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        bits = (V @ P) > 0  # (batch, tables*bits)
+        bits = bits.reshape(len(V), _LSH_TABLES, _LSH_BITS)
+        bucket = (bits * weights[None, None, :]).sum(axis=2)  # (batch, tables)
+        vec_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        yield pd.DataFrame(
+            {
+                "vec_id": np.repeat(vec_ids, _LSH_TABLES),
+                "tbl": np.tile(np.arange(_LSH_TABLES, dtype="int64"), len(V)),
+                "bucket": bucket.reshape(-1),
+            }
+        )
+
+
 @query("sim_ann_lsh")  # approximate — rows-only check; recall tested in tests/
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH.
@@ -779,32 +815,12 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     planes = np.array(_hyperplanes())  # (tables, bits, dim)
-
-    def bucketize(batches):
-        import pandas as pd
-
-        # sign-bit bucketing as one (batch × dim) @ (dim × tables*bits)
-        # matmul per Arrow batch — vectorized, deterministic
-        P = planes.reshape(-1, planes.shape[-1]).T  # (dim, tables*bits)
-        weights = (1 << np.arange(_LSH_BITS, dtype="int64"))
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            bits = (V @ P) > 0  # (batch, tables*bits)
-            bits = bits.reshape(len(V), _LSH_TABLES, _LSH_BITS)
-            bucket = (bits * weights[None, None, :]).sum(axis=2)  # (batch, tables)
-            vec_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vec_ids, _LSH_TABLES),
-                    "tbl": np.tile(np.arange(_LSH_TABLES, dtype="int64"), len(V)),
-                    "bucket": bucket.reshape(-1),
-                }
-            )
-
     emb = rebalanced(load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v")
     ))
-    buckets = emb.mapInPandas(_arrow_kernel(bucketize), "vec_id long, tbl long, bucket long")
+    buckets = emb.mapInPandas(
+        partial(_lsh_bucket_kernel, planes=planes), "vec_id long, tbl long, bucket long"
+    )
 
     queries = buckets.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "tbl", "bucket"
@@ -845,6 +861,55 @@ _PQ_K = 16
 _PQ_SHORTLIST = 256
 
 
+def _nearest_subcentroid(X, C):
+    """Index of each row of X's nearest row of C by L2: argmin of
+    ||x||^2 - 2 x.c + ||c||^2, ties → lowest index. The PQ and IVF-PQ
+    trainers and encoders all assign codes with this one expression."""
+    import numpy as np
+
+    d2 = (
+        np.einsum("ij,ij->i", X, X)[:, None]
+        - 2.0 * (X @ C.T)
+        + np.einsum("ij,ij->i", C, C)[None, :]
+    )
+    return d2.argmin(axis=1)
+
+
+def _pq_stats_kernel(batches, C):
+    import numpy as np
+    import pandas as pd
+
+    dsub = C.shape[2]
+    sums = np.zeros((_PQ_M, _PQ_K, dsub), dtype="int64")
+    counts = np.zeros((_PQ_M, _PQ_K), dtype="int64")
+    seen = False
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        Q = np.vstack(pdf["q"].to_numpy()).astype("int64")
+        seen = True
+        for m in range(_PQ_M):
+            Vm = V[:, m * dsub : (m + 1) * dsub]
+            Qm = Q[:, m * dsub : (m + 1) * dsub]
+            code = _nearest_subcentroid(Vm, C[m])
+            for k in np.unique(code):
+                sums[m, k] += Qm[code == k].sum(axis=0)
+            counts[m] += np.bincount(code, minlength=_PQ_K)
+    if not seen:
+        return
+    m_idx = np.repeat(np.arange(_PQ_M, dtype="int64"), _PQ_K * dsub)
+    k_idx = np.tile(np.repeat(np.arange(_PQ_K, dtype="int64"), dsub), _PQ_M)
+    p_idx = np.tile(np.arange(dsub, dtype="int64"), _PQ_M * _PQ_K)
+    yield pd.DataFrame(
+        {
+            "m": m_idx,
+            "k": k_idx,
+            "pos": p_idx,
+            "s": sums.reshape(-1),
+            "n": counts.repeat(dsub).reshape(-1),
+        }
+    )
+
+
 def _pq_codebooks(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     """Deterministic PQ codebooks: seed centroids from fixed corpus rows
     (vec_id 200..215, one sub-vector per subspace each) + ONE distributed
@@ -870,47 +935,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     dsub = dim // _PQ_M
     # C[m, k] = k-th seed vector's m-th sub-vector
     C = np.stack([S[:, m * dsub : (m + 1) * dsub] for m in range(_PQ_M)])
-
-    def partial_stats(batches):
-        import pandas as pd
-
-        sums = np.zeros((_PQ_M, _PQ_K, dsub), dtype="int64")
-        counts = np.zeros((_PQ_M, _PQ_K), dtype="int64")
-        seen = False
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            Q = np.vstack(pdf["q"].to_numpy()).astype("int64")
-            seen = True
-            for m in range(_PQ_M):
-                Vm = V[:, m * dsub : (m + 1) * dsub]
-                Qm = Q[:, m * dsub : (m + 1) * dsub]
-                # nearest centroid by L2: argmin ||v - c||^2; ties → lowest k
-                d2 = (
-                    np.einsum("ij,ij->i", Vm, Vm)[:, None]
-                    - 2.0 * (Vm @ C[m].T)
-                    + np.einsum("ij,ij->i", C[m], C[m])[None, :]
-                )
-                code = d2.argmin(axis=1)
-                for k in np.unique(code):
-                    sums[m, k] += Qm[code == k].sum(axis=0)
-                counts[m] += np.bincount(code, minlength=_PQ_K)
-        if not seen:
-            return
-        m_idx = np.repeat(np.arange(_PQ_M, dtype="int64"), _PQ_K * dsub)
-        k_idx = np.tile(np.repeat(np.arange(_PQ_K, dtype="int64"), dsub), _PQ_M)
-        p_idx = np.tile(np.arange(dsub, dtype="int64"), _PQ_M * _PQ_K)
-        yield pd.DataFrame(
-            {
-                "m": m_idx,
-                "k": k_idx,
-                "pos": p_idx,
-                "s": sums.reshape(-1),
-                "n": counts.repeat(dsub).reshape(-1),
-            }
-        )
-
-    import pandas as pd  # noqa: F401  (workers import inside closures)
-
     vecs = rebalanced(
         emb.select(
             "vec_id",
@@ -919,7 +943,9 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, seeds_pdf=None):
         )
     )
     stats = (
-        vecs.mapInPandas(_arrow_kernel(partial_stats), "m long, k long, pos long, s long, n long")
+        vecs.mapInPandas(
+            partial(_pq_stats_kernel, C=C), "m long, k long, pos long, s long, n long"
+        )
         .groupBy("m", "k", "pos")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
         .filter(F.col("n") > 0)
@@ -929,6 +955,46 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, seeds_pdf=None):
     for r in stats:
         refined[r["m"], r["k"], r["pos"]] = (r["s"] / r["n"]) / 1e6
     return refined
+
+
+def _pq_encode_kernel(batches, C):
+    import numpy as np
+    import pandas as pd
+
+    dsub = C.shape[2]
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        packed = np.zeros(len(V), dtype="int64")
+        for m in range(_PQ_M):
+            Vm = V[:, m * dsub : (m + 1) * dsub]
+            packed |= _nearest_subcentroid(Vm, C[m]).astype("int64") << (4 * m)
+        yield pd.DataFrame(
+            {"vec_id": pdf["vec_id"].to_numpy(dtype="int64"), "code": packed}
+        )
+
+
+def _pq_adc_kernel(batches, q_ids, lut):
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        packed = pdf["code"].to_numpy(dtype="int64")
+        vec_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        # unpack to (n, M) code matrix
+        codes_m = np.stack(
+            [(packed >> (4 * m)) & 0xF for m in range(_PQ_M)], axis=1
+        )
+        # scores[q, n] = sum_m lut[q, m, codes_m[n, m]]
+        scores = lut[:, np.arange(_PQ_M)[None, :], codes_m].sum(axis=2)
+        top = min(_PQ_SHORTLIST, scores.shape[1])
+        idx = np.argpartition(-scores, top - 1, axis=1)[:, :top]
+        yield pd.DataFrame(
+            {
+                "q_id": np.repeat(q_ids, top),
+                "n_id": vec_ids[idx].reshape(-1),
+                "adc": np.take_along_axis(scores, idx, axis=1).reshape(-1),
+            }
+        )
 
 
 @query("sim_ann_pq")  # approximate — rows-only check; recall tested in tests/
@@ -950,8 +1016,8 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: codebook training is one seeded Lloyd pass (map-side integer
     partials, 1024-row driver gather); encoding is one narrow Arrow pass
-    emitting (vec_id, 1 long); the ADC scan broadcasts 8 tiny LUTs inside
-    the closure and shuffles only the per-partition shortlists
+    emitting (vec_id, 1 long); the ADC scan carries 8 tiny LUTs bound to
+    its kernel and shuffles only the per-partition shortlists
     (queries x S rows per partition).
     """
     import numpy as np
@@ -968,64 +1034,22 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, seeds_pdf=_vec_slice(fetched, 200, 200 + _PQ_K - 1)
     )  # (M, K, dsub)
     dsub = C.shape[2]
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            packed = np.zeros(len(V), dtype="int64")
-            for m in range(_PQ_M):
-                Vm = V[:, m * dsub : (m + 1) * dsub]
-                d2 = (
-                    np.einsum("ij,ij->i", Vm, Vm)[:, None]
-                    - 2.0 * (Vm @ C[m].T)
-                    + np.einsum("ij,ij->i", C[m], C[m])[None, :]
-                )
-                packed |= d2.argmin(axis=1).astype("int64") << (4 * m)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(dtype="int64"), "code": packed}
-            )
-
     emb = rebalanced(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
     )
-    codes = emb.mapInPandas(_arrow_kernel(encode), "vec_id long, code long")
+    codes = emb.mapInPandas(partial(_pq_encode_kernel, C=C), "vec_id long, code long")
 
-    # query LUTs: tiny (8 queries × M × K doubles), shipped in the closure
+    # query LUTs: tiny (8 queries × M × K doubles), bound to the ADC kernel
     q_pdf = _vec_slice(fetched, 0, _N_QUERIES - 1)
     QV = np.vstack(q_pdf["v"].to_numpy()).astype("float64")
     q_ids = q_pdf["vec_id"].to_numpy(dtype="int64")
     # lut[q, m, k] = dot(q_m, C[m, k])
     lut = np.einsum("qmd,mkd->qmk", QV.reshape(len(QV), _PQ_M, dsub), C)
-
-    def adc_shortlist(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            packed = pdf["code"].to_numpy(dtype="int64")
-            vec_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            # unpack to (n, M) code matrix
-            codes_m = np.stack(
-                [(packed >> (4 * m)) & 0xF for m in range(_PQ_M)], axis=1
-            )
-            # scores[q, n] = sum_m lut[q, m, codes_m[n, m]]
-            scores = lut[:, np.arange(_PQ_M)[None, :], codes_m].sum(axis=2)
-            top = min(_PQ_SHORTLIST, scores.shape[1])
-            idx = np.argpartition(-scores, top - 1, axis=1)[:, :top]
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, top),
-                    "n_id": vec_ids[idx].reshape(-1),
-                    "adc": np.take_along_axis(scores, idx, axis=1).reshape(-1),
-                }
-            )
-
     shortlist = codes.mapInPandas(
-        _arrow_kernel(adc_shortlist), "q_id long, n_id long, adc double"
+        partial(_pq_adc_kernel, q_ids=q_ids, lut=lut), "q_id long, n_id long, adc double"
     )
     w_adc = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
     cand = (
@@ -1448,6 +1472,22 @@ def embeddings_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RANGE_THRESHOLD = 0.3
 
 
+def _range_score_kernel(batches, bc):
+    import numpy as np
+    import pandas as pd
+
+    q_ids, Q = bc.value
+    for pdf in batches:
+        n_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        B = np.vstack(pdf["v"].to_numpy()).astype("int64")
+        cos = _block_cosine(Q, B)
+        qq, nn = np.broadcast_arrays(q_ids[:, None], n_ids[None, :])
+        keep = (qq != nn) & (cos >= _RANGE_THRESHOLD)
+        yield pd.DataFrame(
+            {"q_id": qq[keep], "n_id": nn[keep], "cosine": cos[keep]}
+        )
+
+
 @query(
     "sim_range_search",
     oracle=f"""
@@ -1481,32 +1521,17 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     result (top-k needs its per-query window; range search doesn't).
     Result size is data-dependent by nature; the threshold bounds it.
     """
-    import numpy as np
-
     bc = spark.sparkContext.broadcast(
         _corpus_numpy(spark, sf_dir, predicate=F.col("vec_id") < _N_QUERIES)
     )
-
-    def score(batches):
-        import pandas as pd
-
-        q_ids, Q = bc.value
-        for pdf in batches:
-            n_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            B = np.vstack(pdf["v"].to_numpy()).astype("int64")
-            cos = _block_cosine(Q, B)
-            qq, nn = np.broadcast_arrays(q_ids[:, None], n_ids[None, :])
-            keep = (qq != nn) & (cos >= _RANGE_THRESHOLD)
-            yield pd.DataFrame(
-                {"q_id": qq[keep], "n_id": nn[keep], "cosine": cos[keep]}
-            )
-
     corpus = rebalanced(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.expr(_QUANT).alias("v")
         )
     )
-    return corpus.mapInPandas(_arrow_kernel(score), "q_id long, n_id long, cosine double")
+    return corpus.mapInPandas(
+        partial(_range_score_kernel, bc=bc), "q_id long, n_id long, cosine double"
+    )
 
 
 _MMR_POOL = 20  # relevance pool fed to the re-ranker
@@ -1595,6 +1620,38 @@ def _mmr_oracle_sql() -> str:
     return "WITH " + ",".join(parts) + "\n    " + tail
 
 
+def _mmr_kernel(key, pdf):
+    import numpy as np
+    import pandas as pd
+
+    qid = key[0]
+    ids = pdf["n_id"].to_numpy(dtype="int64")
+    V = np.vstack(pdf["v"].to_numpy()).astype("int64")
+    rel = pdf["cosine"].to_numpy()
+    order = np.argsort(ids, kind="stable")  # ties → smallest n_id
+    ids, V, rel = ids[order], V[order], rel[order]
+    S = _block_cosine(V, V)
+    selected: list[int] = []
+    remaining = list(range(len(ids)))
+    while remaining and len(selected) < _MMR_K:
+        best, best_score = None, None
+        for i in remaining:
+            div = max((S[i][j] for j in selected), default=0.0)
+            sc = _MMR_LAMBDA * rel[i] - (1 - _MMR_LAMBDA) * div
+            if best_score is None or sc > best_score:
+                best, best_score = i, sc
+        selected.append(best)
+        remaining.remove(best)
+    return pd.DataFrame(
+        {
+            "q_id": np.full(len(selected), qid, dtype="int64"),
+            "n_id": ids[selected],
+            "mmr_rank": np.arange(1, len(selected) + 1, dtype="int64"),
+            "relevance": rel[selected],
+        }
+    )
+
+
 @query("sim_mmr_rerank", oracle=_mmr_oracle_sql())
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-Marginal-Relevance re-ranking: from each query's top-20
@@ -1619,37 +1676,17 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy loop runs executor-side per query over ≤20 candidates
     (O(pool²·k) integer ops — trivial).
     """
-    import numpy as np
-
     bc = spark.sparkContext.broadcast(
         _corpus_numpy(spark, sf_dir, predicate=F.col("vec_id") < _N_QUERIES)
     )
-
-    def score(batches):
-        import pandas as pd
-
-        q_ids, Q = bc.value
-        for pdf in batches:
-            n_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            B = np.vstack(pdf["v"].to_numpy()).astype("int64")
-            cos = _block_cosine(Q, B)
-            qq, nn = np.broadcast_arrays(q_ids[:, None], n_ids[None, :])
-            keep = qq != nn
-            out = pd.DataFrame(
-                {"q_id": qq[keep], "n_id": nn[keep], "cosine": cos[keep]}
-            )
-            yield (
-                out.sort_values(["cosine", "n_id"], ascending=[False, True])
-                .groupby("q_id", group_keys=False)
-                .head(_MMR_POOL)
-            )
-
     corpus = rebalanced(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.expr(_QUANT).alias("v")
         )
     )
-    scored = corpus.mapInPandas(_arrow_kernel(score), "q_id long, n_id long, cosine double")
+    scored = corpus.mapInPandas(
+        partial(_query_topk_kernel, bc=bc, k=_MMR_POOL), "q_id long, n_id long, cosine double"
+    )
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     pool = (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1660,42 +1697,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("n_id"), F.expr(_QUANT).alias("v")
     )
     cand = emb.join(F.broadcast(pool), "n_id")
-
-    def mmr(key, pdf):
-        import pandas as pd
-
-        qid = key[0]
-        ids = pdf["n_id"].to_numpy(dtype="int64")
-        V = np.vstack(pdf["v"].to_numpy()).astype("int64")
-        rel = pdf["cosine"].to_numpy()
-        order = np.argsort(ids, kind="stable")  # ties → smallest n_id
-        ids, V, rel = ids[order], V[order], rel[order]
-        S = _block_cosine(V, V)
-        selected: list[int] = []
-        remaining = list(range(len(ids)))
-        while remaining and len(selected) < _MMR_K:
-            best, best_score = None, None
-            for i in remaining:
-                div = max((S[i][j] for j in selected), default=0.0)
-                sc = _MMR_LAMBDA * rel[i] - (1 - _MMR_LAMBDA) * div
-                if best_score is None or sc > best_score:
-                    best, best_score = i, sc
-            selected.append(best)
-            remaining.remove(best)
-        return pd.DataFrame(
-            {
-                "q_id": np.full(len(selected), qid, dtype="int64"),
-                "n_id": ids[selected],
-                "mmr_rank": np.arange(1, len(selected) + 1, dtype="int64"),
-                "relevance": rel[selected],
-            }
-        )
-
-    # applyInPandas inspects the kernel's arity, so mmr takes no
-    # arrow_kernel wrapper; it refers to _block_cosine, so unpickling it
-    # imports the package, which installs workerpatch
     return cand.groupBy("q_id").applyInPandas(
-        mmr, "q_id long, n_id long, mmr_rank long, relevance double"
+        _mmr_kernel, "q_id long, n_id long, mmr_rank long, relevance double"
     )
 
 
@@ -2553,6 +2556,50 @@ _IVFPQ_M = 16
 _IVFPQ_SHORTLIST = 256
 
 
+def _ivfpq_stats_kernel(batches, C_ivf, R):
+    import numpy as np
+    import pandas as pd
+
+    dsub = R.shape[2]
+    sums = np.zeros((_IVFPQ_M, _PQ_K, dsub), dtype="int64")
+    counts = np.zeros((_IVFPQ_M, _PQ_K), dtype="int64")
+    seen = False
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        seen = True
+        cells = (V @ C_ivf.T).argmax(axis=1)
+        res = V - C_ivf[cells]
+        # quantized residual micro-units: HALF_UP, the module's
+        # rounding discipline — integer partials stay order-free
+        d = res * 1e6
+        RQ = np.where(
+            d >= 0, np.floor(d + 0.5), np.ceil(d - 0.5)
+        ).astype("int64")
+        for m in range(_IVFPQ_M):
+            Rm = res[:, m * dsub : (m + 1) * dsub]
+            Qm = RQ[:, m * dsub : (m + 1) * dsub]
+            code = _nearest_subcentroid(Rm, R[m])
+            for k in np.unique(code):
+                sums[m, k] += Qm[code == k].sum(axis=0)
+            counts[m] += np.bincount(code, minlength=_PQ_K)
+    if not seen:
+        return
+    m_idx = np.repeat(np.arange(_IVFPQ_M, dtype="int64"), _PQ_K * dsub)
+    k_idx = np.tile(
+        np.repeat(np.arange(_PQ_K, dtype="int64"), dsub), _IVFPQ_M
+    )
+    p_idx = np.tile(np.arange(dsub, dtype="int64"), _IVFPQ_M * _PQ_K)
+    yield pd.DataFrame(
+        {
+            "m": m_idx,
+            "k": k_idx,
+            "pos": p_idx,
+            "s": sums.reshape(-1),
+            "n": counts.repeat(dsub).reshape(-1),
+        }
+    )
+
+
 def _ivfpq_codebooks(spark: SparkSession, sf_dir: str, C_ivf=None, seeds_pdf=None):
     """Residual PQ codebooks — the IVFADC trainer: sub-quantize the
     RESIDUAL (v − its IVF cell centroid), not the raw vector. Residuals
@@ -2588,53 +2635,6 @@ def _ivfpq_codebooks(spark: SparkSession, sf_dir: str, C_ivf=None, seeds_pdf=Non
     R = np.stack(
         [RS[:, m * dsub : (m + 1) * dsub] for m in range(_IVFPQ_M)]
     )
-
-    def partial_stats(batches):
-        import pandas as pd
-
-        sums = np.zeros((_IVFPQ_M, _PQ_K, dsub), dtype="int64")
-        counts = np.zeros((_IVFPQ_M, _PQ_K), dtype="int64")
-        seen = False
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            seen = True
-            cells = (V @ C_ivf.T).argmax(axis=1)
-            res = V - C_ivf[cells]
-            # quantized residual micro-units: HALF_UP, the module's
-            # rounding discipline — integer partials stay order-free
-            d = res * 1e6
-            RQ = np.where(
-                d >= 0, np.floor(d + 0.5), np.ceil(d - 0.5)
-            ).astype("int64")
-            for m in range(_IVFPQ_M):
-                Rm = res[:, m * dsub : (m + 1) * dsub]
-                Qm = RQ[:, m * dsub : (m + 1) * dsub]
-                d2 = (
-                    np.einsum("ij,ij->i", Rm, Rm)[:, None]
-                    - 2.0 * (Rm @ R[m].T)
-                    + np.einsum("ij,ij->i", R[m], R[m])[None, :]
-                )
-                code = d2.argmin(axis=1)
-                for k in np.unique(code):
-                    sums[m, k] += Qm[code == k].sum(axis=0)
-                counts[m] += np.bincount(code, minlength=_PQ_K)
-        if not seen:
-            return
-        m_idx = np.repeat(np.arange(_IVFPQ_M, dtype="int64"), _PQ_K * dsub)
-        k_idx = np.tile(
-            np.repeat(np.arange(_PQ_K, dtype="int64"), dsub), _IVFPQ_M
-        )
-        p_idx = np.tile(np.arange(dsub, dtype="int64"), _IVFPQ_M * _PQ_K)
-        yield pd.DataFrame(
-            {
-                "m": m_idx,
-                "k": k_idx,
-                "pos": p_idx,
-                "s": sums.reshape(-1),
-                "n": counts.repeat(dsub).reshape(-1),
-            }
-        )
-
     vecs = rebalanced(
         emb.select(
             "vec_id",
@@ -2643,7 +2643,7 @@ def _ivfpq_codebooks(spark: SparkSession, sf_dir: str, C_ivf=None, seeds_pdf=Non
     )
     stats = (
         vecs.mapInPandas(
-            _arrow_kernel(partial_stats),
+            partial(_ivfpq_stats_kernel, C_ivf=C_ivf, R=R),
             "m long, k long, pos long, s long, n long",
         )
         .groupBy("m", "k", "pos")
@@ -2655,6 +2655,87 @@ def _ivfpq_codebooks(spark: SparkSession, sf_dir: str, C_ivf=None, seeds_pdf=Non
     for r in stats:
         refined[r["m"], r["k"], r["pos"]] = (r["s"] / r["n"]) / 1e6
     return refined
+
+
+def _ivfpq_encode_kernel(batches, C_ivf, R):
+    import numpy as np
+    import pandas as pd
+
+    dsub = R.shape[2]
+    for pdf in batches:
+        V = np.vstack(pdf["v"].to_numpy()).astype("float64")
+        cells = (V @ C_ivf.T).argmax(axis=1)
+        res = V - C_ivf[cells]
+        # 16 × 4-bit codes = 64 bits: packed in TWO longs (codes
+        # 0..7 in lo, 8..15 in hi) so the sign bit never hosts a
+        # code nibble
+        lo = np.zeros(len(V), dtype="int64")
+        hi = np.zeros(len(V), dtype="int64")
+        for m in range(_IVFPQ_M):
+            Rm = res[:, m * dsub : (m + 1) * dsub]
+            code = _nearest_subcentroid(Rm, R[m]).astype("int64")
+            if m < 8:
+                lo |= code << (4 * m)
+            else:
+                hi |= code << (4 * (m - 8))
+        yield pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
+                "cell": cells.astype("int64"),
+                "code_lo": lo,
+                "code_hi": hi,
+                # the vector's L2 norm rides along (one double) so the
+                # ADC scan can rank by approximate COSINE — the truth
+                # metric — instead of raw dot: without it, high-norm
+                # vectors crowd the shortlist and recall@10 at sf0.1
+                # measured 0.575; with it 0.85+ (see ann_recall)
+                "vnorm": np.sqrt(np.einsum("ij,ij->i", V, V)),
+            }
+        )
+
+
+def _ivfpq_adc_kernel(batches, q_index: dict, qdots, lut):
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        qi = pdf["q_id"].map(q_index).to_numpy(dtype="int64")
+        lo = pdf["code_lo"].to_numpy(dtype="int64")
+        hi = pdf["code_hi"].to_numpy(dtype="int64")
+        cells = pdf["cell"].to_numpy(dtype="int64")
+        codes_m = np.stack(
+            [(lo >> (4 * m)) & 0xF for m in range(8)]
+            + [(hi >> (4 * m)) & 0xF for m in range(_IVFPQ_M - 8)],
+            axis=1,
+        )
+        # q·v ≈ q·c + Σ_m lut[q, m, code_m]; divide by the carried
+        # corpus norm so the shortlist ranks by approximate COSINE
+        # (|q| is constant per query — irrelevant to its ranking)
+        scores = (
+            qdots[qi, cells]
+            + lut[
+                qi[:, None], np.arange(_IVFPQ_M)[None, :], codes_m
+            ].sum(axis=1)
+        ) / np.maximum(pdf["vnorm"].to_numpy(dtype="float64"), 1e-30)
+        df = pd.DataFrame(
+            {
+                "q_id": pdf["q_id"].to_numpy(dtype="int64"),
+                "n_id": pdf["vec_id"].to_numpy(dtype="int64"),
+                "adc": scores,
+            }
+        )
+        # per-batch shortlist: bound what leaves the scan
+        df = (
+            df.sort_values(
+                ["q_id", "adc", "n_id"],
+                ascending=[True, False, True],
+            )
+            .groupby("q_id", sort=False)
+            .head(_IVFPQ_SHORTLIST)
+        )
+        yield df
 
 
 @query("sim_ann_ivfpq")  # approximate — rows-only; recall pinned in tests/
@@ -2669,7 +2750,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Decomposition of the inner-product: q·v = q·c(v) + q·r(v), so the
     ADC score is one per-(query, cell) scalar (q·centroid, |queries| ×
-    cells tiny table in the closure) plus M lookups in the per-query
+    cells tiny table bound to the kernel) plus M lookups in the per-query
     residual LUT (q_m · R[m,k]) — no floats from the corpus touched at
     scan time.
 
@@ -2682,8 +2763,8 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: index build = one narrow Arrow pass emitting (vec_id, cell,
     code_lo, code_hi, norm) — 4 longs + a double per vector; the
     candidate join is the IVF equi-join on `cell` (broadcast probe
-    table); the ADC kernel ships 16 tiny LUTs + a cells-sized dot table
-    in the closure and emits per-batch top-S shortlists, never
+    table); the ADC kernel carries 16 tiny LUTs + a cells-sized dot
+    table bound to it and emits per-batch top-S shortlists, never
     scored-candidate rows; the re-rank joins the quantized corpus on
     the shortlist's n_id only.
     """
@@ -2710,46 +2791,6 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         seeds_pdf=_vec_slice(fetched, 300, 300 + _PQ_K - 1),
     )  # (M, K, dsub)
     dsub = R.shape[2]
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            V = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            cells = (V @ C_ivf.T).argmax(axis=1)
-            res = V - C_ivf[cells]
-            # 16 × 4-bit codes = 64 bits: packed in TWO longs (codes
-            # 0..7 in lo, 8..15 in hi) so the sign bit never hosts a
-            # code nibble
-            lo = np.zeros(len(V), dtype="int64")
-            hi = np.zeros(len(V), dtype="int64")
-            for m in range(_IVFPQ_M):
-                Rm = res[:, m * dsub : (m + 1) * dsub]
-                d2 = (
-                    np.einsum("ij,ij->i", Rm, Rm)[:, None]
-                    - 2.0 * (Rm @ R[m].T)
-                    + np.einsum("ij,ij->i", R[m], R[m])[None, :]
-                )
-                code = d2.argmin(axis=1).astype("int64")
-                if m < 8:
-                    lo |= code << (4 * m)
-                else:
-                    hi |= code << (4 * (m - 8))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
-                    "cell": cells.astype("int64"),
-                    "code_lo": lo,
-                    "code_hi": hi,
-                    # the vector's L2 norm rides along (one double) so the
-                    # ADC scan can rank by approximate COSINE — the truth
-                    # metric — instead of raw dot: without it, high-norm
-                    # vectors crowd the shortlist and recall@10 at sf0.1
-                    # measured 0.575; with it 0.85+ (see ann_recall)
-                    "vnorm": np.sqrt(np.einsum("ij,ij->i", V, V)),
-                }
-            )
-
     emb = rebalanced(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
@@ -2757,7 +2798,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     codes = emb.mapInPandas(
-        _arrow_kernel(encode),
+        partial(_ivfpq_encode_kernel, C_ivf=C_ivf, R=R),
         "vec_id long, cell long, code_lo long, code_hi long, vnorm double",
     )
 
@@ -2780,56 +2821,14 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qmd,mkd->qmk", QV.reshape(len(QV), _IVFPQ_M, dsub), R
     )  # (queries, M, K)
     q_index = {int(q): i for i, q in enumerate(q_ids)}
-
-    def adc_shortlist(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qi = pdf["q_id"].map(q_index).to_numpy(dtype="int64")
-            lo = pdf["code_lo"].to_numpy(dtype="int64")
-            hi = pdf["code_hi"].to_numpy(dtype="int64")
-            cells = pdf["cell"].to_numpy(dtype="int64")
-            codes_m = np.stack(
-                [(lo >> (4 * m)) & 0xF for m in range(8)]
-                + [(hi >> (4 * m)) & 0xF for m in range(_IVFPQ_M - 8)],
-                axis=1,
-            )
-            # q·v ≈ q·c + Σ_m lut[q, m, code_m]; divide by the carried
-            # corpus norm so the shortlist ranks by approximate COSINE
-            # (|q| is constant per query — irrelevant to its ranking)
-            scores = (
-                qdots[qi, cells]
-                + lut[
-                    qi[:, None], np.arange(_IVFPQ_M)[None, :], codes_m
-                ].sum(axis=1)
-            ) / np.maximum(pdf["vnorm"].to_numpy(dtype="float64"), 1e-30)
-            df = pd.DataFrame(
-                {
-                    "q_id": pdf["q_id"].to_numpy(dtype="int64"),
-                    "n_id": pdf["vec_id"].to_numpy(dtype="int64"),
-                    "adc": scores,
-                }
-            )
-            # per-batch shortlist: bound what leaves the scan
-            df = (
-                df.sort_values(
-                    ["q_id", "adc", "n_id"],
-                    ascending=[True, False, True],
-                )
-                .groupby("q_id", sort=False)
-                .head(_IVFPQ_SHORTLIST)
-            )
-            yield df
-
     cand_rows = (
         codes.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "cell", "vec_id", "code_lo", "code_hi", "vnorm")
     )
     shortlist = cand_rows.mapInPandas(
-        _arrow_kernel(adc_shortlist), "q_id long, n_id long, adc double"
+        partial(_ivfpq_adc_kernel, q_index=q_index, qdots=qdots, lut=lut),
+        "q_id long, n_id long, adc double",
     )
     w_adc = W.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id"))
     cand = (
@@ -3029,6 +3028,28 @@ def _increment_numpy(spark: SparkSession, sf_dir: str):
     return ids, M
 
 
+def _increment_score_kernel(batches, bc):
+    import numpy as np
+    import pandas as pd
+
+    new_ids, A = bc.value
+    for pdf in batches:
+        base_ids = pdf["vec_id"].to_numpy(dtype="int64")
+        B = np.vstack(pdf["v"].to_numpy()).astype("int64")
+        cos = _block_cosine(A, B)  # increment x batch
+        aa, bb = np.broadcast_arrays(
+            new_ids[:, None], base_ids[None, :]
+        )
+        keep = cos >= 0.35
+        yield pd.DataFrame(
+            {
+                "new_id": aa[keep],
+                "base_id": bb[keep],
+                "cosine": cos[keep],
+            }
+        )
+
+
 @query("dedup_embedding_incremental", oracle=_INCR_EMB_ORACLE)
 def dedup_embedding_incremental(
     spark: SparkSession, sf_dir: str
@@ -3056,42 +3077,19 @@ def dedup_embedding_incremental(
     hash-exact DuckDB oracle (dedup_embedding_cosine's discipline on
     the bipartite new x base pairs).
     """
-    import numpy as np
-
     bc = spark.sparkContext.broadcast(_increment_numpy(spark, sf_dir))
     incr_ids = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("source").isin("src18", "src19"))
         .select(F.col("doc_id").alias("vec_id"))
     )
-
-    def score(batches):
-        import pandas as pd
-
-        new_ids, A = bc.value
-        for pdf in batches:
-            base_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            B = np.vstack(pdf["v"].to_numpy()).astype("int64")
-            cos = _block_cosine(A, B)  # increment x batch
-            aa, bb = np.broadcast_arrays(
-                new_ids[:, None], base_ids[None, :]
-            )
-            keep = cos >= 0.35
-            yield pd.DataFrame(
-                {
-                    "new_id": aa[keep],
-                    "base_id": bb[keep],
-                    "cosine": cos[keep],
-                }
-            )
-
     base = rebalanced(
         load_table(spark, sf_dir, "embeddings")
         .join(incr_ids, "vec_id", "anti")
         .select("vec_id", F.expr(_QUANT).alias("v"))
     )
     return base.mapInPandas(
-        _arrow_kernel(score), "new_id long, base_id long, cosine double"
+        partial(_increment_score_kernel, bc=bc), "new_id long, base_id long, cosine double"
     )
 
 

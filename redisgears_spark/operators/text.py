@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from redisgears_spark.operators.registry import query
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 from redisgears_spark.sources.keyspace import (
     load_table,
     rebalanced,
@@ -341,6 +340,21 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bigram_kernel(batches):
+    import re
+
+    import pandas as pd
+
+    for pdf in batches:
+        out: list[str] = []
+        for text in pdf["text"]:
+            w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
+            out.extend(
+                f"{w[i]} {w[i + 1]}" for i in range(len(w) - 1)
+            )
+        yield pd.DataFrame({"bigram": out})
+
+
 @query(
     "text_top_bigrams",
     oracle=f"""
@@ -372,27 +386,11 @@ def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams|, which is corpus-scale cardinality). The rank window then
     runs over the ≤20 surviving rows only.
     """
-    import re
-
-    from redisgears_spark.sources.keyspace import rebalanced
-
-    def bigram_rows(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out: list[str] = []
-            for text in pdf["text"]:
-                w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
-                out.extend(
-                    f"{w[i]} {w[i + 1]}" for i in range(len(w) - 1)
-                )
-            yield pd.DataFrame({"bigram": out})
-
     docs = rebalanced(
         load_table(spark, sf_dir, "documents").select("text")
     )
     counted = (
-        docs.mapInPandas(_arrow_kernel(bigram_rows), "bigram string")
+        docs.mapInPandas(_bigram_kernel, "bigram string")
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -46,6 +46,7 @@ Design:
 from __future__ import annotations
 
 import json as _json
+from functools import partial
 from typing import Any, Callable, Iterator
 
 import pandas as pd
@@ -80,6 +81,37 @@ def _quant_half_up(v):
     return np.where(
         d >= 0, np.floor(d + 0.5), np.ceil(d - 0.5)
     ).astype("int64")
+
+
+def _probe_score_kernel(
+    batches: Iterator[pd.DataFrame], bc, exclude_self: bool
+) -> Iterator[pd.DataFrame]:
+    import numpy as np
+
+    from redisgears_spark.operators.similarity import _block_cosine
+
+    ids, Qm, probes = bc.value
+    for pdf in batches:
+        for cell, vec_ids, qs in zip(
+            pdf["cell"], pdf["vec_ids"], pdf["qs"]
+        ):
+            qidx = probes.get(int(cell))
+            if not qidx or len(vec_ids) == 0:
+                continue
+            n_id = np.asarray(vec_ids, dtype="int64")
+            N = np.vstack(
+                [np.asarray(x, dtype="int64") for x in qs]
+            )
+            cos = _block_cosine(Qm[qidx], N)
+            qq = np.repeat(ids[qidx], len(n_id))
+            nn = np.tile(n_id, len(qidx))
+            cc = cos.ravel()
+            if exclude_self:
+                keep = qq != nn
+                qq, nn, cc = qq[keep], nn[keep], cc[keep]
+            yield pd.DataFrame(
+                {"q_id": qq, "n_id": nn, "cosine": cc}
+            )
 
 
 def _make_router(centroids, vec_field: str, id_field: str):
@@ -347,36 +379,9 @@ class StreamingAnnIvfRuntime(_StatefulRuntime):
         bc = spark.sparkContext.broadcast(
             (np.asarray(q_ids, dtype="int64"), Q, cell_probes)
         )
-        excl = bool(exclude_self)
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from redisgears_spark.operators.similarity import _block_cosine
-
-            ids, Qm, probes = bc.value
-            for pdf in batches:
-                for cell, vec_ids, qs in zip(
-                    pdf["cell"], pdf["vec_ids"], pdf["qs"]
-                ):
-                    qidx = probes.get(int(cell))
-                    if not qidx or len(vec_ids) == 0:
-                        continue
-                    n_id = np.asarray(vec_ids, dtype="int64")
-                    N = np.vstack(
-                        [np.asarray(x, dtype="int64") for x in qs]
-                    )
-                    cos = _block_cosine(Qm[qidx], N)
-                    qq = np.repeat(ids[qidx], len(n_id))
-                    nn = np.tile(n_id, len(qidx))
-                    cc = cos.ravel()
-                    if excl:
-                        keep = qq != nn
-                        qq, nn, cc = qq[keep], nn[keep], cc[keep]
-                    yield pd.DataFrame(
-                        {"q_id": qq, "n_id": nn, "cosine": cc}
-                    )
-
         cand = inv.select("cell", "vec_ids", "qs").mapInPandas(
-            score, "q_id long, n_id long, cosine double"
+            partial(_probe_score_kernel, bc=bc, exclude_self=bool(exclude_self)),
+            "q_id long, n_id long, cosine double",
         )
         if nprobe < len(C):
             # argmax routing puts each corpus vector in exactly ONE

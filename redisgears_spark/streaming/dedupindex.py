@@ -65,7 +65,6 @@ from pyspark.sql.streaming.state import GroupState
 
 from redisgears_spark.engine import GearsEngine, GearsError
 from redisgears_spark.streaming.stateful import _StatefulRuntime
-from redisgears_spark.workerpatch import arrow_kernel as _arrow_kernel
 
 
 def shingle_bucket(s: str, n_buckets: int) -> int:
@@ -354,21 +353,10 @@ class StreamingShingleIndexRuntime(_StatefulRuntime):
         integer intersection/union, IEEE jaccard (≥ min_jaccard) and
         containment. Candidate cost is linear in the increment; the
         corpus contributes only its (shingle → posting) index state."""
-
-        def shingle(batches):
-            from redisgears_spark.operators.dedup import _shingles_py
-
-            for pdf in batches:
-                yield pd.DataFrame(
-                    [
-                        (int(d), _shingles_py(t))
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                    columns=["doc_id", "sh"],
-                )
+        from redisgears_spark.operators.dedup import _shingle_kernel
 
         sh_new = new_docs.select("doc_id", "text").mapInPandas(
-            _arrow_kernel(shingle), "doc_id long, sh array<string>"
+            _shingle_kernel, "doc_id long, sh array<string>"
         )
         ex_new = sh_new.select(
             F.col("doc_id").alias("new_id"), F.explode("sh").alias("s")

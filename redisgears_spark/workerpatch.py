@@ -37,15 +37,19 @@ package installs it. Two such imports reach the Python workers:
   bare `SparkSession.builder`, as the external driver builds) comes from
   the stock daemon. It is patched as soon as it unpickles one of this
   engine's kernels: it pays the stock preamble on that first task and is
-  patched from its next task on. A kernel defined at module level is
-  pickled by reference, so unpickling it imports the package, and so
-  does a closure that refers to a module-level name of the package or
-  imports from it as it runs. Every other closure goes through
-  `arrow_kernel` for the same effect. Without these imports, a bare
-  session's Python tasks paid the stock preamble on every task: a
-  bare-session run of the 70 `dedup_*`, `sim_*` and `pipeline_*`
-  registry queries (4 cores, sf0.01) took a median 138 s against 118 s
-  with kernel-side installs.
+  patched from its next task on. A kernel handed to mapInPandas,
+  mapInArrow or applyInPandas is a module-level function or a
+  `functools.partial` of one: the pickler writes the function by
+  reference, so unpickling it imports the package, and the partial's
+  bound values (broadcast handles, codebooks, lookup tables) by value.
+  `tests/test_workerpatch.py::test_no_nested_kernel_is_shipped` fails on
+  a kernel defined inside the function that ships it. (The streaming
+  runtimes' router and reducer factories return closures that reach the
+  package through a module-level name of it or an import as they run.)
+  Without a package import, a bare session's Python tasks paid the stock
+  preamble on every task: a bare-session run of the 70 `dedup_*`, `sim_*`
+  and `pipeline_*` registry queries (4 cores, sf0.01) took a median
+  138 s against 118 s with it.
 
 On the driver the patch does nothing: the driver never runs
 `setup_spark_files`.
@@ -53,7 +57,6 @@ On the driver the patch does nothing: the driver never runs
 
 from __future__ import annotations
 
-import functools
 import importlib
 import sys
 
@@ -74,20 +77,6 @@ class _LazyInvalidator:
 
     def __getattr__(self, attr):
         return getattr(self._real, attr)
-
-
-def _call(fn, *args, **kwargs):
-    return fn(*args, **kwargs)
-
-
-def arrow_kernel(fn):
-    """Wrap a kernel defined inside a function before handing it to
-    mapInPandas/mapInArrow. The pickler copies such a closure by value, so
-    a worker can unpickle and run it without importing this package; the
-    wrapper is a partial of this module's `_call`, which the pickler writes
-    by reference, so unpickling it imports the package and installs the
-    patch. Kernels defined at module level need no wrapper."""
-    return functools.update_wrapper(functools.partial(_call, fn), fn)
 
 
 def _install() -> None:

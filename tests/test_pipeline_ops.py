@@ -1341,3 +1341,53 @@ def test_bpe_incremental_state_matches_full_recount():
     for _i, lft, rgt, _n in want:
         _apply_merge_tracked(sf, swords, counts, index, lft, rgt)
         assert dict(counts) == dict(_local_pair_counts(sf, swords))
+
+
+def test_nearest_subcentroid_matches_row_loop():
+    """The one PQ / IVF-PQ code assignment, on plain numpy with no Spark
+    job: each row's code is its nearest centroid by L2, as a per-row loop
+    finds it, and a tie (a duplicated centroid) goes to the lower index."""
+    import numpy as np
+
+    from redisgears_spark.operators.similarity import _nearest_subcentroid
+
+    rng = np.random.default_rng(11)
+    C = rng.normal(size=(16, 4))
+    C[9] = C[3]
+    X = np.vstack([rng.normal(size=(64, 4)), C[3], C[3] + 1e-3])
+
+    def nearest(x):
+        d = [float(((x - c) ** 2).sum()) for c in C]
+        return min(range(len(C)), key=lambda k: (d[k], k))
+
+    got = _nearest_subcentroid(X, C)
+    assert got.tolist() == [nearest(x) for x in X]
+    assert got[-2:].tolist() == [3, 3]
+
+
+def test_merge_symbols_kernel_matches_apply_merge():
+    """The per-round BPE merge kernel, bound to its pair with partial, on
+    a plain pandas frame with no Spark job: each word's symbols are
+    _apply_merge's, and word and freq pass through."""
+    from functools import partial
+
+    import numpy as np
+    import pandas as pd
+
+    from redisgears_spark.operators.pipeline import _apply_merge, _merge_symbols
+
+    pdf = pd.DataFrame(
+        {
+            "word": ["abab", "aab"],
+            "freq": [2, 5],
+            "symbols": [np.array(list("abab"), dtype=object), np.array(list("aab"), dtype=object)],
+        }
+    )
+    kernel = partial(_merge_symbols, left="a", right="b")
+    (out,) = list(kernel(iter([pdf])))
+    assert out["word"].tolist() == ["abab", "aab"]
+    assert out["freq"].tolist() == [2, 5]
+    assert out["symbols"].tolist() == [
+        _apply_merge(list(s), "a", "b") for s in pdf["symbols"]
+    ]
+    assert out["symbols"].tolist() == [["ab", "ab"], ["a", "ab"]]

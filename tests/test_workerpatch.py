@@ -3,11 +3,13 @@ is installed in one place, the import of the package. The daemon that
 `get_spark` starts imports it, so every worker that daemon forks runs every
 task patched, whatever the task kind. On a session built without
 `get_spark`, a worker is patched once it unpickles one of the engine's
-kernels: a module-level kernel imports the package, and a closure goes
-through `arrow_kernel`."""
+kernels: each is a module-level function or a `functools.partial` of one,
+so the pickler writes it by reference and unpickling it imports the
+package. `test_no_nested_kernel_is_shipped` keeps every kernel that way."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import subprocess
@@ -22,6 +24,8 @@ from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 _REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PACKAGE_DIR = os.path.join(_REPO_DIR, "redisgears_spark")
+_SHIP_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState"}
 _STATE_SCHEMA = "wu_type string, main string"
 
 
@@ -202,9 +206,10 @@ def test_importing_the_package_installs_the_patch():
 
 def test_kernel_installs_the_patch_on_a_bare_session(tmp_path):
     """A session built without get_spark's settings starts workers from the
-    stock daemon. A plain task leaves its worker stock; a closure wrapped by
-    arrow_kernel patches the worker that unpickles it, and one of the
-    engine's wrapped kernels gives its usual result there."""
+    stock daemon. A plain task leaves its worker stock; the worker that
+    unpickles one of the engine's module-level kernels (pipeline's word
+    5-gram kernel, shipped unwrapped) is patched from its next task on, and
+    another shipped kernel gives its usual result there."""
     got = _run_child(
         """
         import json
@@ -217,23 +222,23 @@ def test_kernel_installs_the_patch_on_a_bare_session(tmp_path):
             import pyspark.worker_util as wu
             yield type(wu.importlib).__name__
 
-        def kernel(batches):
+        def probe(batches):
             import pyspark.worker_util as wu
             for pdf in batches:
                 yield pdf.assign(t=type(wu.importlib).__name__)
 
         before = spark.sparkContext.parallelize([0], 1).mapPartitions(plain).collect()
         from redisgears_spark.operators.dedup import _shingles_py, shingle_pass
-        from redisgears_spark.workerpatch import arrow_kernel
+        from redisgears_spark.operators.pipeline import _grams_kernel
 
-        after = spark.range(1, numPartitions=1).mapInPandas(
-            arrow_kernel(kernel), "id long, t string"
-        )
         text = "the quick brown fox jumps over the lazy dog"
         docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        grams = docs.mapInPandas(_grams_kernel, "doc_id long, g string").collect()
+        after = spark.range(1, numPartitions=1).mapInPandas(probe, "id long, t string")
         row = shingle_pass(docs).collect()[0]
         print(json.dumps({
             "before": before[0],
+            "grams": [r["g"] for r in grams],
             "after": after.first()["t"],
             "exact": list(row["sh"]) == _shingles_py(text),
             "n": len(row["sh"]),
@@ -245,10 +250,72 @@ def test_kernel_installs_the_patch_on_a_bare_session(tmp_path):
     )
     assert got == {
         "before": "module",
+        "grams": [
+            "the quick brown fox jumps",
+            "quick brown fox jumps over",
+            "brown fox jumps over the",
+            "fox jumps over the lazy",
+            "jumps over the lazy dog",
+        ],
         "after": "_LazyInvalidator",
         "exact": True,
         "n": 7,
     }
+
+
+def _shipped_nested_kernels(path):
+    """`file:line kernel` for each mapInPandas/mapInArrow/applyInPandas/
+    applyInPandasWithState call in `path` whose kernel is a def nested in
+    the calling function, a `partial` of one, or what a function call
+    other than `partial` returns (a factory's closure or a wrapper): the
+    pickler copies each of those by value, so unpickling it need not
+    import the package."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    found = []
+
+    def is_nested(arg, nested):
+        if isinstance(arg, ast.Name):
+            return arg.id in nested
+        if isinstance(arg, ast.Call) and isinstance(arg.func, ast.Name):
+            if arg.func.id != "partial":
+                return True
+            return bool(arg.args) and is_nested(arg.args[0], nested)
+        return False
+
+    def visit(node, nested):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, funcs):
+                inner = {n.name for n in ast.walk(child) if isinstance(n, funcs) and n is not child}
+                visit(child, nested | inner)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in _SHIP_METHODS
+                and child.args
+                and is_nested(child.args[0], nested)
+            ):
+                rel = os.path.relpath(path, _REPO_DIR)
+                found.append(f"{rel}:{child.lineno} {ast.unparse(child.args[0])}")
+            visit(child, nested)
+
+    visit(tree, frozenset())
+    return found
+
+
+def test_no_nested_kernel_is_shipped():
+    """Every kernel the package hands to a Python stage is a module-level
+    function, a `partial` of one, a function parameter or a method's
+    result, so a bare session's worker imports the package, and installs
+    the patch, when it unpickles the kernel."""
+    found = []
+    for root, _dirs, files in os.walk(_PACKAGE_DIR):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                found += _shipped_nested_kernels(os.path.join(root, name))
+    assert found == []
 
 
 @pytest.fixture(scope="module")
