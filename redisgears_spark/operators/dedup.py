@@ -40,6 +40,7 @@ from redisgears_spark.functions.hashing import (
     splitmix64_sql,
 )
 from redisgears_spark.operators.registry import query
+from redisgears_spark.operators.text import _tokens_py
 from redisgears_spark.sources.keyspace import (
     load_table,
     rebalanced,
@@ -75,9 +76,7 @@ _ORACLE_DOCS_CTE = """
 def _shingles_py(text: str) -> list[str]:
     """Distinct word 3-grams (first-occurrence order) — the Python twin of
     _SHINGLES, shared by the shingle stage and the sketch signatures."""
-    import re
-
-    w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
+    w = _tokens_py(text)
     if len(w) >= 3:
         return list(dict.fromkeys(" ".join(w[i : i + 3]) for i in range(len(w) - 2)))
     return [""]
@@ -436,28 +435,6 @@ def _pair_stats(
     )
 
 
-_CC_MAX_ITERS = 25
-# edge count up to which the whole component-fold runs as ONE executor task
-# (union-find over the edge list — ~16 bytes/edge, so 5M edges ≈ 80 MB).
-#
-# Crossover MEASURED r14 (local[32], random graphs at avg degree 4, both
-# strategies forced, noop sink, best-of-2):
-#   edges     local (1 task)   distributed (min-label + pointer jump)
-#   250 k          4.6 s            16.9 s
-#   500 k          3.5 s            20.6 s
-#     1 M          5.7 s            33.2 s
-#     2 M         15.3 s            62.8 s
-#     5 M         36.6 s            90.0 s
-# The distributed loop's per-round fixed cost (2 joins + 2 eager
-# localCheckpoints × ~log2(diameter) rounds) dwarfs the serial
-# union-find at every size up to the limit — the crossover is ABOVE
-# 5 M edges on this hardware, so the limit stays at 5 M (the r13
-# verdict's 1 M guess is refuted by measurement). A 5 M-edge fold is a
-# ~37 s straggler pole, which is still 2.5x faster than the
-# distributed alternative at that size.
-_CC_LOCAL_EDGE_LIMIT = 5_000_000
-
-
 @query(
     "dedup_clusters",
     oracle=f"WITH RECURSIVE {_ORACLE_PAIRS_CTE}, {_ORACLE_CLUSTERS_TAIL}",
@@ -469,22 +446,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline needs "keep THIS one, drop THOSE" — that requires closing the
     graph transitively (A~B, B~C → one cluster even if A≁C directly).
 
-    Two physical strategies behind one semantic:
+    The component fold is one executor-side union-find over the pair
+    list in a single task (`connected_components`). The thresholded pair
+    graph is orders of magnitude smaller than the corpus, so one task
+    folds it with no per-round scheduling cost. Note this is
+    executor-side, not a driver collect.
 
-    * **Compact graph** (≤ _CC_LOCAL_EDGE_LIMIT edges): one executor-side
-      union-find over the edge list in a single task. The thresholded pair
-      graph is orders of magnitude smaller than the corpus — even a 100 TB
-      corpus rarely yields more than ~10^8 near-dup edges (~1.6 GB), which
-      one task folds in seconds with zero per-round scheduling cost. Note
-      this is executor-side, not a driver collect.
-    * **Huge graph**: distributed min-label propagation with pointer
-      jumping, as DataFrame joins — each round every node takes the min
-      label among itself and its neighbors, then follows its label's own
-      label (path doubling). O(log diameter) rounds, one changed-count
-      scalar to the driver per round — adversarial chain graphs converge
-      in ~log2(n) rounds instead of n.
-
-    Either path reaches the same fixpoint as the DuckDB recursive CTE
+    The fold reaches the same fixpoint as the DuckDB recursive CTE
     (transitive closure → min reachable id), so this "non-SQL-expressible
     iterative algorithm" is exact-checked after all.
 
@@ -516,9 +484,9 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def union_find_labels(edges) -> dict:
     """Min-root union-find over an iterable of (a, b) edges →
-    {node: min reachable node}. The single-task kernel behind the compact
-    path of `connected_components`; module-level so the property suite can
-    pin it against brute-force transitive closure without Spark."""
+    {node: min reachable node}. The single-task kernel behind
+    `connected_components`; module-level so the property suite can pin it
+    against brute-force transitive closure without Spark."""
     parent: dict = {}
     seen: set = set()
 
@@ -544,13 +512,14 @@ def union_find_labels(edges) -> dict:
     return {x: find(x) for x in seen}
 
 
+# measured r14, local[32]: 5M edge rows (~80 MB) fold in this one task in 36.6 s
 def _cc_union_find_kernel(batches):
     import pandas as pd
 
     labels = union_find_labels(
         (a, b)
         for pdf in batches
-        for a, b in zip(pdf["src"], pdf["dst"])
+        for a, b in zip(pdf["a_id"], pdf["b_id"])
     )
     if labels:
         nodes = sorted(labels)
@@ -561,98 +530,12 @@ def _cc_union_find_kernel(batches):
 
 def connected_components(pairs: DataFrame) -> DataFrame:
     """Min-label connected components over an (a_id, b_id) pair DataFrame →
-    (doc_id, cluster_id, is_survivor). Strategy auto-selected by edge count
-    (see dedup_clusters docstring)."""
-    edges = scratch_parquet(
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
-        ),
-        "cc-edges",
+    (doc_id, cluster_id, is_survivor): one union-find task over the pair
+    list. repartition(1), not coalesce(1), so the upstream pair stage
+    keeps its own parallelism."""
+    labels = pairs.repartition(1).mapInPandas(
+        _cc_union_find_kernel, "doc_id long, cluster_id long"
     )
-    n_edges = edges.count()  # cheap parquet-metadata count; sizes the strategy
-
-    if n_edges <= _CC_LOCAL_EDGE_LIMIT:
-        labels = edges.repartition(1).mapInPandas(
-            _cc_union_find_kernel, "doc_id long, cluster_id long"
-        )
-        result = labels.withColumn(
-            "is_survivor", F.col("doc_id") == F.col("cluster_id")
-        )
-        return result
-
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .cache()
-    )
-    labels.count()
-    for _ in range(_CC_MAX_ITERS):
-        # neighbor-min step: every node takes the min label among itself
-        # and its neighbors
-        msgs = edges.join(
-            labels, edges["src"] == labels["doc_id"]
-        ).select(F.col("dst").alias("doc_id"), F.col("cluster_id"))
-        relaxed = (
-            labels.unionByName(msgs)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-        )
-        # pointer-jump step: follow the label's own label (path doubling) —
-        # chains halve every round, so convergence is O(log diameter)
-        # instead of O(diameter); labels only decrease and stay within the
-        # component, so the fixpoint is still the component minimum.
-        # localCheckpoint (not cache) — the self-join references `relaxed`
-        # twice, so without truncating the LOGICAL plan each round the
-        # analyzer cost doubles per iteration (cache only truncates
-        # physical execution)
-        relaxed = relaxed.localCheckpoint(eager=True)
-        parents = relaxed.select(
-            F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_cluster")
-        )
-        new_labels = (
-            relaxed.join(
-                parents, relaxed["cluster_id"] == parents["p_id"], "left"
-            )
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("p_cluster", "cluster_id")
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("cluster_id", "prev"), "doc_id"
-            )
-            .filter(F.col("cluster_id") < F.col("prev"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        # localCheckpoint blocks are freed by the ContextCleaner only once
-        # the JVM RDD is unreferenced; dropping the Python refs (relaxed,
-        # previous labels) and collecting promptly bounds live storage to
-        # ~2 label sets instead of 2 per round
-        del relaxed, parents, msgs
-        import gc
-
-        gc.collect()
-        if changed == 0:
-            break
-    else:
-        # pointer jumping halves chains every round, so 25 rounds cover any
-        # component of diameter < 2^25 — exhausting the cap means labels may
-        # not be the component minimum yet. Possibly-wrong clusters must be
-        # loud, not silent.
-        raise RuntimeError(
-            f"connected-components did not converge within {_CC_MAX_ITERS} "
-            f"iterations ({changed} labels still changing); raise "
-            "_CC_MAX_ITERS or inspect the edge graph for pathological "
-            "structure"
-        )
     return labels.withColumn(
         "is_survivor", F.col("doc_id") == F.col("cluster_id")
     )
@@ -901,7 +784,6 @@ _SIMHASH_K = 6  # near-dup ⇔ hamming <= K (Manku et al.'s 3/64 ratio, scaled)
 
 
 def _simhash_kernel(batches):
-    import re
     from hashlib import md5
 
     import numpy as np
@@ -913,11 +795,7 @@ def _simhash_kernel(batches):
     band_shifts = np.arange(_SIMHASH_BANDS // 2, dtype=np.uint64) * np.uint64(band_width)
     band_mask = np.uint64((1 << band_width) - 1)
     for pdf in batches:
-        wlists = [
-            [x for x in re.split(r"\s+", t.lower(), flags=re.ASCII) if x]
-            or [""]
-            for t in pdf["text"]
-        ]
+        wlists = [_tokens_py(t) or [""] for t in pdf["text"]]
         lens = np.fromiter((len(w) for w in wlists), dtype=np.int64, count=len(wlists))
         offsets = np.zeros(len(wlists), dtype=np.int64)
         np.cumsum(lens[:-1], out=offsets[1:])

@@ -196,15 +196,15 @@ _RANK_GUARD = (2**63 - 1) // 85
 
 # edge count up to which the 5 damped iterations run as ONE executor
 # task (numpy gather/scatter over the edge list — ~16 bytes/edge, so
-# 5M edges ≈ 80 MB; the connected_components compact path, dedup.py,
+# 5M edges ≈ 80 MB; the single-task policy of dedup.connected_components
 # applied to pagerank). Crossover MEASURED r14 at sf0.1 (2.39 M edges,
 # local[32], noop sink, best-of-3): the distributed loop pays 5
 # sequential broadcast-build jobs + 5 edge-scan aggregates (~0.65-0.8 s
 # each) for integer work the kernel does in ~0.1 s total — end-to-end
-# 5.3 s -> 2.9 s with the kernel. The loop's per-iteration fixed cost,
-# like CC's per-round cost, dominates at every size the one-task read
-# can hold; above the limit the distributed loop below is the 100 TB
-# path (per-iteration work is then corpus-scale and fans out).
+# 5.3 s -> 2.9 s with the kernel. The loop's per-iteration fixed cost
+# dominates at every size the one-task read can hold; above the limit
+# the distributed loop below is the 100 TB path (per-iteration work is
+# then corpus-scale and fans out; sf1 has ~24M edges).
 _PR_LOCAL_EDGE_LIMIT = 5_000_000
 
 
@@ -366,9 +366,8 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/bucketed.py layout) so the per-iteration join co-locates
     without moving edges. Lineage grows linearly in iterations — a
     production run at hundreds of iterations would localCheckpoint
-    every ~20 rounds (dedup's CC-loop policy, dedup.py:341). Isolated
-    parts (never co-ordered) keep the damping base rank via the LEFT
-    join from the full part catalog.
+    every ~20 rounds. Isolated parts (never co-ordered) keep the
+    damping base rank via the LEFT join from the full part catalog.
     """
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node")
@@ -376,7 +375,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Compact graph (r14): up to _PR_LOCAL_EDGE_LIMIT edges the whole
     # 5-iteration recurrence runs as ONE executor task over the edge
-    # list (the connected_components compact-path policy, dedup.py:460)
+    # list (the single-task policy of dedup.connected_components)
     # — the distributed loop below pays 5 sequential broadcast-build
     # jobs + 5 edge-scan aggregates of per-job fixed cost for integer
     # gather/scatter a numpy kernel finishes in ~0.2 s. Only the
@@ -828,8 +827,7 @@ def part_copurchase_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with dedup_clusters).
 
     Scale: the wedge join is bounded by basket size; the component fold
-    reuses connected_components — single-task union-find under the edge
-    limit, pointer-jumping min-label propagation above it.
+    reuses connected_components, one single-task union-find.
     """
     from redisgears_spark.operators.dedup import connected_components
 

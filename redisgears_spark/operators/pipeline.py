@@ -23,7 +23,7 @@ from redisgears_spark.functions.hashing import (
     md5_hash32_sql,
 )
 from redisgears_spark.operators.registry import query
-from redisgears_spark.operators.text import _TOKENS, _TOKENS_SQL
+from redisgears_spark.operators.text import _TOKENS, _TOKENS_SQL, _tokens_py
 from redisgears_spark.sources.keyspace import (
     load_table,
     rebalanced,
@@ -50,15 +50,13 @@ _DECON_GRAMS_CTE = f"""
 
 
 def _grams_kernel(batches):
-    import re
-
     import pandas as pd
 
     for pdf in batches:
         ids: list = []
         gs: list = []
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
+            w = _tokens_py(text)
             for i in range(len(w) - (_DECON_N - 1)):
                 ids.append(doc_id)
                 gs.append(" ".join(w[i : i + _DECON_N]))
@@ -941,31 +939,21 @@ def pipeline_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BPE_MERGES = 8
-# below this many distinct words the merge loop runs driver-side on the
-# collected frequency table (same strategy split as dedup's connected
-# components: a bounded local fixpoint beats 8 rounds of distributed
-# fixed cost); above it, the distributed loop runs — identical results,
-# pinned by tests/test_pipeline_ops.py with the limit forced to 0
-_BPE_LOCAL_VOCAB_LIMIT = 100_000
 
 
 def _word_freq_of(docs: DataFrame) -> DataFrame:
-    """Word-frequency table over any document slice, each word as its
-    character-symbol sequence — the additive unit of BPE training state
-    (frequency tables of disjoint slices ADD; pipeline_bpe_extend builds
-    on exactly that algebra)."""
-    words = docs.select(
+    """(word, freq) table over any document slice — the additive unit of
+    BPE training state (frequency tables of disjoint slices ADD;
+    pipeline_bpe_extend builds on exactly that algebra)."""
+    return docs.select(
         F.explode(F.expr(_TOKENS)).alias("word")
     ).groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    return words.select(
-        "word", "freq", F.split("word", "").alias("symbols")
-    )
 
 
 def bpe_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE's training input: the word-frequency table (classic BPE
     trains on distinct words weighted by count, not the raw corpus —
-    Sennrich et al. 2016), each word as its character-symbol sequence."""
+    Sennrich et al. 2016)."""
     return _word_freq_of(load_table(spark, sf_dir, "documents"))
 
 
@@ -973,8 +961,8 @@ def bpe_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _apply_merge(syms: list, left: str, right: str) -> list:
     """One BPE merge applied left-to-right, non-overlapping — the ONE
-    definition train (both strategies) and apply share; divergence here
-    would silently split the tokenizer from its own training."""
+    definition train and apply share; divergence here would silently
+    split the tokenizer from its own training."""
     merged = left + right
     res, i = [], 0
     n = len(syms)
@@ -1055,8 +1043,8 @@ def _local_bpe_rounds(
     state=None,
 ) -> list[tuple[int, str, str, int]]:
     """The exact Sennrich greedy loop over an in-memory word-frequency
-    state (mutates `words`). Used by pipeline_bpe_train's local strategy
-    and by pipeline_bpe_extend's base-training and continuation phases —
+    state (mutates `words`). Used by pipeline_bpe_train and by
+    pipeline_bpe_extend's base-training and continuation phases —
     one loop definition, so train and extend can never disagree on the
     argmax/tie-break discipline.
 
@@ -1077,83 +1065,6 @@ def _local_bpe_rounds(
         recs.append((round_offset + i, lft, rgt, int(n)))
         _apply_merge_tracked(freq, words, counts, index, lft, rgt)
     return recs
-
-
-def _pairs_df(cur: DataFrame) -> DataFrame:
-    """Adjacent pairs WITHIN a word: zip the symbol list against its own
-    tail (array ops — no window machinery, no cross-row state)."""
-    return cur.select(
-        "freq",
-        F.explode(
-            F.when(
-                F.size("symbols") >= 2,
-                F.zip_with(
-                    F.slice(
-                        "symbols", 1, F.size("symbols") - F.lit(1)
-                    ),
-                    F.slice("symbols", 2, F.size("symbols")),
-                    lambda a, b: F.struct(
-                        a.alias("l"), b.alias("r")
-                    ),
-                ),
-            ).otherwise(F.array())
-        ).alias("p"),
-    )
-
-
-def _dist_bpe_rounds(
-    cur: DataFrame, n_rounds: int, round_offset: int = 0
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """The distributed greedy loop (web-scale vocabularies): per round
-    one pair-count agg (map-side partial, 1-row TakeOrdered argmax —
-    count desc, then lexicographic pair, matching the local tuple
-    tie-break) and one Arrow-batched merge pass, localCheckpoint-bounded
-    lineage. Returns (merges, final symbol state) so a caller can
-    continue training from where it stopped — the continuation hook
-    pipeline_bpe_extend uses."""
-    recs: list[tuple[int, str, str, int]] = []
-    first = cur
-    for i in range(n_rounds):
-        best = (
-            _pairs_df(cur)
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.col("n").desc(), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] <= 0:
-            break
-        b = best[0]
-        recs.append((round_offset + i, b["l"], b["r"], int(b["n"])))
-        nxt = cur.mapInPandas(
-            partial(_merge_symbols, left=b["l"], right=b["r"]),
-            "word string, freq long, symbols array<string>",
-        )
-        nxt = nxt.localCheckpoint(eager=True)  # bound the lineage
-        if cur is not first:
-            cur.unpersist()
-        cur = nxt
-    return recs, cur
-
-
-def _merge_symbols(batches, left: str, right: str):
-    """Arrow-batched merge of one (left, right) pair (the per-round BPE
-    apply step, delegating to the shared _apply_merge)."""
-    import pandas as pd
-
-    for pdf in batches:
-        out = [
-            _apply_merge(list(syms), left, right)
-            for syms in pdf["symbols"]
-        ]
-        yield pd.DataFrame(
-            {
-                "word": pdf["word"],
-                "freq": pdf["freq"],
-                "symbols": out,
-            }
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -1335,11 +1246,10 @@ def _bpe_extend_oracle_sql() -> str:
 def pipeline_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first 8 BPE merges over the corpus — the iterative
     tokenizer-training algorithm (Sennrich et al.; the GPT-2 tokenizer's
-    training loop), distributed: each round counts adjacent symbol
-    pairs across the word-frequency table (weighted by word count),
-    merges the most frequent pair everywhere, and repeats. Output: the
-    merge table (round, left, right, pair_count) — the artifact a
-    tokenizer ships.
+    training loop): each round counts adjacent symbol pairs across the
+    word-frequency table (weighted by word count), merges the most
+    frequent pair everywhere, and repeats. Output: the merge table
+    (round, left, right, pair_count) — the artifact a tokenizer ships.
 
     Hash-exact DuckDB oracle since round 13: the data-dependent
     fixpoint is UNROLLED — each of the 8 rounds is a generated CTE
@@ -1351,37 +1261,16 @@ def pipeline_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the state lives in the |distinct words| frequency table
     (tiny vs corpus — built with one map-side-partial groupBy over the
-    token stream; at 100 TB it is millions of rows, not trillions).
-    Per round: pair counting is posexplode → groupBy(pair) with partial
-    aggregation; the argmax is a 1-row TakeOrdered (count desc, then
-    lexicographic pair — fully deterministic); the merge apply is one
-    Arrow-batched pass. Driver holds ONE pair per round, never the
-    table. Rounds are checkpoint-cached like the CC loop to keep the
-    lineage bounded.
+    token stream; 31 words at sf0.1). The driver collects its
+    (word, freq) rows, never corpus rows, and runs the exact Sennrich
+    loop in memory (`_local_bpe_rounds`, incrementally maintained pair
+    counts).
     """
-    # the fixture vocabulary is tiny; 32 shuffle partitions of fixed
-    # task overhead x 8 rounds dominates wall time. Partition the state
-    # proportionally to its size (driver-known after the groupBy — at
-    # scale this lands at defaultParallelism)
-    wf = bpe_word_freq(spark, sf_dir).cache()
-    n_words = wf.count()
-    if n_words <= _BPE_LOCAL_VOCAB_LIMIT:
-        # bounded local path: the frequency table is dimension-sized —
-        # collect (word, freq) ONLY (no corpus rows) and run the exact
-        # Sennrich loop in memory; the distributed loop is the same
-        # algorithm for web-scale vocabularies
-        freq = {r["word"]: r["freq"] for r in wf.select("word", "freq").collect()}
-        words = {w: list(w) for w in freq}
-        local_merges = _local_bpe_rounds(freq, words, _BPE_MERGES)
-        wf.unpersist()
-        return spark.createDataFrame(
-            local_merges,
-            "round long, left string, right string, pair_count long",
-        )
-    merges, _ = _dist_bpe_rounds(wf, _BPE_MERGES)
-    wf.unpersist()
+    freq = {r["word"]: r["freq"] for r in bpe_word_freq(spark, sf_dir).collect()}
+    words = {w: list(w) for w in freq}
     return spark.createDataFrame(
-        merges, "round long, left string, right string, pair_count long"
+        _local_bpe_rounds(freq, words, _BPE_MERGES),
+        "round long, left string, right string, pair_count long",
     )
 
 
@@ -1483,90 +1372,47 @@ def _bpe_extend(
         if new_sources
         else F.lit(False)
     )
-    base_wf = _word_freq_of(docs.filter(~is_new)).cache()
     if inc_wf is None:
         inc_wf = _word_freq_of(docs.filter(is_new))
+    base_wf = _word_freq_of(docs.filter(~is_new))
+    base_freq = {r["word"]: r["freq"] for r in base_wf.collect()}
+    bwords = {w: list(w) for w in base_freq}
+    base_merges = _local_bpe_rounds(base_freq, bwords, _BPE_MERGES)
     # incremental state algebra: the union table is base + increment
     # ADDED (frequency tables of disjoint slices are associative under
     # +), never a rescan of the combined corpus — at 100 TB the base
     # table is saved trainer state and only the increment is scanned
-    union_wf = (
-        base_wf.select("word", "freq")
-        .unionByName(inc_wf.select("word", "freq"))
-        .groupBy("word")
-        .agg(F.sum("freq").alias("freq"))
-        .select("word", "freq", F.split("word", "").alias("symbols"))
-        .cache()
-    )
-    out_schema = (
-        "round long, left string, right string, pair_count long, "
-        "phase string"
-    )
-    n_union = union_wf.count()
-    if n_union <= _BPE_LOCAL_VOCAB_LIMIT:
-        base_freq = {
-            r["word"]: r["freq"]
-            for r in base_wf.select("word", "freq").collect()
-        }
-        bwords = {w: list(w) for w in base_freq}
-        base_merges = _local_bpe_rounds(base_freq, bwords, _BPE_MERGES)
-        ufreq = {
-            r["word"]: r["freq"]
-            for r in union_wf.select("word", "freq").collect()
-        }
-        uwords = {w: list(w) for w in ufreq}
-        recs: list[tuple] = []
-        rnd = 0
-        # r14: one maintained (counts, index) over the union state — the
-        # replayed pair's count ON THE UNION (the drift diagnostic, the
-        # same overlapping-zip statistic the trainer computes) is an O(1)
-        # lookup instead of a full vocabulary scan per merge, and the
-        # apply touches only the words containing the pair; the ext
-        # continuation reuses the same state
-        ucounts, uindex = _bpe_state(ufreq, uwords)
-        for _r, lft, rgt, _n in base_merges:
-            cnt = ucounts.get((lft, rgt), 0)
-            recs.append((rnd, lft, rgt, int(cnt), "base"))
-            _apply_merge_tracked(ufreq, uwords, ucounts, uindex, lft, rgt)
-            rnd += 1
-        ext = _local_bpe_rounds(
-            ufreq,
-            uwords,
-            _BPE_EXTEND_MERGES,
-            round_offset=rnd,
-            state=(ucounts, uindex),
-        )
-        recs.extend((r, l, rr, n, "ext") for (r, l, rr, n) in ext)
-        base_wf.unpersist()
-        union_wf.unpersist()
-        return spark.createDataFrame(recs, out_schema)
-    # distributed twin — same phases, web-scale state
-    base_merges, _ = _dist_bpe_rounds(base_wf, _BPE_MERGES)
-    cur = union_wf
-    recs = []
+    ufreq = dict(base_freq)
+    for r in inc_wf.collect():
+        ufreq[r["word"]] = ufreq.get(r["word"], 0) + r["freq"]
+    uwords = {w: list(w) for w in ufreq}
+    recs: list[tuple] = []
     rnd = 0
+    # r14: one maintained (counts, index) over the union state — the
+    # replayed pair's count ON THE UNION (the drift diagnostic, the
+    # same overlapping-zip statistic the trainer computes) is an O(1)
+    # lookup instead of a full vocabulary scan per merge, and the
+    # apply touches only the words containing the pair; the ext
+    # continuation reuses the same state
+    ucounts, uindex = _bpe_state(ufreq, uwords)
     for _r, lft, rgt, _n in base_merges:
-        row = (
-            _pairs_df(cur)
-            .filter((F.col("p.l") == lft) & (F.col("p.r") == rgt))
-            .agg(F.sum("freq").alias("n"))
-            .collect()
-        )
-        cnt = row[0]["n"] or 0
+        cnt = ucounts.get((lft, rgt), 0)
         recs.append((rnd, lft, rgt, int(cnt), "base"))
-        nxt = cur.mapInPandas(
-            partial(_merge_symbols, left=lft, right=rgt),
-            "word string, freq long, symbols array<string>",
-        ).localCheckpoint(eager=True)
-        if cur is not union_wf:
-            cur.unpersist()
-        cur = nxt
+        _apply_merge_tracked(ufreq, uwords, ucounts, uindex, lft, rgt)
         rnd += 1
-    ext, _ = _dist_bpe_rounds(cur, _BPE_EXTEND_MERGES, round_offset=rnd)
+    ext = _local_bpe_rounds(
+        ufreq,
+        uwords,
+        _BPE_EXTEND_MERGES,
+        round_offset=rnd,
+        state=(ucounts, uindex),
+    )
     recs.extend((r, l, rr, n, "ext") for (r, l, rr, n) in ext)
-    base_wf.unpersist()
-    union_wf.unpersist()
-    return spark.createDataFrame(recs, out_schema)
+    return spark.createDataFrame(
+        recs,
+        "round long, left string, right string, pair_count long, "
+        "phase string",
+    )
 
 
 _BUDGET_FILL_ORACLE = """
@@ -1716,15 +1562,12 @@ def pipeline_bpe_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation property — with an EMPTY increment the base phase
     reproduces pipeline_bpe_train's merges bit-for-bit and the ext
     phase equals rounds 8–11 of a 12-round from-scratch train (greedy
-    BPE is sequential, so freeze-and-continue == train-longer), and
-    (c) local/distributed strategy equality with the vocab limit
-    forced to 0.
+    BPE is sequential, so freeze-and-continue == train-longer).
 
-    Scale: state is the |distinct words| frequency table (millions of
-    rows at 100 TB, never the corpus); per replay round ONE targeted
-    pair-count agg (map-side partial on a single pair filter) + one
-    Arrow merge pass; per new round the same argmax discipline as
-    training. Checkpoint-bounded lineage throughout.
+    Scale: state is the |distinct words| frequency table, never the
+    corpus; the driver collects the base and increment tables and adds
+    them, then replays and continues on one incrementally maintained
+    pair-count state (a replayed pair's union support is one lookup).
     """
     return _bpe_extend(spark, sf_dir, _BPE_NEW_SOURCES)
 
@@ -3127,8 +2970,6 @@ def pipeline_survivor_policy_delta(
 
 
 def _grams3_kernel(batches):
-    import re
-
     import pandas as pd
 
     for pdf in batches:
@@ -3136,11 +2977,7 @@ def _grams3_kernel(batches):
         ids: list = []
         gs: list = []
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            w = [
-                x
-                for x in re.split(r"\s+", text.lower(), flags=re.ASCII)
-                if x
-            ]
+            w = _tokens_py(text)
             for n in (3, 5, 8):
                 for i in range(len(w) - (n - 1)):
                     ns.append(n)

@@ -492,7 +492,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs → exact-cosine verify → connected components →
     survivor pick. The embedding twin of dedup_clusters_lsh: every stage
     is linear-ish in the corpus (bucket equi-join, candidate-only
-    verification, then the same union-find / label-propagation machinery),
+    verification, then the same single-task union-find),
     and because the verifier is exact, clusters here refine the exhaustive
     dedup_embedding_cosine clustering — containment pinned in tests.
 

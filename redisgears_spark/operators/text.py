@@ -8,6 +8,8 @@ one aggregate exchange, which holds at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -21,6 +23,13 @@ from redisgears_spark.sources.keyspace import (
 
 _TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
 _TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')"
+
+
+def _tokens_py(text: str) -> list[str]:
+    """Python twin of `_TOKENS`, the engine's one token split, for the
+    kernels that tokenize inside a Python stage."""
+    return [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
+
 
 # marker words per language for the n-gram/stopword heuristic. The fixture
 # corpus is synthetic, so markers are drawn from its vocabulary — the point
@@ -341,14 +350,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bigram_kernel(batches):
-    import re
-
     import pandas as pd
 
     for pdf in batches:
         out: list[str] = []
         for text in pdf["text"]:
-            w = [x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x]
+            w = _tokens_py(text)
             out.extend(
                 f"{w[i]} {w[i + 1]}" for i in range(len(w) - 1)
             )

@@ -23,11 +23,12 @@ Design:
     per-epoch frequency PARTIALS folded associatively with a doc-id
     high-water mark per source (dedup by frontier, not by retained
     counters) — the same state algebra, O(vocab) instead of O(corpus).
-  * **Tokenization is the engine's one split.** The router's
-    `_tokens_py` mirrors `filter(split(lower(text), '\\s+'), x != '')`
-    — the same split `_shingles_py` (and every token oracle) uses — so
-    a streamed-in document contributes exactly the counts the batch
-    `_word_freq_of` scan would produce.
+  * **Tokenization is the engine's one split.** The router tokenizes
+    with `operators/text._tokens_py`, the Python twin of
+    `filter(split(lower(text), '\\s+'), x != '')` that `_shingles_py`
+    (and every token oracle) uses, so a streamed-in document
+    contributes exactly the counts the batch `_word_freq_of` scan would
+    produce.
   * **Exactness contract (pinned in tests/test_streaming_vocab.py):**
     `word_freq()` over a streamed-in document slice is row-identical to
     the batch `_word_freq_of` over the same slice — whatever the
@@ -40,7 +41,6 @@ Design:
 from __future__ import annotations
 
 import json as _json
-import re
 from typing import Any, Callable, Iterator
 
 import pandas as pd
@@ -52,23 +52,16 @@ from redisgears_spark.engine import GearsEngine, GearsError
 from redisgears_spark.streaming.stateful import _StatefulRuntime
 
 
-def _tokens_py(text: str) -> list[str]:
-    """Python twin of the engine's one token split
-    (`filter(split(lower(text), '\\s+'), x -> x != '')`) — identical to
-    the split inside operators/dedup._shingles_py."""
-    return [
-        x for x in re.split(r"\s+", text.lower(), flags=re.ASCII) if x
-    ]
-
-
 def _make_router(text_field: str, id_field: str, n_buckets: int):
-    """mapInPandas kernel: tokenize each document with _tokens_py and
-    emit one (bucket, doc_id, word-count json) row; a `del` tombstone
-    emits the removal row (no payload needed — state keys by doc_id)."""
+    """mapInPandas kernel: tokenize each document with
+    operators/text._tokens_py and emit one (bucket, doc_id, word-count
+    json) row; a `del` tombstone emits the removal row (no payload
+    needed — state keys by doc_id)."""
 
     def route(batches):
         from collections import Counter
 
+        from redisgears_spark.operators.text import _tokens_py
         from redisgears_spark.streaming.stateful import (
             _CTL_DELETE,
             _CTL_FIELD,
@@ -207,8 +200,8 @@ class StreamingWordFreqRuntime(_StatefulRuntime):
         return _make_router(self.text_field, self.id_field, self.n_buckets)
 
     def word_freq(self) -> DataFrame:
-        """The live frequency table as (word, freq, symbols) rows — the
-        exact shape operators/pipeline._word_freq_of produces, so the
+        """The live frequency table as (word, freq) rows — the exact
+        shape operators/pipeline._word_freq_of produces, so the
         BPE machinery consumes either source interchangeably. Buckets
         partition DOCUMENTS, so a word's total is the sum of its
         per-bucket partials (one word-keyed aggregate, JVM-side)."""
@@ -237,5 +230,4 @@ class StreamingWordFreqRuntime(_StatefulRuntime):
             )
             .groupBy("word")
             .agg(F.sum("freq").alias("freq"))
-            .select("word", "freq", F.split("word", "").alias("symbols"))
         )

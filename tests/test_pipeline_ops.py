@@ -155,24 +155,6 @@ def test_dedup_clusters_fixpoint_and_survivors(spark, sf_dir):
         assert survivors == [cid]
 
 
-def test_dedup_clusters_strategies_agree(spark, sf_dir, monkeypatch):
-    """The single-task union-find and the distributed label-propagation
-    paths must produce identical labelings (same fixpoint, different
-    physical plans)."""
-    from redisgears_spark.operators import dedup as D
-
-    compact = {
-        (r["doc_id"], r["cluster_id"], r["is_survivor"])
-        for r in D.dedup_clusters(spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(D, "_CC_LOCAL_EDGE_LIMIT", 0)
-    distributed = {
-        (r["doc_id"], r["cluster_id"], r["is_survivor"])
-        for r in D.dedup_clusters(spark, sf_dir).collect()
-    }
-    assert compact and compact == distributed
-
-
 def test_lsh_clusters_refine_exact_clusters(spark, sf_dir):
     """The LSH-candidate clustering must REFINE the exact clustering:
     every LSH cluster's members share one exact cluster (LSH pairs are a
@@ -284,39 +266,31 @@ def test_pack_shards_empty_corpus(spark, tmp_path):
     ]
 
 
-def test_distributed_cc_converges_on_long_chains(spark, monkeypatch):
-    """The distributed label-propagation path must converge on a 200-node
-    chain graph within the 25-round cap — only possible with the
-    pointer-jumping (path-doubling) step, since plain neighbor-min needs
-    O(diameter) = 200 rounds. Also pins the fixpoint: every node labeled
-    with the chain minimum."""
+def test_distributed_cc_converges_on_long_chains(spark):
+    """connected_components labels every node of a 200-node chain with
+    the chain minimum, whichever orientation each edge is given in: the
+    union-find reads each pair once, with no symmetric copy."""
     from redisgears_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "_CC_LOCAL_EDGE_LIMIT", 0)  # force distributed
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "a_id long, b_id long"
-    )
-    out = dedup.connected_components(pairs).collect()
-    assert len(out) == 201
-    assert all(r["cluster_id"] == 0 for r in out)
-    assert sum(r["is_survivor"] for r in out) == 1
+    for edges in (
+        [(i, i + 1) for i in range(200)],
+        [(i + 1, i) for i in range(200)],
+    ):
+        pairs = spark.createDataFrame(edges, "a_id long, b_id long")
+        out = dedup.connected_components(pairs).collect()
+        assert len(out) == 201
+        assert all(r["cluster_id"] == 0 for r in out)
+        assert sum(r["is_survivor"] for r in out) == 1
 
 
-def test_distributed_cc_raises_on_nonconvergence(spark, monkeypatch):
-    """Exhausting the iteration cap with labels still changing must raise,
-    not ship possibly-wrong clusters downstream: a 64-node chain cannot
-    converge in 1 round even with pointer jumping."""
-    import pytest
+def test_connected_components_builds_without_a_job(spark):
+    """Building connected_components runs no Spark job: no scratch write
+    of the pair list and no count to size it."""
+    from redisgears_spark.operators.dedup import connected_components
+    from tests.test_sources import _jobs_run_by
 
-    from redisgears_spark.operators import dedup
-
-    monkeypatch.setattr(dedup, "_CC_LOCAL_EDGE_LIMIT", 0)  # force distributed
-    monkeypatch.setattr(dedup, "_CC_MAX_ITERS", 1)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "a_id long, b_id long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs)
+    pairs = spark.createDataFrame([(1, 2), (3, 2)], "a_id long, b_id long")
+    assert _jobs_run_by(spark, lambda: connected_components(pairs)) == []
 
 
 def test_shuffle_pack_prefix_sum_invariant(spark, sf_dir):
@@ -513,21 +487,16 @@ def test_dedup_segments_reconstruction_invariant(spark, sf_dir):
         assert len(out[d]["clean_text"]) < len(docs[d])
 
 
-def test_bpe_train_matches_reference_implementation(
-    spark, sf_dir, monkeypatch
-):
-    """BOTH strategy paths (driver-local under the vocab limit, and the
-    DISTRIBUTED fixpoint loop forced via limit=0) must learn EXACTLY
-    the merge sequence a straightforward single-machine BPE
-    (Sennrich-style, same count-desc/lexicographic tie-break) learns —
-    an independent-implementation oracle for an iterative algorithm
-    DuckDB cannot express."""
+def test_bpe_train_matches_reference_implementation(spark, sf_dir):
+    """pipeline_bpe_train must learn EXACTLY the merge sequence a
+    straightforward single-machine BPE (Sennrich-style, same
+    count-desc/lexicographic tie-break) learns — an
+    independent-implementation oracle for an iterative algorithm."""
     from collections import Counter
 
     import pyspark.sql.functions as F
 
     from redisgears_spark.operators import QUERIES
-    from redisgears_spark.operators import pipeline as P
     from redisgears_spark.operators.pipeline import _BPE_MERGES
     from redisgears_spark.operators.text import _TOKENS
     from redisgears_spark.sources.keyspace import load_table
@@ -539,14 +508,6 @@ def test_bpe_train_matches_reference_implementation(
         .collect()
     ]
     assert len(got) == _BPE_MERGES
-    monkeypatch.setattr(P, "_BPE_LOCAL_VOCAB_LIMIT", 0)
-    distributed = [
-        (r["round"], r["left"], r["right"], r["pair_count"])
-        for r in QUERIES["pipeline_bpe_train"](spark, sf_dir)
-        .orderBy("round")
-        .collect()
-    ]
-    assert distributed == got
 
     # independent reference on the collected word-frequency dict
     wf = Counter()
@@ -1180,31 +1141,6 @@ def test_bpe_extend_empty_increment_is_training_continuation(
     ]
 
 
-def test_bpe_extend_distributed_strategy_equality(
-    spark, sf_dir, monkeypatch
-):
-    """The web-scale path (vocab limit forced to 0: distributed base
-    training, targeted per-pair replay counts, distributed
-    continuation) returns exactly the local path's output."""
-    from redisgears_spark.operators import QUERIES
-    from redisgears_spark.operators import pipeline as P
-
-    local = [
-        tuple(r)
-        for r in QUERIES["pipeline_bpe_extend"](spark, sf_dir)
-        .orderBy("round")
-        .collect()
-    ]
-    monkeypatch.setattr(P, "_BPE_LOCAL_VOCAB_LIMIT", 0)
-    dist = [
-        tuple(r)
-        for r in QUERIES["pipeline_bpe_extend"](spark, sf_dir)
-        .orderBy("round")
-        .collect()
-    ]
-    assert dist == local
-
-
 def _random_docs_dir(tmp_path, seed=11):
     """Synthetic documents.parquet: base sources draw from one word
     pool; the increment source ('newsrc') has a partially DISJOINT
@@ -1363,31 +1299,3 @@ def test_nearest_subcentroid_matches_row_loop():
     got = _nearest_subcentroid(X, C)
     assert got.tolist() == [nearest(x) for x in X]
     assert got[-2:].tolist() == [3, 3]
-
-
-def test_merge_symbols_kernel_matches_apply_merge():
-    """The per-round BPE merge kernel, bound to its pair with partial, on
-    a plain pandas frame with no Spark job: each word's symbols are
-    _apply_merge's, and word and freq pass through."""
-    from functools import partial
-
-    import numpy as np
-    import pandas as pd
-
-    from redisgears_spark.operators.pipeline import _apply_merge, _merge_symbols
-
-    pdf = pd.DataFrame(
-        {
-            "word": ["abab", "aab"],
-            "freq": [2, 5],
-            "symbols": [np.array(list("abab"), dtype=object), np.array(list("aab"), dtype=object)],
-        }
-    )
-    kernel = partial(_merge_symbols, left="a", right="b")
-    (out,) = list(kernel(iter([pdf])))
-    assert out["word"].tolist() == ["abab", "aab"]
-    assert out["freq"].tolist() == [2, 5]
-    assert out["symbols"].tolist() == [
-        _apply_merge(list(s), "a", "b") for s in pdf["symbols"]
-    ]
-    assert out["symbols"].tolist() == [["ab", "ab"], ["a", "ab"]]

@@ -167,7 +167,7 @@ def test_random_corpus_counter_pin(spark, tmp_path):
     from collections import Counter
 
     from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-    from redisgears_spark.streaming.vocab import _tokens_py
+    from redisgears_spark.operators.text import _tokens_py
 
     rng = random.Random(0xB0CA)
     vocab = [f"t{i}" for i in range(25)]
@@ -231,7 +231,7 @@ def test_degenerate_documents_word_freq(spark, tmp_path):
     from collections import Counter
 
     from redisgears_spark.streaming.triggers import STREAM_SCHEMA
-    from redisgears_spark.streaming.vocab import _tokens_py
+    from redisgears_spark.operators.text import _tokens_py
 
     docs = {0: "", 1: "   ", 2: "a b a", 3: "b"}
     spool = str(tmp_path / "spool")
